@@ -890,13 +890,18 @@ def connected_components(
     needed = graph diameter; dedup clusters are near-cliques (diameter
     ~1-3), so this converges in 2-4 rounds.
 
+    One round shape: the neighbor-min join (edges ⋈ labels, min per
+    destination), then labels ⟕ neighbor-min, then ``least`` of the two.
+    The local path and the ``checkpoint_table`` path run the same round
+    and differ only in the checkpoint medium.
+
     Scale design (100 TB): per round, one shuffle of (node, label) pairs
     on the node key — the text never moves. ``localCheckpoint`` after
     each round cuts the lineage so the plan stays O(1) deep instead of
     growing per iteration.  At cluster scale pass ``checkpoint_table``:
     edges and per-round labels are then written to BUCKETED tables keyed
-    on the join key (``n_buckets`` buckets, labels ping-ponging between
-    two tables), so every round's label join is a zero-Exchange
+    on the join key (``n_buckets`` buckets, labels rotating through
+    three tables), so every round's label join is a zero-Exchange
     sort-merge join over co-bucketed scans — one clustering paid at
     write, reused every round (plan pinned in tests/test_plans.py).
     For pathological diameters pass ``jump=True``: each round ALSO
@@ -945,26 +950,6 @@ def connected_components(
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    # r14 (guide §2.4, §7 "driver round-trips"), LOCAL path only:
-    # SELF-LOOPS fold the node's own label into the neighbor-min
-    # aggregate, so each round is ONE join + ONE aggregate —
-    # min(component) over neighbors ∪ {self} is exactly the old
-    # least(own, coalesce(neighbor_min, own)), and the per-round
-    # labels ⟕ neighbor_min join (plus its broadcast build job)
-    # disappears.  One self-loop per NODE (from the distinct node set,
-    # not per edge instance), unioned onto the already-checkpointed
-    # mirror, so the join input grows by |nodes| rows — the same rows
-    # the removed join carried.  Label sequences are identical integers
-    # round-for-round, so the convergence-sum path is untouched.
-    #
-    # The BUCKETED (cluster) path deliberately keeps the two-join round:
-    # a union of the edges table with self-loops has UnknownPartitioning
-    # (UnionExec drops the bucketed layout), so self-loops there would
-    # reintroduce a per-round Exchange on the big edge side — the exact
-    # thing the co-bucketed tables exist to avoid — and the removed
-    # labels ⟕ neighbor_min join is already exchange-free against the
-    # bucketed labels table.  Self-loops win where jobs are the cost
-    # (local mode, tiny rounds), not where the edge shuffle is.
     if checkpoint_table:
         from sanctum_spark.operators.ckpt import (
             PingPongCheckpoint,
@@ -983,10 +968,8 @@ def connected_components(
         # path no longer falls back to an executor-memory
         # localCheckpoint (r13 ADVICE item 4).
         _jump_ckpt = _labels_ckpt
-        self_loops = False
     else:
         sym = sym.localCheckpoint(eager=True)
-        self_loops = True
 
         def _labels_ckpt(df, eager=True):
             # Per-ROUND label checkpoints are LAZY (r13, guide §5): every
@@ -998,7 +981,10 @@ def connected_components(
             # Labels are exact integer propagation, so laziness cannot
             # change values (paired A/B diff 0/0; q161-shaped graphs
             # median ratio 0.91, q99 ~1.0 warm — the win is driver
-            # round-trips, which is also the scale argument).
+            # round-trips, which is also the scale argument).  The INIT
+            # checkpoint stays eager: round 1 references it twice before
+            # any action has materialized it, and a lazy cut would let
+            # the two join stages race to recompute the distinct.
             return df.localCheckpoint(eager=eager)
 
         def _jump_ckpt(df):
@@ -1007,51 +993,27 @@ def connected_components(
             # cut would let the two join stages race to recompute it.
             return df.localCheckpoint(eager=True)
 
-    if self_loops:
-        # `nodes` is eager-checkpointed because it feeds BOTH the init
-        # labels and the self-loop side consumed every round; the init
-        # labels are a cheap projection over that cut (referenced once,
-        # in round 1) and need no checkpoint of their own.
-        nodes = (
-            sym.select(F.col("src").alias("id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        sym = sym.unionAll(
-            nodes.select(F.col("id").alias("src"), F.col("id").alias("dst"))
-        )
-        labels = nodes.withColumn("component", F.col("id"))
-    else:
-        labels = _labels_ckpt(
-            sym.select(F.col("src").alias("id"))
-            .distinct()
-            .withColumn("component", F.col("id"))
-        )
+    labels = _labels_ckpt(
+        sym.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("component", F.col("id"))
+    )
     prev_sum = None  # first round always runs; saves one pre-loop job
     converged = False
     for _ in range(max_iter):
-        if self_loops:
-            propagated = (
-                sym.join(labels, sym.src == labels.id)
-                .groupBy("dst")
-                .agg(F.min("component").alias("component"))
-                .select(F.col("dst").alias("id"), "component")
-            )
-        else:
-            neighbor_min = (
-                sym.join(labels, sym.src == labels.id)
-                .groupBy("dst")
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            propagated = labels.join(
-                neighbor_min, labels.id == neighbor_min.dst, "left"
-            ).select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_min"), F.col("component")),
-                ).alias("component"),
-            )
+        neighbor_min = (
+            sym.join(labels, sym.src == labels.id)
+            .groupBy("dst")
+            .agg(F.min("component").alias("nbr_min"))
+        )
+        propagated = labels.join(
+            neighbor_min, labels.id == neighbor_min.dst, "left"
+        ).select(
+            "id",
+            F.least(
+                F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
+            ).alias("component"),
+        )
         if jump:
             # pointer jumping: component[n] <- component[component[n]] —
             # labels are node ids, so the parent lookup is a self-join.

@@ -12,6 +12,11 @@ Three execution tiers:
 - ``apply_spell`` — distributed path: the same spell applied to every row
   of a DataFrame via Arrow-batched ``mapInPandas`` (the loop runs per-row
   inside the task, so a 100 TB events table is one pass, not 1000 jobs).
+  A row-form spell gets one event dict per call; a ``vectorized`` spell
+  gets each whole pandas batch (cast mode only).  ``loop_spell``,
+  ``apply_spell_with_emits`` (captured stdout) and ``apply_spell_safely``
+  (dead-letter channel) share its one runner: topic filter, lifecycle
+  hooks once per task, rows → pandas.
 - ``apply_expression_spell`` — zero-Python tier for spells expressible as
   SQL expressions (:class:`ExpressionSpell`): the cast compiles to a
   Catalyst filter+project inside WholeStageCodegen, removing the Arrow

@@ -114,6 +114,87 @@ def _rows_to_pdf(rows: list[dict], names: list[str]) -> pd.DataFrame:
     return pd.DataFrame({n: [r.get(n) for r in rows] for n in names})
 
 
+def _check_mode(mode: str) -> None:
+    if mode not in ("cast", "loop"):
+        raise ValueError(f"mode must be 'cast' or 'loop', got {mode!r}")
+
+
+def _row_spell(spell: Spell | object, caller: str) -> Spell:
+    """Validate ``spell`` for a runner that feeds it one event dict at a
+    time.  A vectorized spell casts whole pandas batches; handing it row
+    dicts would run it on the wrong type far from the cause."""
+    spell = validate_spell(spell)
+    if spell.vectorized:
+        raise ValueError(
+            f"{caller} needs a row-form spell (cast(event: dict) -> dict | "
+            f"None, one call per event); {spell.name!r} is vectorized "
+            "(cast(pdf) over a whole pandas batch)"
+        )
+    return spell
+
+
+def _feedback(cast, event: dict, max_casts: int) -> tuple[dict, int]:
+    """The bounded feedback loop (reference O7) for one event: cast until
+    None or ``max_casts``.  Returns the last non-None event and the number
+    of casts made, the terminating None cast included."""
+    n = 0
+    while n < max_casts:
+        out = cast(event)
+        n += 1
+        if out is None:
+            break
+        event = out
+    return event, n
+
+
+def _run_spell(
+    df: DataFrame,
+    spell: Spell,
+    output_schema: StructType,
+    topic_col: str | None,
+    step,
+    extra_fields: tuple = (),
+    batched: bool = False,
+) -> DataFrame:
+    """The one ``mapInPandas`` runner behind every distributed spell call:
+    topic filter → ``prepare(config)`` once per task → ``step`` per event
+    (``None`` drops it) → rows → pandas → ``unprepare``.
+
+    ``extra_fields`` are appended to ``output_schema`` for side channels
+    (``_emits``, ``_error``).  ``batched=True`` hands ``step`` each whole
+    pandas batch instead (the vectorized tier); its return is the output
+    batch, ``None`` dropping it."""
+    if topic_col is not None:
+        df = df.filter(topic_filter(spell, topic_col))
+    prepare = spell.prepare
+    unprepare = spell.unprepare
+    config = dict(spell.config)
+    schema = StructType(list(output_schema.fields) + list(extra_fields))
+    names = [f.name for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if prepare is not None:
+            prepare(config)
+        try:
+            for pdf in batches:
+                if batched:
+                    out_pdf = step(pdf)
+                    if out_pdf is not None:
+                        yield out_pdf
+                    continue
+                rows_out: list[dict] = []
+                for row in pdf.to_dict("records"):
+                    out = step(row)
+                    if out is not None:
+                        rows_out.append(out)
+                yield _rows_to_pdf(rows_out, names)
+        finally:
+            if unprepare is not None:
+                unprepare()
+
+    return df.mapInPandas(run, schema=schema)
+
+
 def apply_spell(
     df: DataFrame,
     spell: Spell | object,
@@ -132,6 +213,7 @@ def apply_spell(
       this is a single pass over the data instead of up-to-1000 chained
       jobs; it is correct because each event's feedback chain is
       independent (the reference processes exactly one seed per run).
+      Row-form spells only: a vectorized spell raises ``ValueError``.
 
     ``prepare``/``unprepare`` lifecycle hooks run once per partition task
     around the Arrow batch iterator (the Spark-idiomatic reading of the
@@ -156,54 +238,34 @@ def apply_spell(
                 "zero-Python feedback loop"
             )
         return apply_expression_spell(df, spell, topic_col=topic_col)
-    if not isinstance(spell, Spell):
-        spell = validate_spell(spell)
-    if topic_col is not None:
-        df = df.filter(topic_filter(spell, topic_col))
-
+    _check_mode(mode)
+    spell = validate_spell(spell)
     cast = spell.cast
-    prepare = spell.prepare
-    unprepare = spell.unprepare
-    config = dict(spell.config)
-    names = [f.name for f in output_schema.fields]
-    loop_mode = mode == "loop"
-    vectorized = spell.vectorized
+    if mode == "cast" and spell.vectorized:
+        names = [f.name for f in output_schema.fields]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if prepare is not None:
-            prepare(config)
-        try:
-            for pdf in batches:
-                if vectorized:
-                    # columnar fast path: the spell maps a whole Arrow
-                    # batch; None == drop the entire batch
-                    out_pdf = cast(pdf)
-                    if out_pdf is not None:
-                        yield out_pdf[names] if list(out_pdf.columns) != names else out_pdf
-                    continue
-                rows_out: list[dict] = []
-                for row in pdf.to_dict("records"):
-                    if loop_mode:
-                        event, n = row, 0
-                        while n < max_casts:
-                            out = cast(event)
-                            n += 1
-                            if out is None:
-                                break
-                            event = out
-                        event = dict(event)
-                        event["n_casts"] = n
-                        rows_out.append(event)
-                    else:
-                        out = cast(row)
-                        if out is not None:
-                            rows_out.append(out)
-                yield _rows_to_pdf(rows_out, names)
-        finally:
-            if unprepare is not None:
-                unprepare()
+        def cast_batch(pdf: pd.DataFrame) -> pd.DataFrame | None:
+            # columnar fast path: the spell maps a whole Arrow batch;
+            # None == drop the entire batch
+            out_pdf = cast(pdf)
+            if out_pdf is not None and list(out_pdf.columns) != names:
+                out_pdf = out_pdf[names]
+            return out_pdf
 
-    return df.mapInPandas(run, schema=output_schema)
+        return _run_spell(
+            df, spell, output_schema, topic_col, cast_batch, batched=True
+        )
+    spell = _row_spell(spell, f"apply_spell(mode={mode!r})")
+    if mode == "cast":
+        return _run_spell(df, spell, output_schema, topic_col, cast)
+
+    def loop(event: dict) -> dict:
+        event, n = _feedback(cast, event, max_casts)
+        event = dict(event)
+        event["n_casts"] = n
+        return event
+
+    return _run_spell(df, spell, output_schema, topic_col, loop)
 
 
 def apply_expression_spell(
@@ -395,48 +457,34 @@ def apply_spell_with_emits(
     tests compare that channel).  Each event's printed lines are captured
     into an ``_emits`` array column instead of vanishing into worker
     stdout.  Opt-in: the per-event stdout redirect costs more than the
-    plain path."""
+    plain path.  Row-form spells only."""
     import pyspark.sql.types as T
 
-    if not isinstance(spell, Spell):
-        spell = validate_spell(spell)
-    if topic_col is not None:
-        df = df.filter(topic_filter(spell, topic_col))
-
+    _check_mode(mode)
+    spell = _row_spell(spell, "apply_spell_with_emits")
     cast = spell.cast
-    names = [f.name for f in output_schema.fields]
-    full_schema = T.StructType(
-        list(output_schema.fields)
-        + [T.StructField("_emits", T.ArrayType(T.StringType()))]
-    )
     loop_mode = mode == "loop"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows_out: list[dict] = []
-            for row in pdf.to_dict("records"):
-                buf = _io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    if loop_mode:
-                        event, n = row, 0
-                        while n < max_casts:
-                            out = cast(event)
-                            n += 1
-                            if out is None:
-                                break
-                            event = out
-                        out = dict(event)
-                        out["n_casts"] = n
-                    else:
-                        out = cast(row)
-                if out is not None:
-                    out = dict(out)
-                    text = buf.getvalue()
-                    out["_emits"] = text.split("\n")[:-1] if text else []
-                    rows_out.append(out)
-            yield _rows_to_pdf(rows_out, names + ["_emits"])
+    def step(event: dict) -> dict | None:
+        buf = _io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            if loop_mode:
+                event, n = _feedback(cast, event, max_casts)
+                out = dict(event)
+                out["n_casts"] = n
+            else:
+                out = cast(event)
+        if out is None:
+            return None
+        out = dict(out)
+        text = buf.getvalue()
+        out["_emits"] = text.split("\n")[:-1] if text else []
+        return out
 
-    return df.mapInPandas(run, schema=full_schema)
+    return _run_spell(
+        df, spell, output_schema, topic_col, step,
+        (T.StructField("_emits", T.ArrayType(T.StringType())),),
+    )
 
 
 def apply_spell_safely(
@@ -453,44 +501,34 @@ def apply_spell_safely(
 
     Output = ``output_schema`` columns plus ``_error`` (null for good
     rows; ``ExceptionName: message`` for failures, with the event id in
-    ``_error_id``).  Use ``split_errors`` to separate channels.
+    ``_error_id``).  Use ``split_errors`` to separate channels.  Row-form
+    spells only.
     """
     import pyspark.sql.types as T
 
-    if not isinstance(spell, Spell):
-        spell = validate_spell(spell)
-    if topic_col is not None:
-        df = df.filter(topic_filter(spell, topic_col))
-
+    spell = _row_spell(spell, "apply_spell_safely")
     cast = spell.cast
-    names = [f.name for f in output_schema.fields]
-    full_schema = T.StructType(
-        list(output_schema.fields)
-        + [T.StructField("_error", T.StringType()), T.StructField("_error_id", T.LongType())]
+
+    def step(event: dict) -> dict | None:
+        try:
+            out = cast(dict(event))
+        except Exception as exc:  # protected call: event → dead letter
+            return {
+                "_error": f"{type(exc).__name__}: {exc}",
+                "_error_id": event.get(id_col),
+            }
+        if out is None:
+            return None
+        out = dict(out)
+        out["_error"] = None
+        out["_error_id"] = None
+        return out
+
+    return _run_spell(
+        df, spell, output_schema, topic_col, step,
+        (T.StructField("_error", T.StringType()),
+         T.StructField("_error_id", T.LongType())),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows_out: list[dict] = []
-            for row in pdf.to_dict("records"):
-                try:
-                    out = cast(dict(row))
-                except Exception as exc:  # protected call: event → dead letter
-                    rows_out.append(
-                        {
-                            "_error": f"{type(exc).__name__}: {exc}",
-                            "_error_id": row.get(id_col),
-                        }
-                    )
-                    continue
-                if out is not None:
-                    out = dict(out)
-                    out["_error"] = None
-                    out["_error_id"] = None
-                    rows_out.append(out)
-            yield _rows_to_pdf(rows_out, names + ["_error", "_error_id"])
-
-    return df.mapInPandas(run, schema=full_schema)
 
 
 def split_errors(df: DataFrame):

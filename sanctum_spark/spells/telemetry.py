@@ -10,10 +10,10 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import SparkSession
 
-from sanctum_spark.spells.registry import Spell, validate_spell, topic_filter
+from sanctum_spark.spells.registry import Spell
+from sanctum_spark.spells.runtime import _row_spell
 
 
 @dataclass
@@ -39,10 +39,11 @@ def instrumented_spell(spark: SparkSession, spell: Spell | object) -> tuple[Spel
     """Wrap a spell's cast with accumulator-backed counters and timing.
 
     The wrapped spell is a drop-in for apply_spell/loop_spell; metrics
-    accumulate across every partition that runs it.
+    accumulate across every partition that runs it.  The counters are per
+    event, so only row-form spells are accepted: a vectorized spell raises
+    ``ValueError``.
     """
-    if not isinstance(spell, Spell):
-        spell = validate_spell(spell)
+    spell = _row_spell(spell, "instrumented_spell")
     sc = spark.sparkContext
     metrics = SpellMetrics(
         casts=sc.accumulator(0),
@@ -74,6 +75,5 @@ def instrumented_spell(spark: SparkSession, spell: Spell | object) -> tuple[Spel
         unprepare=spell.unprepare,
         source=spell.source,
         config=spell.config,
-        vectorized=False,
     )
     return wrapped, metrics

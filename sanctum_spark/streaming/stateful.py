@@ -13,14 +13,10 @@ reference declares but never built.  Range queries over the state
 (README.md:110) are served by emitting state snapshots and filtering —
 see ``range_query_state`` in tests.
 
-Backend note: Spark 4's newer ``transformWithStateInPandas`` (typed
-ValueState/MapState/timers over RocksDB) is the natural successor API.
-Its Python runner needs ``google.protobuf``, broken in this container
-(no network to fix), so ``typed_state_backend_available()`` probes at
-RUNTIME each round and ``apply_stateful_spell(backend="auto")`` upgrades
-automatically the moment the environment heals; until then the stable
-``applyInPandasWithState`` backend carries the same StatefulSpell surface
-— callers never see the swap.
+One backend: ``applyInPandasWithState`` with no timeout.  Spark 4's
+``transformWithStateInPandas`` (typed ValueState/MapState/timers) is the
+successor API; its Python runner needs ``google.protobuf``, which this
+package does not depend on, so it is not wired in.
 """
 
 from __future__ import annotations
@@ -56,45 +52,17 @@ class StatefulSpell:
     order_by: list[str] | None = None
 
 
-def typed_state_backend_available() -> tuple[bool, str]:
-    """Runtime probe for the ``transformWithStateInPandas`` typed-state
-    backend.  The Python runner imports ``google.protobuf`` at worker
-    init; this container ships Spark 4 with the API present but protobuf
-    missing, so the probe re-checks every session and the engine
-    auto-upgrades when the environment heals."""
-    try:
-        import google.protobuf  # noqa: F401  (what the tWS runner needs)
-    except ImportError as e:
-        return False, f"google.protobuf unavailable: {e}"
-    try:
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-    except ImportError as e:
-        return False, f"transformWithState API unavailable: {e}"
-    return True, "ok"
-
-
 def apply_stateful_spell(
     events: DataFrame,
     spell: StatefulSpell,
     key_cols: list[str],
-    timeout: str = "NoTimeout",
-    backend: str = "auto",
 ) -> DataFrame:
     """Run a stateful spell per key over a (streaming) DataFrame.
 
     The state dict is persisted as a tuple matching ``state_schema`` field
-    order; emitted rows follow ``output_schema``.
-
-    ``backend``: 'auto' uses the typed transformWithStateInPandas backend
-    when the runtime probe passes, else applyInPandasWithState; 'typed' /
-    'applyInPandas' force one.
+    order; emitted rows follow ``output_schema``.  State never times out:
+    a key's state lives until the query's checkpoint is discarded.
     """
-    if backend not in ("auto", "typed", "applyInPandas"):
-        raise ValueError(f"unknown backend {backend!r}")
-    if backend == "typed" or (backend == "auto" and typed_state_backend_available()[0]):
-        return _apply_typed_state(events, spell, key_cols)
     state_fields = [f.name for f in spell.state_schema.fields]
     out_fields = [f.name for f in spell.output_schema.fields]
     init, update, emit = spell.init, spell.update, spell.emit
@@ -127,59 +95,7 @@ def apply_stateful_spell(
         outputStructType=spell.output_schema,
         stateStructType=spell.state_schema,
         outputMode="update",
-        timeoutConf=getattr(GroupStateTimeout, timeout),
-    )
-
-
-def _apply_typed_state(
-    events: DataFrame, spell: StatefulSpell, key_cols: list[str]
-) -> DataFrame:
-    """transformWithStateInPandas backend: same StatefulSpell semantics
-    over a typed ValueState (RocksDB-backed on a cluster, TTL/timers
-    available for future spells). Only reachable when
-    ``typed_state_backend_available()`` passes."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    state_fields = [f.name for f in spell.state_schema.fields]
-    out_fields = [f.name for f in spell.output_schema.fields]
-    init, update, emit = spell.init, spell.update, spell.emit
-    state_schema = spell.state_schema
-    order_by = spell.order_by
-
-    class _SpellProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("spell_state", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            st = (
-                dict(zip(state_fields, self._state.get()))
-                if self._state.exists()
-                else init()
-            )
-            if order_by:
-                chunks = list(rows)
-                if chunks:
-                    whole = pd.concat(chunks, ignore_index=True)
-                    st = update(st, whole.sort_values(order_by, ignore_index=True))
-            else:
-                for pdf in rows:
-                    st = update(st, pdf)
-            self._state.update(tuple(st[f] for f in state_fields))
-            row = emit(key, st)
-            if row is not None:
-                yield pd.DataFrame({f: [row.get(f)] for f in out_fields})
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_SpellProcessor(),
-        outputStructType=spell.output_schema,
-        outputMode="Update",
-        timeMode="None",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

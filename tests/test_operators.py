@@ -444,13 +444,30 @@ def test_approx_percentile_accuracy(spark, sf_dir):
         assert rel < 0.01, r
 
 
+def _cc_both_paths(spark, edges, **kw) -> dict:
+    """Labels from the local (localCheckpoint) path, asserted identical to
+    the checkpoint_table (bucketed-table) path on the same graph: the two
+    run one round shape and differ only in the checkpoint medium."""
+    local = {r["id"]: r["component"] for r in D.connected_components(edges, **kw).collect()}
+    prefix = "cc_paths"
+    try:
+        tabled = D.connected_components(
+            edges, checkpoint_table=prefix, n_buckets=2, **kw
+        )
+        assert {r["id"]: r["component"] for r in tabled.collect()} == local
+    finally:
+        for t in ("edges", "labels_a", "labels_b", "labels_c"):
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+    return local
+
+
 def test_connected_components_transitive(spark):
     # path A-B-C plus isolated pair D-E: transitivity must collapse the
     # chain into one component labeled by its min id.
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (10, 11)], ["id_a", "id_b"]
     )
-    comp = {r["id"]: r["component"] for r in D.connected_components(edges).collect()}
+    comp = _cc_both_paths(spark, edges)
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
@@ -460,8 +477,8 @@ def test_connected_components_long_chain(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], ["id_a", "id_b"]
     )
-    comp = D.connected_components(edges).collect()
-    assert {r["component"] for r in comp} == {0}
+    comp = _cc_both_paths(spark, edges)
+    assert set(comp.values()) == {0}
     assert len(comp) == 10
 
 
@@ -527,8 +544,8 @@ def test_connected_components_jump_beats_diameter(spark):
     )
     with pytest.raises(RuntimeError, match="fixpoint"):
         D.connected_components(edges, max_iter=10)
-    comp = D.connected_components(edges, max_iter=10, jump=True).collect()
-    assert {r["component"] for r in comp} == {0}
+    comp = _cc_both_paths(spark, edges, max_iter=10, jump=True)
+    assert set(comp.values()) == {0}
     assert len(comp) == 60
 
 

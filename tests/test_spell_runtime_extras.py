@@ -295,3 +295,95 @@ def test_loop_expression_state_field_named_like_function(spark):
     # 2.0 -> 1.0 -> 0.5 (fails where) => 2 successful casts + the nil cast
     assert rows[0]["round"] == 0.5
     assert rows[0]["n_casts"] == 3
+
+
+def _make_vectorized_cast():
+    def cast(pdf):
+        return pdf.assign(doubled=pdf["value"] * 2)[["event_id", "doubled"]]
+
+    return cast
+
+
+def _tiny_events(spark):
+    return spark.createDataFrame(
+        [(1, 10.0), (2, 20.0)], "event_id long, value double"
+    )
+
+
+def test_apply_spell_loop_rejects_vectorized_spell(spark):
+    """A vectorized spell casts whole batches, so it has no per-event
+    feedback chain: loop mode must refuse it instead of running one batch
+    cast and emitting no n_casts."""
+    import pytest
+
+    spell = Spell(name="vec", cast=_make_vectorized_cast(), vectorized=True)
+    with pytest.raises(ValueError, match="row-form"):
+        apply_spell(_tiny_events(spark), spell, OUT_SCHEMA, mode="loop")
+
+
+def test_apply_spell_rejects_unknown_mode(spark):
+    import pytest
+
+    spell = Spell(name="id", cast=lambda e: e)
+    with pytest.raises(ValueError, match="'cast' or 'loop'"):
+        apply_spell(_tiny_events(spark), spell, OUT_SCHEMA, mode="loops")
+
+
+def test_row_runners_reject_vectorized_spell(spark):
+    """The emits and dead-letter runners feed one event dict per call; a
+    vectorized spell handed to them must fail at the call, not cast row
+    dicts as if they were batches."""
+    import pytest
+
+    from sanctum_spark.spells.runtime import apply_spell_with_emits
+
+    spell = Spell(name="vec", cast=_make_vectorized_cast(), vectorized=True)
+    for runner in (apply_spell_with_emits, apply_spell_safely):
+        with pytest.raises(ValueError, match="row-form"):
+            runner(_tiny_events(spark), spell, OUT_SCHEMA)
+
+
+def test_instrumented_spell_rejects_vectorized_spell(spark):
+    """Telemetry counts per event; wrapping a vectorized spell would hand
+    it row dicts through apply_spell — refuse it, naming the row form."""
+    import pytest
+
+    spell = Spell(name="vec", cast=_make_vectorized_cast(), vectorized=True)
+    with pytest.raises(ValueError, match="row-form"):
+        instrumented_spell(spark, spell)
+
+
+def test_lifecycle_hooks_run_in_every_row_runner(spark):
+    """prepare(config) runs once per task before the first cast in the
+    emits and dead-letter runners too, not only in apply_spell: a cast
+    that reads state set by prepare must see it (and unprepare clears
+    it after the task)."""
+    from sanctum_spark.spells.runtime import apply_spell_with_emits
+
+    def make_spell():
+        state: dict = {}
+
+        def prepare(config):
+            state["factor"] = config["factor"]
+
+        def unprepare():
+            state.clear()
+
+        def cast(event):
+            print("cast")
+            return {"event_id": event["event_id"],
+                    "doubled": event["value"] * state["factor"]}
+
+        return Spell(name="scaled", cast=cast, prepare=prepare,
+                     unprepare=unprepare, config={"factor": 3})
+
+    ev = _tiny_events(spark)
+    want = {1: 30.0, 2: 60.0}
+
+    good, bad = split_errors(apply_spell_safely(ev, make_spell(), OUT_SCHEMA))
+    assert bad.count() == 0
+    assert {r["event_id"]: r["doubled"] for r in good.collect()} == want
+
+    rows = apply_spell_with_emits(ev, make_spell(), OUT_SCHEMA).collect()
+    assert {r["event_id"]: r["doubled"] for r in rows} == want
+    assert all(r["_emits"] == ["cast"] for r in rows)

@@ -164,35 +164,6 @@ def test_session_window_matches_batch_sessionize(spark, sf_dir, staged):
     assert got == want
 
 
-def test_typed_state_probe_and_backend_selection(spark, sf_dir, staged, tmp_path):
-    """The typed-state probe must answer deterministically, and whichever
-    backend 'auto' picks must produce correct per-key state (VERDICT r1 #8:
-    re-probe every round so the engine auto-upgrades when the env heals).
-
-    In this container the probe is expected to fail on google.protobuf;
-    when it starts passing, this test exercises the typed
-    transformWithStateInPandas path end-to-end automatically."""
-    ok, reason = ST.typed_state_backend_available()
-    assert isinstance(ok, bool) and isinstance(reason, str) and reason
-    backend = "typed" if ok else "applyInPandas"
-
-    stream = SRC.events_file_stream(spark, staged).select("user_id", "value")
-    out = ST.apply_stateful_spell(
-        stream, ST.kv_store_spell(), ["user_id"], backend=backend
-    )
-    name = f"probe_{uuid.uuid4().hex[:8]}"
-    _drain(out, name, mode="update", checkpoint=str(tmp_path / "ckpt_probe"))
-    final = (
-        spark.table(name).groupBy("user_id").agg(F.max("n").alias("n")).collect()
-    )
-    ev = load_table(spark, sf_dir, "events")
-    want = {
-        r["user_id"]: r["n"]
-        for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert {r["user_id"]: r["n"] for r in final} == want
-
-
 def test_stateful_counter_spell(spark, sf_dir, staged, tmp_path):
     """Per-key durable state across micro-batches: the final emitted state
     per (user_id, event_type) equals the batch groupBy."""
@@ -250,16 +221,24 @@ def test_topic_demux(spark, sf_dir, staged):
 
 def test_kv_store_range_query(spark, sf_dir, staged, tmp_path):
     """Reference roadmap (README.md:110): range queries over durable spell
-    state — 'SELECT * FROM state WHERE v > 10 AND v < 20'."""
+    state — 'SELECT * FROM state WHERE v > 10 AND v < 20'.  The final
+    per-key state must also count every user's events exactly as the
+    batch groupBy does, across all micro-batches."""
     stream = SRC.events_file_stream(spark, staged).select("user_id", "value")
     out = ST.apply_stateful_spell(stream, ST.kv_store_spell(), ["user_id"])
     name = f"kv_{uuid.uuid4().hex[:8]}"
     _drain(out, name, mode="update", checkpoint=str(tmp_path / "ckpt_kv"))
     snapshot = spark.table(name)
+    ev = load_table(spark, sf_dir, "events")
+    final = snapshot.groupBy("user_id").agg(F.max("n").alias("n")).collect()
+    assert {r["user_id"]: r["n"] for r in final} == {
+        r["user_id"]: r["n"]
+        for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+
     ranged = ST.range_query_state(snapshot, "v_avg > 45 AND v_avg < 55")
     got = {r["user_id"]: r["n"] for r in ranged.collect()}
 
-    ev = load_table(spark, sf_dir, "events")
     want = {
         r["user_id"]: r["n"]
         for r in ev.groupBy("user_id")
