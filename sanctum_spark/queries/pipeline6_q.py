@@ -118,18 +118,27 @@ def q144(spark: SparkSession, sf_dir: str) -> DataFrame:
         "absolute deviation), then the count of values whose robust "
         "z-score |v-med|/(1.4826*MAD) exceeds 3 — the heavy-tail-safe "
         "version of the 3-sigma rule (one pathological value moves a "
-        "mean/stddev gate, not this one). Scale shape: two exact-"
-        "percentile aggregations at event-type grain with the (tiny) "
-        "per-type medians broadcast back between passes; the events "
-        "table is scanned twice but never re-shuffled wider than "
-        "(event_type, value). Exact percentiles match DuckDB's "
+        "mean/stddev gate, not this one). Rows with a NULL event_type "
+        "are dropped, as the oracle's JOIN USING drops them. Scale shape: "
+        "one scan and one (event_type, value) shuffle; both exact "
+        "percentiles are windows over that event_type partitioning and "
+        "the final groupBy reuses it, with no join. Each event_type is "
+        "one window partition, so a single type's values must fit one "
+        "task. Exact percentiles match DuckDB's "
         "quantile_cont interpolation; at 100 TB the drop-in is "
         "approx_percentile with the same downstream algebra (q87 is the "
         "sketch-accuracy harness for that swap)."
     ),
 )
 def q145(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+    # NULL event_type rows are dropped: the oracle's JOIN USING (and the
+    # pre-r14 agg+join form) never match a NULL key, but a window keeps
+    # the NULL partition as a group of its own.
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .select("event_type", "value")
+        .filter(F.col("event_type").isNotNull())
+    )
     # r14 (guide 2.4): both exact percentiles as window aggregates over
     # the SAME event_type partitioning, final groupBy reuses it — ONE
     # (event_type, value) exchange and ONE scan replace three scans, two
@@ -137,6 +146,10 @@ def q145(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old agg+join-back form. Same F.percentile over the same per-group
     # multiset, so values are bit-identical; per-group buffering is the
     # same as the percentile agg's. Paired A/B 0.399; oracle PASS.
+    # Skew assumption: each event_type is ONE window partition, so the
+    # percentile buffers of the largest type sit in one task. Fine for a
+    # low-cardinality type column with no dominant type; a hot type at
+    # 100 TB needs approx_percentile (bounded sketch) instead.
     wt = W.partitionBy("event_type")
     with_med = ev.withColumn("med", F.percentile("value", F.lit(0.5)).over(wt))
     with_mad = with_med.withColumn(

@@ -425,9 +425,12 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pipeline runs between pair generation and keeper selection. "
         "At 100 TB the edge input is q74's banded MinHash pairs (the CC "
         "operator is edge-source-agnostic; exact Jaccard is the "
-        "oracle-able validation source used here). Labels only decrease "
-        "so SUM(label) is the convergence metric; "
-        "localCheckpoint per round keeps the plan O(1) deep. Oracle is a "
+        "oracle-able validation source used here). An edge list that "
+        "fits the broadcast threshold (threshold/16 B pairs; -1 turns "
+        "this off) is collected once and labelled exactly on the driver, "
+        "holding at most that many pairs; a larger one runs rounds, where "
+        "labels only decrease so SUM(label) is the convergence metric and "
+        "a localCheckpoint per round keeps the plan O(1) deep. Oracle is a "
         "DuckDB recursive CTE computing the same min-reachable-id fixpoint."
     ),
 )

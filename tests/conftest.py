@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -24,3 +25,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@contextlib.contextmanager
+def broadcast_threshold(spark, value: str):
+    """Both broadcast-join thresholds (the planner's and AQE's) at
+    ``value`` for the block, then each back to its earlier setting — or
+    unset, if it was unset.  ``"-1"`` turns broadcast off, and with it
+    connected_components' small-graph path, so CC calls inside take the
+    round loop; a tiny value such as ``"48b"`` keeps the path on but
+    sends any edge list over its cap to the rounds."""
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    old = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, value)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

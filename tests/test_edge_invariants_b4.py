@@ -5,7 +5,8 @@ join tie/no-match semantics (q63), the exact-Jaccard 0.4 threshold
 (q100), the decontamination 0.05 containment boundary (q104),
 incremental-dedup suppression rules (q120), column profiling with NULLs
 (q132), single-missing-hour gap detection (q137), first-week NULLs and
-exact +100%/-50% growth (q138), and zero-MAD outlier semantics (q145).
+exact +100%/-50% growth (q138), and zero-MAD and NULL-type outlier
+semantics (q145).
 
 Same discipline as batches 1-3: crafted fixture -> registered Spark
 query AND registered oracle SQL on the same file -> driver-style string
@@ -249,6 +250,27 @@ def test_q145_zero_mad_outliers(spark, tmp_path):
     assert by_type["const"][["med", "mad", "n_outliers"]].tolist() == ["10.0", "0.0", "0"]
     assert by_type["burst"][["med", "mad", "n_outliers"]].tolist() == ["1.0", "0.0", "1"]
     assert by_type["spread"][["med", "mad", "n_outliers"]].tolist() == ["3.0", "1.0", "1"]
+
+
+def test_q145_null_event_type_dropped(spark, tmp_path):
+    """Rows with a NULL event_type form no group: the oracle's JOIN USING
+    never matches a NULL key, so the window form must drop them too
+    rather than report a NULL-type row (and they must not leak into the
+    typed groups' medians)."""
+    t0 = 1_700_000_000 * US
+    rows = []
+    eid = 0
+    for v in [1.0, 2.0, 3.0, 4.0, 100.0]:
+        rows.append((eid := eid + 1, t0 + eid, 1, "spread", v))
+    for v in [500.0, 600.0, 700.0]:
+        rows.append((eid := eid + 1, t0 + eid, 2, None, v))
+    sf = _write_events(tmp_path, rows)
+    got, want = _both(spark, sf, "q145_mad_outliers")
+    pd.testing.assert_frame_equal(got, want)
+    assert got["event_type"].tolist() == ["spread"]
+    assert got[["n", "med", "mad", "n_outliers"]].values.tolist() == [
+        ["5", "3.0", "1.0", "1"]
+    ]
 
 
 if __name__ == "__main__":

@@ -14,6 +14,8 @@ from sanctum_spark.operators import multimodal as M
 from sanctum_spark.operators import similarity as S
 from sanctum_spark.operators import text as TX
 
+from conftest import broadcast_threshold
+
 
 @pytest.fixture(scope="module")
 def docs_with_planted(spark, sf_dir):
@@ -444,21 +446,34 @@ def test_approx_percentile_accuracy(spark, sf_dir):
         assert rel < 0.01, r
 
 
-def _cc_both_paths(spark, edges, **kw) -> dict:
-    """Labels from the local (localCheckpoint) path, asserted identical to
-    the checkpoint_table (bucketed-table) path on the same graph: the two
-    run one round shape and differ only in the checkpoint medium."""
-    local = {r["id"]: r["component"] for r in D.connected_components(edges, **kw).collect()}
+def _cc_rows(df) -> list:
+    """Sorted ``(id, component)`` tuples, the NULL id last."""
+    rows = [(r["id"], r["component"]) for r in df.collect()]
+    return sorted(rows, key=lambda t: (t[0] is None, t[0] or 0))
+
+
+def _cc_all_paths(spark, edges, **kw) -> list:
+    """Rows from the small-graph (driver-side) path under the session's
+    conf, asserted identical — rows and schema — to the local round path
+    and the checkpoint_table round path, both forced by threshold -1.
+    The two round paths run one round shape and differ only in the
+    checkpoint medium; the small path computes the same labels exactly."""
+    small = D.connected_components(edges, **kw)
+    want = _cc_rows(small)
     prefix = "cc_paths"
-    try:
-        tabled = D.connected_components(
-            edges, checkpoint_table=prefix, n_buckets=2, **kw
-        )
-        assert {r["id"]: r["component"] for r in tabled.collect()} == local
-    finally:
-        for t in ("edges", "labels_a", "labels_b", "labels_c"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-    return local
+    with broadcast_threshold(spark, "-1"):
+        local = D.connected_components(edges, **kw)
+        try:
+            tabled = D.connected_components(
+                edges, checkpoint_table=prefix, n_buckets=2, **kw
+            )
+            for df in (local, tabled):
+                assert df.schema.simpleString() == small.schema.simpleString()
+                assert _cc_rows(df) == want
+        finally:
+            for t in ("edges", "labels_a", "labels_b", "labels_c"):
+                spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+    return want
 
 
 def test_connected_components_transitive(spark):
@@ -467,7 +482,7 @@ def test_connected_components_transitive(spark):
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (10, 11)], ["id_a", "id_b"]
     )
-    comp = _cc_both_paths(spark, edges)
+    comp = dict(_cc_all_paths(spark, edges))
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
@@ -477,9 +492,113 @@ def test_connected_components_long_chain(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], ["id_a", "id_b"]
     )
-    comp = _cc_both_paths(spark, edges)
+    comp = dict(_cc_all_paths(spark, edges))
     assert set(comp.values()) == {0}
     assert len(comp) == 10
+
+
+def test_connected_components_degenerate_edges(spark):
+    """NULL endpoints, a self-loop, duplicate and reversed edges, and an
+    empty edge list: every path gives the same rows.  A NULL endpoint
+    joins nothing, so 5 and 7 stay singletons and the NULLs collapse to
+    one (NULL, NULL) row; the self-looped 3 is its own component; an
+    empty edge list yields an empty frame with the same schema."""
+    edges = spark.createDataFrame(
+        [(5, None), (None, 7), (3, 3), (1, 2), (1, 2), (2, 1)],
+        "id_a long, id_b long",
+    )
+    assert _cc_all_paths(spark, edges) == [
+        (1, 1), (2, 1), (3, 3), (5, 5), (7, 7), (None, None)
+    ]
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    assert _cc_all_paths(spark, empty) == []
+
+
+def test_min_roots_matches_union_find():
+    """The driver-side labeller against a plain union-find loop on random
+    multigraphs (self-loops, repeats, isolated nodes): the min-index
+    root of every node must agree exactly."""
+    import numpy as np
+
+    def union_find(u, v, n):
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b in zip(u.tolist(), v.tolist()):
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        return [find(x) for x in range(n)]
+
+    rng = np.random.default_rng(7)
+    for _ in range(200):
+        n = int(rng.integers(1, 120))
+        m = int(rng.integers(0, 200))
+        u, v = rng.integers(0, n, m), rng.integers(0, n, m)
+        assert D._min_roots(u, v, n).tolist() == union_find(u, v, n)
+
+
+def test_connected_components_small_graph_gate(spark):
+    """The small-graph path is gated on the broadcast threshold.  Under
+    the session's conf a small graph costs its edge materialization plus
+    at most 2 jobs (the row count and the collect; the labels come back
+    as a local frame); under -1 the same graph takes the round loop —
+    more jobs, same labels.  Under a threshold of 48 B (cap = 3 pairs,
+    under this graph's 8 symmetric edges) the count is taken and the
+    graph falls back to the rounds on both checkpoint media: same rows
+    and schema, and the rounds ran (more jobs locally; the labels
+    ping-pong tables exist under checkpoint_table)."""
+    edges = spark.createDataFrame(
+        [(2, 1), (2, 3), (10, 11), (11, 12)], "id_a long, id_b long"
+    )
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, "connected_components gate pin")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # jobs of an eager localCheckpoint of this input: what the edge
+    # materialization inside connected_components costs
+    _, n_mat = jobs_in(
+        "cc_gate_materialize", lambda: edges.localCheckpoint(eager=True)
+    )
+    small, n_small = jobs_in(
+        "cc_gate_small", lambda: D.connected_components(edges)
+    )
+    with broadcast_threshold(spark, "-1"):
+        rounds, n_rounds = jobs_in(
+            "cc_gate_rounds", lambda: D.connected_components(edges)
+        )
+    assert n_small <= n_mat + 2, (n_mat, n_small)
+    assert n_rounds > n_small, (n_small, n_rounds)
+    want = [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)]
+    assert _cc_rows(small) == _cc_rows(rounds) == want
+
+    prefix = "cc_gate"
+    try:
+        with broadcast_threshold(spark, "48b"):
+            over, n_over = jobs_in(
+                "cc_gate_over_cap", lambda: D.connected_components(edges)
+            )
+            tabled = D.connected_components(
+                edges, checkpoint_table=prefix, n_buckets=2
+            )
+            tabled_rows = _cc_rows(tabled)
+        assert spark.catalog.tableExists(f"{prefix}_labels_a")
+    finally:
+        for t in ("edges", "labels_a", "labels_b", "labels_c"):
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+    assert n_over > n_small, (n_small, n_over)
+    assert _cc_rows(over) == tabled_rows == want
+    for df in (over, tabled):
+        assert df.schema.simpleString() == small.schema.simpleString()
 
 
 def test_hashed_jaccard_pairs_match_string_pairs(spark, docs_with_planted):
@@ -542,11 +661,13 @@ def test_connected_components_jump_beats_diameter(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(59)], ["id_a", "id_b"]
     )
-    with pytest.raises(RuntimeError, match="fixpoint"):
+    with broadcast_threshold(spark, "-1"), pytest.raises(RuntimeError, match="fixpoint"):
         D.connected_components(edges, max_iter=10)
-    comp = _cc_both_paths(spark, edges, max_iter=10, jump=True)
+    comp = dict(_cc_all_paths(spark, edges, max_iter=10, jump=True))
     assert set(comp.values()) == {0}
     assert len(comp) == 60
+    # the small-graph path's labels are exact: max_iter does not apply
+    assert dict(_cc_rows(D.connected_components(edges, max_iter=10))) == comp
 
 
 def test_decontaminate_flags_planted_copy(spark):

@@ -41,7 +41,7 @@ PYTHON_NODE_OK = {
 EXISTING_RDD_OK = {
     "q41_except_union": "tiny literal frame (createDataFrame of constants)",
     "q88_user_correlation": "eager localCheckpoint of the bounded 4-column pair table (prevents double-eval of the pairing aggregate)",
-    "q99_dedup_clusters": "iterative CC localCheckpoint (lineage cut, measured)",
+    "q99_dedup_clusters": "iterative CC localCheckpoint (lineage cut, measured) once the edge list exceeds the broadcast threshold; smaller graphs come back as a LocalTableScan",
     "q114_textrank_keywords": "power-iteration checkpoint batching (lineage cut)",
     "q142_cross_source_overlap": "eager localCheckpoint of the sources^2-bounded result to release the persisted source-set table",
     "q147_heavy_hitters": "eager localCheckpoint of the (heavy-token, cnt) result to release the persisted token table",

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 import sanctum_spark.queries as qreg
+from conftest import broadcast_threshold
 
 qreg.load_all_modules()
 
@@ -300,29 +301,26 @@ def test_bucketed_checkpoint_join_no_label_exchange(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
         "id_a long, id_b long",
     )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try:
-        cc = connected_components(pairs, checkpoint_table="ccpin", n_buckets=4)
-        got = {r["id"]: r["component"] for r in cc.collect()}
-        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-        # rebuild the per-round join exactly as the operator issues it:
-        # bucketed edges x bucketed labels (cc IS the last labels table)
-        sym = spark.table("ccpin_edges")
-        j = (
-            sym.join(cc, sym.src == cc.id)
-            .groupBy("dst")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert plan.count("Exchange") == 1, plan  # groupBy only; inputs bucketed
-        assert "Bucketed: true" in plan
+        with broadcast_threshold(spark, "-1"):
+            cc = connected_components(pairs, checkpoint_table="ccpin", n_buckets=4)
+            got = {r["id"]: r["component"] for r in cc.collect()}
+            assert got == {
+                1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20
+            }
+            # rebuild the per-round join exactly as the operator issues it:
+            # bucketed edges x bucketed labels (cc IS the last labels table)
+            sym = spark.table("ccpin_edges")
+            j = (
+                sym.join(cc, sym.src == cc.id)
+                .groupBy("dst")
+                .agg(F.min("component").alias("nbr_min"))
+            )
+            plan = j._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" in plan
+            assert plan.count("Exchange") == 1, plan  # groupBy only; inputs bucketed
+            assert "Bucketed: true" in plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
         for t in ("ccpin_edges", "ccpin_labels_a", "ccpin_labels_b", "ccpin_labels_c"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -332,17 +330,21 @@ def test_bucketed_checkpoint_jump_path(spark):
     pointer-jumping cut must rotate through the SAME bucketed ping-pong
     tables (three of them, so a round never overwrites what it reads) —
     never an executor-memory localCheckpoint — and the combination must
-    converge on a path graph whose diameter exceeds plain max_iter."""
+    converge on a path graph whose diameter exceeds plain max_iter.
+    Threshold -1 keeps this small graph off the driver-side path, so the
+    round loop and its ping-pong tables run."""
     from sanctum_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(25)], "id_a long, id_b long"
     )
-    cc = connected_components(
-        edges, max_iter=8, jump=True, checkpoint_table="ccjump", n_buckets=4
-    )
     try:
-        got = {r["id"]: r["component"] for r in cc.collect()}
+        with broadcast_threshold(spark, "-1"):
+            cc = connected_components(
+                edges, max_iter=8, jump=True, checkpoint_table="ccjump",
+                n_buckets=4,
+            )
+            got = {r["id"]: r["component"] for r in cc.collect()}
         assert got == {i: 0 for i in range(26)}
         # all three ping-pong tables were used (per round: one jump cut
         # + one round-end write), proving the jump cut went through the
@@ -602,7 +604,15 @@ def test_curation_pipeline_plan_shapes(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 97 != 0).select("doc_id", "text")
-    df = curate_and_pack(corpus, bench)
+    # The near-dup stage's connected_components runs while the chain is
+    # built.  Threshold -1 there sends it down its round path, whose
+    # checkpointed labels carry no size bound — the corpus-sized loser
+    # list this pin is about.  (This fixture's graph is small, so by
+    # default its labels would be an exact-size local frame, which is
+    # rightly broadcast.)  The plan itself is made under the session's
+    # threshold at collect().
+    with broadcast_threshold(spark, "-1"):
+        df = curate_and_pack(corpus, bench)
     # Execute df's OWN QueryExecution — df.count() would run a derived
     # aggregate Dataset and leave this executedPlan pre-AQE (initial shape),
     # so the assertions below would never see a runtime join-strategy flip.
