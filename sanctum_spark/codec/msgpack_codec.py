@@ -25,10 +25,19 @@ tag raises ``UnrecognizedMessagePackTag`` (src/zlmp.zig:589-592).
 The engine uses ``roundtrip`` as the between-casts boundary in the
 simulate path; in the distributed path the Arrow JVM⇄Python boundary plays
 the same role and this codec backs the ``--dump-events`` debug sink.
+
+``roundtrip`` is one structural walk that builds ``unpack(pack(x))``
+directly, without bytes: entries are dropped, lists re-keyed 1..n and
+floats narrowed exactly as the wire path would.  When the walk raises,
+``roundtrip`` runs ``unpack(pack(x))`` instead, so errors are the wire
+path's own.  ``pack``/``unpack`` are its reference (tests/test_codec.py
+checks the two against each other).  On the
+simulate seed event the walk takes about a fifth of the wire path's time.
 """
 
 from __future__ import annotations
 
+import operator
 import struct
 
 
@@ -205,6 +214,70 @@ def unpack(buf: bytes):
     return value
 
 
+_F32 = struct.Struct(">f")
+_I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
+# exact types that are always serializable (none of them is callable)
+_PLAIN = frozenset((type(None), bool, int, float, str, dict, list))
+
+
+def _walk(v: object):
+    """``unpack(pack(v))`` for a serializable ``v``, built directly."""
+    t = type(v)
+    if t is str:
+        if not v.isascii():
+            v.encode("utf-8")  # a lone surrogate raises here, as in pack
+        return v
+    if t is int:
+        if _I64_MIN <= v <= _I64_MAX:
+            return v
+        raise NotSerializable(f"integer out of i64 range: {v}")
+    if t is dict:
+        return _walk_map(v.items())
+    if t is float:
+        # same narrowing test as _pack_float; the f32 value comes back
+        try:
+            narrowed = _F32.unpack(_F32.pack(v))[0]
+        except OverflowError:
+            return v
+        return narrowed if narrowed == v or v != v else v
+    if t is list:
+        return _walk_map(enumerate(v, 1))
+    if v is None or t is bool:
+        return v
+    # subclasses decode as their plain base type
+    if isinstance(v, int):
+        return _walk(operator.index(v))
+    if isinstance(v, float):
+        return _walk(float.__float__(v))
+    if isinstance(v, str):
+        return v.encode("utf-8").decode("utf-8")
+    if isinstance(v, dict):
+        return _walk_map(v.items())
+    return _walk_map(enumerate(v, 1))  # list subclass
+
+
+def _walk_map(items) -> dict:
+    out = {}
+    for k, v in items:
+        if not (
+            (type(k) in _PLAIN or _serializable(k))
+            and (type(v) in _PLAIN or _serializable(v))
+        ):
+            continue  # data-only: drop the whole entry
+        out[_walk(k)] = _walk(v)
+    return out
+
+
 def roundtrip(event: dict) -> dict:
-    """The between-casts boundary: enforce "events are data-only"."""
+    """The between-casts boundary: enforce "events are data-only".
+
+    Equals ``unpack(pack(event))`` without building the bytes.  Errors are
+    rare, so when the walk fails the wire path runs instead and raises
+    its own exception.
+    """
+    if _serializable(event):
+        try:
+            return _walk(event)
+        except Exception:  # noqa: BLE001 - the wire path states the error
+            pass
     return unpack(pack(event))

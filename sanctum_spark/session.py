@@ -4,6 +4,20 @@ Local-mode settings mirror the harness (local[$SPARK_GRAFT_CPUS], single
 JVM).  The config block is written so the same code is cluster-ready: AQE,
 adaptive coalescing and skew-join handling are on, shuffle partitions track
 core count locally but should be raised (or left to AQE) on a real cluster.
+
+Python workers start from ``sanctum_spark.worker_daemon``
+(``spark.python.daemon.module``), not ``pyspark.daemon`` directly.  PySpark's
+worker calls ``importlib.invalidate_caches()`` once per task, and on
+CPython 3.11 that re-reads the whole directory of pyspark.zip (1328 entries,
+6.7 ms) once per cached zipimporter: timestamps inside the worker put it at
+0.24-0.33 s per task, before the UDF runs.  The daemon skips the re-read
+while the archive is unchanged and then runs ``pyspark.daemon``, so every
+Python UDF (spell tiers, stateful streaming, pandas UDFs) starts its tasks
+without that cost.  ``spark.executorEnv.PYTHONPATH`` is set to the
+package root so the daemon resolves from any working directory.  Cluster
+note: the package must be installed (or shipped) on the executors, which
+the spell runners already require, because cloudpickle pickles the
+``spells.runtime`` helpers by reference.
 """
 
 from __future__ import annotations
@@ -11,6 +25,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -83,6 +100,8 @@ def get_spark(app_name: str = "sanctum_spark", extra_conf: dict | None = None) -
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "sanctum_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.parquet.filterPushdown", "true")
         # spill-aware sizing: ~128 MB scan splits and ~64 MB post-shuffle
         # partitions keep per-task working sets well inside executor

@@ -222,23 +222,38 @@ def start_sharded_tail(
     return queries
 
 
-def committed_stream_offset(checkpoint_dir: str) -> str:
-    """The largest filename a (stopped) shard stream durably consumed.
+def _batch_ids(log_dir: str) -> list[int]:
+    """Batch ids of a streaming log directory (``<id>`` or ``<id>.compact``)."""
+    if not os.path.isdir(log_dir):
+        return []
+    return [
+        int(f.split(".")[0])
+        for f in os.listdir(log_dir)
+        if f.isdigit() or (f.endswith(".compact") and f.split(".")[0].isdigit())
+    ]
 
-    Reads the Structured Streaming checkpoint directly: the newest batch
-    id under ``commits/`` is the last COMMITTED batch, and the final line
-    of ``offsets/<id>`` is that batch's end offset for the (single)
-    eventdump source — the ``{"last": ...}`` JSON this source emits.
-    Returns ``""`` when nothing was committed.  Data a stopped stream
-    wrote to its parquet sink for a batch that never reached the commit
-    log is excluded here AND hidden from log-aware reads by the file
-    sink's own ``_spark_metadata`` transaction log, so hand-off from the
-    committed offset is exact, not merely at-least-once.
+
+def committed_stream_offset(checkpoint_dir: str, sink_dir: str) -> str:
+    """The largest filename a (stopped) shard stream consumed into its sink.
+
+    Reads the Structured Streaming checkpoint and the sink directly: the
+    newest batch id in either ``commits/`` or the sink's
+    ``_spark_metadata/`` log is the hand-off batch, and the final line of
+    ``offsets/<id>`` is its end offset for the (single) eventdump source —
+    the ``{"last": ...}`` JSON this source emits.  Returns ``""`` when
+    nothing was consumed.
+
+    The commit log alone is not the hand-off point: the file sink writes
+    ``_spark_metadata/<id>`` inside ``addBatch``, before the commit-log
+    entry, so a ``stop()`` between the two leaves batch ``id`` visible to
+    log-aware reads of the sink but absent from ``commits/``.  Taking the
+    newer of the two logs, hand-off from the returned offset neither
+    re-reads nor skips a batch whose rows the sink shows.  A batch that
+    wrote part files but no sink metadata stays hidden from log-aware
+    reads and is re-read.
     """
-    commits = os.path.join(checkpoint_dir, "commits")
-    if not os.path.isdir(commits):
-        return ""
-    ids = [int(f) for f in os.listdir(commits) if f.isdigit()]
+    ids = _batch_ids(os.path.join(checkpoint_dir, "commits"))
+    ids += _batch_ids(os.path.join(sink_dir, "_spark_metadata"))
     if not ids:
         return ""
     with open(os.path.join(checkpoint_dir, "offsets", str(max(ids)))) as fh:
@@ -250,6 +265,7 @@ def reshard_sharded_tail(
     spark,
     path: str,
     old_num_shards: int,
+    old_sink_dir: str,
     old_checkpoint_dir: str,
     new_num_shards: int,
     new_sink_dir: str,
@@ -269,7 +285,11 @@ def reshard_sharded_tail(
        is passed, else by the caller beforehand).
     2. **Converge**: pick ``target`` = the largest filename visible now
        (>= every shard's committed offset, since consumed files stay
-       listed).  For each old shard ``i``, batch-read exactly its gap
+       listed).  ``last_i`` is the end offset of the newest batch in
+       shard ``i``'s commit log or its sink's ``_spark_metadata`` log
+       (``committed_stream_offset``), so a batch the sink logged just
+       before the stop is not read twice.  For each old shard ``i``,
+       batch-read exactly its gap
        ``(last_i, target]`` under the OLD mapping and append it to
        ``catchup_dir`` — the partition-parallel batch reader, one
        bounded window per shard.  Afterwards every file ``<= target``
@@ -292,7 +312,10 @@ def reshard_sharded_tail(
         for q in queries:
             q.stop()
     lasts = [
-        committed_stream_offset(os.path.join(old_checkpoint_dir, f"shard={i}"))
+        committed_stream_offset(
+            os.path.join(old_checkpoint_dir, f"shard={i}"),
+            os.path.join(old_sink_dir, f"shard={i}"),
+        )
         for i in range(old_num_shards)
     ]
     visible = [

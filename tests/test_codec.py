@@ -6,7 +6,7 @@ import math
 import struct
 
 import pytest
-from hypothesis import given, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from sanctum_spark.codec import pack, unpack, roundtrip, UnrecognizedMessagePackTag
 
@@ -158,3 +158,104 @@ events = st.recursive(
 @given(events)
 def test_roundtrip_property(value):
     assert unpack(pack(value)) == value
+
+
+# --- roundtrip is the structural walk of unpack(pack(x)) -----------------
+
+class _Str(str):
+    pass
+
+
+class _Int(int):
+    pass
+
+
+class _Float(float):
+    pass
+
+
+def _no_op():
+    return None
+
+
+_SURROGATES = st.sampled_from(["\ud800", "a\udfffb", "\udc80" * 3])
+_bad_ints = st.sampled_from([1 << 63, -(1 << 63) - 1, 1 << 64, -(1 << 70)])
+_odd_floats = st.sampled_from(
+    [float("nan"), 0.0, -0.0, float("inf"), float("-inf"), 0.1, 1e300, 3.4028235e38]
+)
+_rt_text = st.one_of(st.text(max_size=8), _SURROGATES)
+_rt_ints = st.one_of(st.integers(), _bad_ints)
+_rt_floats = st.one_of(st.floats(), _odd_floats)
+_rt_scalars = st.one_of(
+    st.none(),
+    st.booleans(),
+    _rt_ints,
+    _rt_floats,
+    _rt_text,
+    st.builds(_Str, _rt_text),
+    st.builds(_Int, _rt_ints),
+    st.builds(_Float, _rt_floats),
+)
+# hashable values the wire drops: the entry goes, whichever side it is on
+_rt_dropped = st.sampled_from([(1, 2), frozenset({3}), _no_op, b"raw", 1j])
+_rt_keys = st.one_of(_rt_scalars, _rt_dropped)
+_rt_trees = st.recursive(
+    st.one_of(_rt_scalars, _rt_dropped, st.just(object())),
+    lambda inner: st.one_of(
+        st.dictionaries(_rt_keys, inner, max_size=5),
+        st.lists(inner, max_size=5),
+    ),
+    max_leaves=20,
+)
+
+
+def _same(a, b) -> bool:
+    """Equal, with exact types, float bits and dict order."""
+    if type(a) is not type(b):
+        return False
+    if type(a) is float:
+        return struct.pack(">d", a) == struct.pack(">d", b)
+    if type(a) is dict:
+        return len(a) == len(b) and all(
+            _same(ka, kb) and _same(va, vb)
+            for (ka, va), (kb, vb) in zip(a.items(), b.items())
+        )
+    return a == b
+
+
+@example({"\ud800": 1 << 64})  # the key's error wins over the value's
+@example({"k": [1, "\ud800", 1 << 64]})
+@example([float("nan"), -0.0, _Str("s"), _Int(5), _Float(0.1), _no_op])
+@settings(max_examples=400, deadline=None)
+@given(_rt_trees)
+def test_roundtrip_is_pack_unpack(value):
+    try:
+        expected = unpack(pack(value))
+    except Exception as e:  # noqa: BLE001 - the exception type is the spec
+        with pytest.raises(type(e)):
+            roundtrip(value)
+        return
+    assert _same(roundtrip(value), expected)
+
+
+class _HashableDict(dict):
+    def __hash__(self):
+        return 7
+
+
+def test_roundtrip_unhashable_key_after_pack_errors():
+    # such a key decodes to a plain dict, which unpack cannot insert; but
+    # unpack only runs once pack has seen the whole value
+    with pytest.raises(TypeError):
+        roundtrip({_HashableDict(a=1): 1})
+    with pytest.raises(UnicodeEncodeError):
+        roundtrip({_HashableDict(a=1): 1, "b": "\ud800"})
+    with pytest.raises(TypeError):
+        unpack(pack({_HashableDict(a=1): 1}))
+
+
+def test_roundtrip_copies_containers():
+    ev = {"t": {"x": [1]}, "n": 1}
+    out = roundtrip(ev)
+    out["t"]["x"][1] = 2
+    assert ev == {"t": {"x": [1]}, "n": 1}

@@ -376,13 +376,15 @@ def test_reshard_sharded_tail_delivery_equality(spark, tmp_path):
     sink2, ck2 = str(tmp_path / "sink2"), str(tmp_path / "ck2")
     catchup = str(tmp_path / "catchup")
     new_queries, target = reshard_sharded_tail(
-        spark, d, 2, ck1, 3, sink2, ck2, catchup, queries=queries
+        spark, d, 2, sink1, ck1, 3, sink2, ck2, catchup, queries=queries
     )
     try:
         assert target == "dump-000009.log"
         # old offsets were mid-backlog (the recipe had a real gap to fill)
         lasts = [
-            committed_stream_offset(os.path.join(ck1, f"shard={i}"))
+            committed_stream_offset(
+                os.path.join(ck1, f"shard={i}"), os.path.join(sink1, f"shard={i}")
+            )
             for i in range(2)
         ]
         assert any(last < target for last in lasts)
@@ -401,6 +403,50 @@ def test_reshard_sharded_tail_delivery_equality(spark, tmp_path):
     finally:
         for q in new_queries:
             q.stop()
+
+
+def test_reshard_hands_off_after_sink_logged_uncommitted_batch(spark, tmp_path):
+    """A stop() between the file sink's ``_spark_metadata/<id>`` write and
+    the commit-log entry leaves batch ``id`` visible in the sink but not in
+    ``commits/``.  Crafted without timing: drain 3 files (one per batch),
+    then delete ``commits/2``.  The catch-up must not read file 2 again."""
+    from sanctum_spark.streaming.tailing import (
+        _batch_ids,
+        committed_stream_offset,
+        reshard_sharded_tail,
+        start_sharded_tail,
+    )
+
+    d = str(tmp_path / "rs")
+    for seq in range(3):
+        _plant(d, seq, range(seq * 10, seq * 10 + 10))
+    spark.dataSource.register(EventDumpDataSource)
+    sink1, ck1 = str(tmp_path / "sink1"), str(tmp_path / "ck1")
+    (q,) = start_sharded_tail(spark, d, 1, sink1, ck1, max_files_per_trigger=1)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    shard_ck, shard_sink = os.path.join(ck1, "shard=0"), os.path.join(sink1, "shard=0")
+    offsets = [f for f in os.listdir(os.path.join(shard_ck, "offsets")) if f.isdigit()]
+    assert sorted(offsets) == ["0", "1", "2"]
+    for f in ("2", ".2.crc"):
+        os.remove(os.path.join(shard_ck, "commits", f))
+    assert max(_batch_ids(os.path.join(shard_ck, "commits"))) == 1
+    assert max(_batch_ids(os.path.join(shard_sink, "_spark_metadata"))) == 2
+    assert committed_stream_offset(shard_ck, shard_sink) == "dump-000002.log"
+
+    catchup = str(tmp_path / "catchup")
+    new_queries, target = reshard_sharded_tail(
+        spark, d, 1, sink1, ck1, 2, str(tmp_path / "sink2"), str(tmp_path / "ck2"), catchup
+    )
+    for nq in new_queries:
+        nq.stop()
+    assert target == "dump-000002.log"
+    ids = [r["event_id"] for r in spark.read.parquet(shard_sink).collect()]
+    if os.path.isdir(catchup):
+        ids += [r["event_id"] for r in spark.read.parquet(catchup).collect()]
+    assert sorted(ids) == list(range(30))
 
 
 def test_reshard_tailers_delivery_equality(spark, tmp_path):
