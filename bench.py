@@ -333,27 +333,7 @@ def main() -> None:
 
     spark = get_spark("sanctum_spark_bench")
     registry = qreg.queries()
-
-    # Warm the JVM once so per-query numbers measure the engine, not
-    # first-touch classloading: a scan, a shuffle (exchange + codegen
-    # machinery), and a Python-worker round trip.
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    li.groupBy("l_returnflag").count().collect()
-    spark.range(1000).select(
-        F.pandas_udf(lambda s: s * 2, "long")(F.col("id"))
-    ).count()
-    # mapInPandas worker-pool warm-up (r10 verdict task #5): the scalar
-    # pandas_udf above warms ONE worker path, but the first mapInPandas
-    # job of a session measured 10.9 s under a degraded window vs 1.4 s
-    # warm (judge's q84 attribution run) — Python-worker spawn across all
-    # cores amplifies under load into phantom per-query movers.  One
-    # throwaway 32-partition identity pass spawns the full worker pool
-    # before any timed query.
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm(spark, sf_dir)
 
     # Host-window calibration, measured INSIDE the run so the artifact
     # carries its own evidence: loadavg + fixed single-core spin canaries
@@ -503,6 +483,29 @@ def main() -> None:
     }
     print(json.dumps(result))
     spark.stop()
+
+
+def warm(spark, sf_dir: str) -> None:
+    """Warm the JVM once so per-query numbers measure the engine, not
+    first-touch classloading: a scan, a shuffle (exchange + codegen
+    machinery), and a Python-worker round trip."""
+    from pyspark.sql import functions as F
+
+    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li.groupBy("l_returnflag").count().collect()
+    spark.range(1000).select(
+        F.pandas_udf(lambda s: s * 2, "long")(F.col("id"))
+    ).count()
+    # mapInPandas worker-pool warm-up: the scalar pandas_udf above warms
+    # ONE worker path, but the first mapInPandas job of a session
+    # measured 10.9 s under a degraded window vs 1.4 s warm (a q84
+    # attribution run) — Python-worker spawn across all cores amplifies
+    # under load into phantom per-query movers.  One
+    # throwaway 32-partition identity pass spawns the full worker pool
+    # before any timed query.
+    spark.range(32).repartition(32).mapInPandas(
+        lambda it: it, "id long"
+    ).count()
 
 
 if __name__ == "__main__":

@@ -6,9 +6,10 @@ and Catalyst fuses the stage boundaries (column pruning reaches the
 scan, the quality gates run inside the same codegen span as the digest,
 and nothing round-trips through a storage format between stages).  This
 module provides each stage as a DataFrame→DataFrame function plus the
-fused composition; ``tools/pipeline_ab.py`` A/Bs the fused chain against
-stage-at-a-time materialization and the suite pins their output equality
-(tests/test_curation_pipeline.py).
+fused composition; the suite pins its output equal to stage-at-a-time
+materialization (tests/test_curation_pipeline.py).  SCALE.md records the
+fused-vs-staged A/B (protocol: ``tools/perf.py``; retired runner
+``git show 56ab0f9:tools/pipeline_ab.py``).
 
 Stage semantics deliberately match the registered single-stage queries
 (same operators underneath), so every stage is independently
@@ -202,7 +203,7 @@ def curate_and_pack(
     Returns the pack table (see ``pack_sequences``).  Output equality
     with stage-at-a-time parquet materialization is suite-pinned
     (tests/test_curation_pipeline.py); fused-vs-staged wall-clock and
-    octave slopes are measured by tools/pipeline_ab.py (SCALE.md).
+    octave slopes are recorded in SCALE.md (protocol: tools/perf.py).
     """
     cleaned = clean_corpus(
         docs, text_col, id_col,

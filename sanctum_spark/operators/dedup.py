@@ -480,11 +480,8 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     hashed: bool = False,
     prefix_filter: bool | str = True,
-    positional_filter: bool = True,
-    index_prefix_filter: bool = True,
     auto_prefix_min_docs: int = 8192,
     doc_count: int | None = None,
-    _candidates_only: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs (threshold ``t``) — EXACT result, with
     prefix-filtered candidate generation (AllPairs/PPJoin, Bayardo et al.
@@ -540,12 +537,6 @@ def ngram_jaccard_pairs(
     ``t·n`` a hair ABOVE the exact rational (0.4×10 → 4.0000000000000002),
     and an over-ceil would shorten the prefix / tighten the size filter —
     the unsafe direction.  The slack only ever ADDS candidates.
-
-    ``positional_filter=False`` / ``index_prefix_filter=False`` drop
-    only that conjunct (size and prefix filters stay) — measurement/
-    validation knobs so each filter's candidate-volume contribution is
-    attributable and its equivalence independently pinned; production
-    callers leave both True.
 
     ``hashed=True`` operates on 64-bit xxhash64 shingle hashes instead of
     shingle strings: the shuffles ship 8-byte longs and the canonical
@@ -652,34 +643,31 @@ def ngram_jaccard_pairs(
             F.col("ps.s").alias("s"),
         )
     )
-    if index_prefix_filter:
-        # index-prefix filter (PPJoin): the side playing the SMALLER-set
-        # role (a, by the orientation below) only needs its first
-        # n - ceil(2t/(1+t)·n) + 1 shingles: a qualifying pair with
-        # |A| <= |B| has overlap alpha >= ceil(t/(1+t)·(n_a+n_b)) >=
-        # ceil(2t/(1+t)·n_a), so its first common shingle lies within
-        # that shorter prefix of A (and within B's full probe prefix,
-        # since alpha >= ceil(t·n_b) follows from the size filter).
-        # Applied as a PRE-JOIN filter, not a join conjunct: the pruned
-        # rows never enter the self-join's sort/hash input (~29% of the
-        # indexed side at t=0.4), while the candidate SET is unchanged —
-        # the positional conjunct below mathematically subsumes this
-        # bound (min(n_a-p_a, ...) path), verified exact-equal candidate
-        # counts at sf0.1 (tools/ppjoin_positional_ab.py).  Same 1e-9
-        # under-ceil guard: slack only ever KEEPS extra rows.
-        ilen = (
-            F.col("n")
-            - F.ceil(F.lit(2.0 * t) / F.lit(1.0 + t) * F.col("n") - F.lit(1e-9))
-            + F.lit(1)
-        )
-        pa = pref.filter(F.col("p") <= ilen).alias("a")
-    else:
-        pa = pref.alias("a")
+    # index-prefix filter (PPJoin): the side playing the SMALLER-set
+    # role (a, by the orientation below) only needs its first
+    # n - ceil(2t/(1+t)·n) + 1 shingles: a qualifying pair with
+    # |A| <= |B| has overlap alpha >= ceil(t/(1+t)·(n_a+n_b)) >=
+    # ceil(2t/(1+t)·n_a), so its first common shingle lies within
+    # that shorter prefix of A (and within B's full probe prefix,
+    # since alpha >= ceil(t·n_b) follows from the size filter).
+    # Applied as a PRE-JOIN filter, not a join conjunct: the pruned
+    # rows never enter the self-join's sort/hash input (~29% of the
+    # indexed side at t=0.4), while the candidate SET is unchanged —
+    # the positional conjunct below mathematically subsumes this
+    # bound (min(n_a-p_a, ...) path); exact-equal candidate counts at
+    # sf0.1 are recorded in SCALE.md.  Same 1e-9 under-ceil guard:
+    # slack only ever KEEPS extra rows.
+    ilen = (
+        F.col("n")
+        - F.ceil(F.lit(2.0 * t) / F.lit(1.0 + t) * F.col("n") - F.lit(1e-9))
+        + F.lit(1)
+    )
+    pa = pref.filter(F.col("p") <= ilen).alias("a")
     pb = pref.alias("b")
     # Join orientation: a = the (n, id)-lexicographically SMALLER side.
     # Every unordered pair appears in exactly one orientation (as with
     # the plain id ordering), but size-ordering the roles is what makes
-    # the asymmetric index-prefix filter below applicable; output ids
+    # the asymmetric index-prefix filter above applicable; output ids
     # are normalized back to id_a < id_b with least/greatest.
     smaller = (F.col("a.n") < F.col("b.n")) | (
         (F.col("a.n") == F.col("b.n")) & (F.col("a.id") < F.col("b.id"))
@@ -702,13 +690,12 @@ def ngram_jaccard_pairs(
         # size filter: J >= t  ⇒  min(|A|,|B|) >= t·max(|A|,|B|)
         & (F.col("b.n") >= F.lit(t) * F.col("a.n") - F.lit(1e-9))
         & (F.col("a.n") >= F.lit(t) * F.col("b.n") - F.lit(1e-9))
-    )
-    if positional_filter:
-        cond = cond & (
+        & (
             F.lit(1)
             + F.least(F.col("a.n") - F.col("a.p"), F.col("b.n") - F.col("b.p"))
             >= o_min
         )
+    )
     cand = (
         pa.join(pb, cond)
         .select(
@@ -717,11 +704,6 @@ def ngram_jaccard_pairs(
         )
         .distinct()
     )
-    if _candidates_only:
-        # measurement hook (tools/ppjoin_positional_ab.py): the candidate
-        # set BEFORE exact verification — its size is the drift-free
-        # pruning-power metric on a noisy-timing host.
-        return cand
     av = sh.select(
         F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"), F.col("n").alias("n_a")
     )

@@ -127,58 +127,41 @@ def zorder_by(
     cols: list[str],
     bits: int = 16,
     n_partitions: int | None = None,
-    exact_ranks: bool = False,
     relative_error: float = 1e-4,
 ) -> DataFrame:
     """Cluster ``df`` on the Z-order curve of ``cols``.
 
-    Rank normalization into [0, 2^bits) happens one of two ways:
-
-    - **default (scale path)**: one ``approxQuantile`` pass computes
-      2^bits - 1 cut points per column (a bounded driver-side parameter
-      fetch — Greenwald-Khanna sketch, no global sort, no extra
-      shuffle), and each row's bucket is found by an unrolled binary
-      search over the broadcast bounds literal, entirely inside the scan
-      projection.  The only Exchange in the whole plan is the range
-      repartition the layout itself requires.  Columns must be numeric
-      (cast dates to epoch days at the call site).
-    - ``exact_ranks=True`` (test scale only): global ``percent_rank``
-      window — one single-partition sort per column.  Kept for
-      small-data bit-exactness checks; never the production path.
+    Rank normalization into [0, 2^bits): one ``approxQuantile`` pass
+    computes the cut points per column (a bounded driver-side parameter
+    fetch — Greenwald-Khanna sketch, no global sort, no extra shuffle),
+    and each row's bucket is found by an unrolled binary search over the
+    broadcast bounds literal, entirely inside the scan projection.  The
+    only Exchange in the whole plan is the range repartition the layout
+    itself requires.  Columns must be numeric (cast dates to epoch days
+    at the call site).
 
     Writing the result gives parquet files whose min/max footprints are
     tight in every clustered column, so predicates on ANY of them prune
     files.
     """
-    nb = 1 << bits
     tmp = df
-    if exact_ranks:
-        from pyspark.sql.window import Window
-
-        for i, name in enumerate(cols):
-            r = F.percent_rank().over(Window.orderBy(F.col(name)))
-            tmp = tmp.withColumn(
-                f"_z{i}", F.least(F.floor(r * nb), F.lit(nb - 1))
-            )
-    else:
-        # Cap the quantile grid at 2^10 buckets per column: the bounds
-        # become a literal array in the scan projection, and 1024^k curve
-        # cells already dwarf any realistic file count — finer ranks only
-        # grow the expression tree and the GK sketch.  Bucket indexes are
-        # shifted up to the full 2^bits domain so z-values keep the same
-        # scale as the exact path.
-        eff_bits = min(bits, 10)
-        nb_eff = 1 << eff_bits
-        shift = bits - eff_bits
-        # interior cut points at ranks 1/nb_eff .. (nb_eff-1)/nb_eff;
-        # count-of-bounds-<=-v is then a bucket index in [0, nb_eff-1].
-        probs = [k / nb_eff for k in range(1, nb_eff)]
-        all_bounds = df.stat.approxQuantile(list(cols), probs, relative_error)
-        for i, (name, bounds) in enumerate(zip(cols, all_bounds)):
-            tmp = _with_bucket_index(tmp, f"_z{i}", F.col(name), sorted(bounds))
-            tmp = tmp.withColumn(
-                f"_z{i}", F.shiftleft(F.col(f"_z{i}").cast("long"), shift)
-            )
+    # Cap the quantile grid at 2^10 buckets per column: the bounds
+    # become a literal array in the scan projection, and 1024^k curve
+    # cells already dwarf any realistic file count — finer ranks only
+    # grow the expression tree and the GK sketch.  Bucket indexes are
+    # shifted up to the full 2^bits domain.
+    eff_bits = min(bits, 10)
+    nb_eff = 1 << eff_bits
+    shift = bits - eff_bits
+    # interior cut points at ranks 1/nb_eff .. (nb_eff-1)/nb_eff;
+    # count-of-bounds-<=-v is then a bucket index in [0, nb_eff-1].
+    probs = [k / nb_eff for k in range(1, nb_eff)]
+    all_bounds = df.stat.approxQuantile(list(cols), probs, relative_error)
+    for i, (name, bounds) in enumerate(zip(cols, all_bounds)):
+        tmp = _with_bucket_index(tmp, f"_z{i}", F.col(name), sorted(bounds))
+        tmp = tmp.withColumn(
+            f"_z{i}", F.shiftleft(F.col(f"_z{i}").cast("long"), shift)
+        )
     z = zvalue([F.col(f"_z{i}") for i in range(len(cols))], bits)
     tmp = tmp.withColumn("_zval", z).drop(*[f"_z{i}" for i in range(len(cols))])
     if n_partitions:

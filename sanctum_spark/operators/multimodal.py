@@ -367,9 +367,7 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     return np.stack(planes, axis=-1)
 
 
-def extract_features(
-    media: DataFrame, fake_decode: bool = True, batch_note: str | None = None
-) -> DataFrame:
+def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
     """mapInPandas feature extraction over media payloads.
 
     The pipeline shape is the production one — Arrow batches in, one

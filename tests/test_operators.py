@@ -1873,27 +1873,7 @@ def test_prefix_filtered_jaccard_equals_naive(spark):
                     hashed=hashed, prefix_filter=True,
                 ).collect()
             }
-            # each optional conjunct off in turn: pins the positional and
-            # index-prefix filters' equivalence independently (r8).
-            nopos = {
-                (r["id_a"], r["id_b"], r["jaccard"])
-                for r in D.ngram_jaccard_pairs(
-                    docs, "text", "doc_id", threshold=threshold,
-                    hashed=hashed, prefix_filter=True,
-                    positional_filter=False,
-                ).collect()
-            }
-            noidx = {
-                (r["id_a"], r["id_b"], r["jaccard"])
-                for r in D.ngram_jaccard_pairs(
-                    docs, "text", "doc_id", threshold=threshold,
-                    hashed=hashed, prefix_filter=True,
-                    index_prefix_filter=False,
-                ).collect()
-            }
             assert pref == naive, (threshold, hashed, pref ^ naive)
-            assert nopos == naive, (threshold, hashed, nopos ^ naive)
-            assert noidx == naive, (threshold, hashed, noidx ^ naive)
             assert naive  # the fixture must actually produce pairs
 
 
@@ -1984,7 +1964,8 @@ def test_minhash_edge_clustering_matches_exact_path(spark):
 
     SCALE.md routes corpus-grain dedup clustering at 100 TB through
     MinHash-LSH edges -> connected components (measured 1.55x/doubling
-    to sf6.4, tools/octave_ab.py::_q99_minhash_edges) while the
+    to sf6.4 with the builder in ``git show 56ab0f9:tools/octave_ab.py``;
+    the protocol is now tools/perf.py) while the
     registered q99 uses exact-Jaccard edges as the oracle-able
     validator.  This pins the production composition's OUTPUT, not just
     its components: on a planted corpus of identical-text clusters

@@ -15,7 +15,7 @@ at a size threshold) and measures:
   the eventdump STREAM through a global count into a memory sink,
   stopped when the count reaches the staged row total (the fuzz family
   M protocol), interleaved A B A B per round so host drift cancels in
-  the per-round ratio (octave_ab protocol).
+  the per-round ratio (the tools/perf.py protocol).
 
 DRAIN PROTOCOL NOTE: the first r11 attempt used Trigger.AvailableNow +
 noop, which silently consumed ONE read window (maxFilesPerTrigger

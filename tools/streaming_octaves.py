@@ -10,7 +10,7 @@ for the three stateful families:
   worst-case per-event path);
 - streaming CEP NFA    — applyInPandasWithState with pattern state.
 
-Protocol: same interleaved A/B/.../N shape as tools/octave_ab.py — all
+Protocol: the interleaved shape of tools/perf.py, widened to N sides — all
 octaves of one operator run inside each round back-to-back in one warm
 session, so host drift multiplies every octave equally and per-round
 ratios stay clean.  Staging cost is excluded (measured once, reported

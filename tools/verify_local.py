@@ -7,7 +7,9 @@ DuckDB oracle the driver's way: row count, schema arity, and an
 order-insensitive value compare after sorting columns by name.
 
 Usage: python tools/verify_local.py [sf_dir] [query ...]
-Writes tools/verify_local_out.json and prints one line per query.
+Writes tools/verify_local_out.json and prints one line per query.  A
+run over named queries merges its entries into
+tools/verify_local_out[_<sf>]_partial.json instead (see write_results).
 """
 
 from __future__ import annotations
@@ -36,6 +38,29 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         return df.reset_index(drop=True)
     order = df.astype(str).sort_values(by=list(df.columns)).index
     return df.loc[order].reset_index(drop=True)
+
+
+def str_equal(got: pd.DataFrame, want: pd.DataFrame) -> bool:
+    """Oracle-gate compare of two ``canon`` frames: stringify both and
+    demand equality.  A dtype-lenient compare let 600.0 == 600 pass
+    while the gate's stringified value hash sees "600.0" != "600" (the
+    DuckDB SUM(BIGINT)->HUGEINT->float64 class)."""
+    gs, ws = got.astype(str), want.astype(str)
+    return gs.shape == ws.shape and gs.equals(ws)
+
+
+def write_results(out: str, results: dict, meta: dict, partial: bool) -> None:
+    """Write ``results`` and ``__meta__`` to ``out``.  A subset run merges
+    into the file already there: re-run names are replaced, every other
+    entry is kept and ``__meta__`` is refreshed.  A full run rewrites it."""
+    merged: dict = {}
+    if partial and os.path.exists(out):
+        with open(out) as fh:
+            merged = json.load(fh)
+    merged.update(results)
+    merged["__meta__"] = meta
+    with open(out, "w") as fh:
+        json.dump(merged, fh, indent=1, sort_keys=True)
 
 
 def main() -> None:
@@ -83,14 +108,9 @@ def main() -> None:
                 rec["oracle_rows"] = len(want)
                 rec["rows_match"] = len(got) == len(want)
                 rec["schema_match"] = list(got.columns) == list(want.columns)
-                # Driver-strength compare: stringify both frames and demand
-                # byte equality. check_dtype=False let 600.0 == 600 pass for
-                # two rounds while the driver's stringified value hash
-                # (which sees "600.0" != "600") failed — the DuckDB
-                # SUM(BIGINT)->HUGEINT->float64 class (r5 verdict #2).
-                gs, ws = got.astype(str), want.astype(str)
-                rec["hash_match"] = gs.shape == ws.shape and gs.equals(ws)
+                rec["hash_match"] = str_equal(got, want)
                 if not rec["hash_match"]:
+                    gs, ws = got.astype(str), want.astype(str)
                     dt = [
                         f"{c}: spark={got[c].dtype} oracle={want[c].dtype}"
                         for c in got.columns
@@ -127,20 +147,17 @@ def main() -> None:
     if only:
         suffix += "_partial"
     out = os.path.join(REPO, "tools", f"verify_local_out{suffix}.json")
-    results["__meta__"] = {  # type: ignore[assignment]
-        "duckdb_version": duckdb.__version__,
-        "sf_dir": sf_dir,
-    }
-    with open(out, "w") as fh:
-        json.dump(results, fh, indent=1, sort_keys=True)
-    n_fail = sum(
-        1 for k, r in results.items()
-        if k != "__meta__" and (
-            r["err"] or r["rows_match"] is False
-            or r["hash_match"] is False or r["schema_match"] is False
-        )
+    write_results(
+        out, results,
+        {"duckdb_version": duckdb.__version__, "sf_dir": sf_dir},
+        partial=bool(only),
     )
-    print(f"# {len(results) - 1} queries, {n_fail} failing "
+    n_fail = sum(
+        1 for r in results.values()
+        if r["err"] or r["rows_match"] is False
+        or r["hash_match"] is False or r["schema_match"] is False
+    )
+    print(f"# {len(results)} queries, {n_fail} failing "
           f"(duckdb {duckdb.__version__}) -> {out}")
     spark.stop()
 
