@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import pytest
 
+from tools.verify_local import canon, mismatch, str_equal
+
 CORE = [
     "q82_spell_cast_vectorized",
     "q83_grouped_agg_udf",
@@ -34,45 +36,22 @@ CORE = [
 BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def _canon(df):
-    df = df.reindex(sorted(df.columns), axis=1).astype(str)
-    if len(df) == 0:
-        return df.reset_index(drop=True)
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", CORE)
 def test_batch_size_invariant(spark, sf_dir, name):
     import sanctum_spark.queries as qreg
 
     qreg.load_all_modules()
     q = qreg.REGISTRY[name]
-    base = _canon(q.fn(spark, sf_dir).toPandas())
+    base = canon(q.fn(spark, sf_dir).toPandas())
     saved = spark.conf.get(BATCH_KEY)
     spark.conf.set(BATCH_KEY, "7")
     try:
-        tiny = _canon(q.fn(spark, sf_dir).toPandas())
+        tiny = canon(q.fn(spark, sf_dir).toPandas())
     finally:
         spark.conf.set(BATCH_KEY, saved)
-    if not base.equals(tiny):
-        # Likelier failure mode is same row count with diverging values;
-        # surface the first differing rows, not just the counts (ADVICE r7).
-        base_rows = {tuple(map(repr, t)) for t in base.itertuples(index=False)}
-        tiny_rows = {tuple(map(repr, t)) for t in tiny.itertuples(index=False)}
-        only_base = sorted(base_rows - tiny_rows)[:5]
-        only_tiny = sorted(tiny_rows - base_rows)[:5]
-        if only_base or only_tiny:
-            detail = (
-                f"first rows only at default batch: {only_base}; "
-                f"first rows only at batch=7: {only_tiny}"
-            )
-        else:
-            # Same row multiset — the divergence is ordering/dtype-level.
-            detail = (
-                f"row sets equal; dtypes default={list(base.dtypes)} "
-                f"vs batch7={list(tiny.dtypes)}"
-            )
-        raise AssertionError(
-            f"{name} is batch-size-dependent: {len(base)} vs {len(tiny)} "
-            f"rows; {detail}"
-        )
+    # mismatch names the first rows held by one side only, not just the
+    # counts: the likelier failure is equal counts with diverging values
+    assert str_equal(base, tiny), (
+        f"{name} is batch-size-dependent (default vs batch=7): "
+        f"{mismatch(base, tiny)}"
+    )

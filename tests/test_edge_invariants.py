@@ -4,20 +4,23 @@ the exact boundary — a class of exactly k rows, a click landing exactly
 on the CEP deadline, an SCD2 interval left open — is where Spark and the
 DuckDB oracle could silently disagree.  Each test writes a crafted
 events.parquet, runs the REGISTERED Spark query and its REGISTERED
-oracle SQL on the same file, compares driver-style (columns sorted by
-name, rows sorted by stringified values, string equality), and then pins
-the expected rows so both engines being wrong together is also caught.
+oracle SQL on the same file through ``_both``, which returns both sides
+as the oracle gate's stringified canon frames (``tools/verify_local.py``:
+columns sorted by name, rows sorted by stringified values; the oracle's
+views are the table files present in the crafted dir), compares them,
+and then pins the expected rows so both engines being wrong together is
+also caught.  The later batches (``_b3``..``_b15``) reuse ``_both``.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 import sanctum_spark.queries as qreg
+from tools.verify_local import canon, oracle_con
 
 qreg.load_all_modules()
 
@@ -49,9 +52,14 @@ def _write_events(tmp_path, rows):
 
 
 def _both(spark, sf_dir, name):
-    """(spark_df, oracle_df) for a registered events-table query over a
-    crafted dir — see :func:`_both_tbl`."""
-    return _both_tbl(spark, sf_dir, name, "events")
+    """(spark, oracle) stringified ``canon`` frames of a registered query
+    over a crafted dir; the oracle sees one view per table file present
+    there (``oracle_con``)."""
+    q = qreg.REGISTRY[name]
+    got = canon(q.fn(spark, sf_dir).toPandas())
+    with oracle_con(sf_dir) as con:
+        want = canon(con.sql(q.oracle).df())
+    return got.astype(str), want.astype(str)
 
 
 def test_q163_q164_threshold_edges(spark, tmp_path):
@@ -228,28 +236,6 @@ def _write_lineitem(tmp_path, prices):
     return str(tmp_path)
 
 
-def _both_tbl(spark, sf_dir, name, table):
-    """Like _both but for a non-events fixture; ``table`` is one view
-    name or a list of names (queries joining several fixtures)."""
-    q = qreg.REGISTRY[name]
-    got = q.fn(spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    for t in [table] if isinstance(table, str) else table:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    want = con.sql(q.oracle).df()
-
-    def canon(df: pd.DataFrame) -> pd.DataFrame:
-        df = df.reindex(sorted(df.columns), axis=1).astype(str)
-        if len(df) == 0:
-            return df.reset_index(drop=True)
-        return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
-    return canon(got), canon(want)
-
-
 def test_q151_chi2_zero_on_independent_table(spark, tmp_path):
     """A contingency table with exact row/column independence (every
     cell o == r*c/n) must give chi2 == 0 on both engines — the dow
@@ -278,7 +264,7 @@ def test_q154_benford_price_boundary(spark, tmp_path):
     (price 1.0 contributes digit 1, price 0.5 is excluded), and digit
     shares are exact at a tiny grain."""
     sf = _write_lineitem(tmp_path, [0.5, 1.0, 1.5, 19.99, 100.0, 9.0])
-    got, want = _both_tbl(spark, sf, "q154_benford_digits", "lineitem")
+    got, want = _both(spark, sf, "q154_benford_digits")
     pd.testing.assert_frame_equal(got, want)
     by_digit = {r["digit"]: r for _, r in got.iterrows()}
     assert set(by_digit) == {"1", "9"}
@@ -302,7 +288,7 @@ def test_q155_reservoir_weight_and_ties(spark, tmp_path):
         (5, "other doc", "de", "s", 50),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q155_weighted_reservoir", "documents")
+    got, want = _both(spark, sf, "q155_weighted_reservoir")
     pd.testing.assert_frame_equal(got, want)
     en = (
         got[got["lang"] == "en"]
@@ -355,9 +341,9 @@ def test_q157_manifest_detects_substitution(spark, tmp_path):
                  for r in clean]
     sf_b = _write_docs(d_b, corrupted)
 
-    got_a, want_a = _both_tbl(spark, sf_a, "q157_shard_manifest", "documents")
+    got_a, want_a = _both(spark, sf_a, "q157_shard_manifest")
     pd.testing.assert_frame_equal(got_a, want_a)
-    got_b, want_b = _both_tbl(spark, sf_b, "q157_shard_manifest", "documents")
+    got_b, want_b = _both(spark, sf_b, "q157_shard_manifest")
     pd.testing.assert_frame_equal(got_b, want_b)
     # same total docs, different manifests
     assert got_a["n_docs"].astype(int).sum() == got_b["n_docs"].astype(int).sum()
@@ -376,7 +362,7 @@ def test_q162_bm25_null_text_rows(spark, tmp_path):
         (5, "partition pruning with spark", "en", "s", 28),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q162_bm25_topk", "documents")
+    got, want = _both(spark, sf, "q162_bm25_topk")
     pd.testing.assert_frame_equal(got, want)
     assert "3" not in set(got["doc_id"])
     assert len(got) == 3  # docs 1, 2, 5 match at least one term

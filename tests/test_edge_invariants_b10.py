@@ -16,7 +16,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from test_edge_invariants import _both_tbl, _write_docs
+from test_edge_invariants import _both, _write_docs
 
 CJK = "漢字テキストに空白なし"
 EMOJI = "emoji 👨‍👩‍👧‍👦 text 🎉 done"
@@ -40,7 +40,7 @@ def test_q90_unicode_byte_counts(spark, tmp_path):
     the UTF-8 conversion Spark performs, and n_bytes now pins the
     UTF-8 byte length (CJK chars are 3 bytes, the ZWJ family 25)."""
     sf = _uni_docs(tmp_path)
-    got, want = _both_tbl(spark, sf, "q90_multimodal_features", "documents")
+    got, want = _both(spark, sf, "q90_multimodal_features")
     pd.testing.assert_frame_equal(got, want)
     n_bytes = dict(zip(got["media_id"], got["n_bytes"]))
     assert n_bytes["1"] == str(len(CJK.encode()))
@@ -55,9 +55,9 @@ def test_unicode_through_text_family(spark, tmp_path):
     sf = _uni_docs(tmp_path)
     for name in ("q77_text_profile", "q92_corpus_clean", "q106_tfidf_terms",
                  "q110_context_chunks", "q122_lm_score"):
-        got, want = _both_tbl(spark, sf, name, "documents")
+        got, want = _both(spark, sf, name)
         pd.testing.assert_frame_equal(got, want, obj=name)
-    got, _ = _both_tbl(spark, sf, "q77_text_profile", "documents")
+    got, _ = _both(spark, sf, "q77_text_profile")
     n_tokens = dict(zip(got["doc_id"], got["n_tokens"]))
     assert n_tokens["1"] == "1"  # CJK: no ASCII whitespace -> one token
     assert n_tokens["4"] == "1"  # NBSP is not a \s separator
@@ -121,9 +121,9 @@ def test_degenerate_embeddings_family(spark, tmp_path):
     for name in ("q33_explode_positions", "q43_array_manipulation",
                  "q54_array_functions", "q96_array_higher_order",
                  "q73_cosine_topk"):
-        got, want = _both_tbl(spark, sf, name, "embeddings")
+        got, want = _both(spark, sf, name)
         pd.testing.assert_frame_equal(got, want, obj=name)
-    got, _ = _both_tbl(spark, sf, "q43_array_manipulation", "embeddings")
+    got, _ = _both(spark, sf, "q43_array_manipulation")
     by_id = {r["vec_id"]: r for _, r in got.iterrows()}
     assert by_id["22"]["smallest_head"] in ("nan", "None")  # empty: NULL
     assert by_id["23"]["largest_head"] in ("nan", "None")   # ragged: idx 5

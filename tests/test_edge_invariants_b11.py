@@ -8,9 +8,9 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from test_edge_invariants import _both_tbl
+from test_edge_invariants import _both
 from test_edge_invariants_b3 import _write_part
-from test_edge_invariants_b4 import _both_multi, _write_orders
+from test_edge_invariants_b4 import _write_orders
 from test_edge_invariants_b6 import _write_customer_fk
 
 
@@ -25,9 +25,7 @@ def test_q11_not_in_null_trap(spark, tmp_path):
         tmp_path,
         [(10, 1, "O", 1.0, d), (11, None, "O", 1.0, d)],  # NULL o_custkey
     )
-    got, want = _both_multi(
-        spark, str(tmp_path), "q11_anti_join", ["customer", "orders"]
-    )
+    got, want = _both(spark, str(tmp_path), "q11_anti_join")
     pd.testing.assert_frame_equal(got, want)
     assert set(got["c_custkey"]) == {"2", "3"}
 
@@ -42,12 +40,12 @@ def test_q50_q53_null_concat_semantics(spark, tmp_path):
         [(1, "cat", "B1", "T1"), (2, None, None, None)],
     )
     for name in ("q50_scalar_functions", "q53_string_functions"):
-        got, want = _both_tbl(spark, str(tmp_path), name, "part")
+        got, want = _both(spark, str(tmp_path), name)
         pd.testing.assert_frame_equal(got, want, obj=name)
-    got, _ = _both_tbl(spark, str(tmp_path), "q50_scalar_functions", "part")
+    got, _ = _both(spark, str(tmp_path), "q50_scalar_functions")
     by_key = {r["p_partkey"]: r for _, r in got.iterrows()}
     assert by_key["2"]["brand_type"] == ":"
-    got, _ = _both_tbl(spark, str(tmp_path), "q53_string_functions", "part")
+    got, _ = _both(spark, str(tmp_path), "q53_string_functions")
     by_key = {r["p_partkey"]: r for _, r in got.iterrows()}
     assert by_key["2"]["trimmed_type"] == ""
     assert by_key["2"]["mixed_case"] in ("None", "nan")
@@ -67,9 +65,7 @@ def test_q128_null_dimension_excluded(spark, tmp_path):
             (4, 6, "O", 1.0, d("1992-02-02")),
         ],
     )
-    got, want = _both_multi(
-        spark, str(tmp_path), "q128_zorder_key", ["orders"]
-    )
+    got, want = _both(spark, str(tmp_path), "q128_zorder_key")
     pd.testing.assert_frame_equal(got, want)
     assert set(got["o_orderkey"]) == {"1", "4"}
 

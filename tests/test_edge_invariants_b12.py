@@ -19,9 +19,7 @@ defects random table composition surfaced that no crafted fixture had:
    e4 BIGINT pin — now all-NULL-value days are excluded on both
    engines.
 
-Same discipline as batches 1-11: crafted fixture -> registered Spark
-query AND registered oracle on the same files -> driver-style string
-compare -> pinned expected rows.
+Same discipline as batches 1-2 (test_edge_invariants.py, ``_both``).
 """
 
 from __future__ import annotations
@@ -31,7 +29,7 @@ import json
 import pandas as pd
 import pytest
 
-from test_edge_invariants import US, _both, _both_tbl, _write_docs, _write_events
+from test_edge_invariants import US, _both, _write_docs, _write_events
 
 T0 = 1_700_000_000 * US
 HOUR = 3600 * US
@@ -51,7 +49,7 @@ def test_null_text_docs_never_pair(spark, tmp_path):
         (3, a, "en", "s", len(a)),  # identical but 3 % 4 != 0: out of slice
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q91_ngram_jaccard", "documents")
+    got, want = _both(spark, sf, "q91_ngram_jaccard")
     pd.testing.assert_frame_equal(got, want)
     assert got[["id_a", "id_b"]].values.tolist() == [["16", "20"]]
 
@@ -70,14 +68,14 @@ def test_null_text_docs_cluster_as_singletons(spark, tmp_path):
         (6, b, "en", "s", len(b)),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q99_dedup_clusters", "documents")
+    got, want = _both(spark, sf, "q99_dedup_clusters")
     pd.testing.assert_frame_equal(got, want)
     # no NULL doc id may share a cluster with another doc
     clusters = got.groupby("cluster_id")["doc_id"].apply(set)
     for members in clusters:
         assert not ({"3", "4", "5"} & members and len(members) > 1)
 
-    got, want = _both_tbl(spark, sf, "q158_quality_keeper", "documents")
+    got, want = _both(spark, sf, "q158_quality_keeper")
     pd.testing.assert_frame_equal(got, want)
 
 

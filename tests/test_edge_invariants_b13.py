@@ -22,9 +22,7 @@ generated, and NULL-vector dim inference:
    embedding could land in head and crash len(None).  Dim now comes
    from the first NON-NULL vector.
 
-Same discipline as batches 1-12: crafted fixture -> registered Spark
-query AND registered oracle on the same files -> driver-style string
-compare -> pinned expected rows.
+Same discipline as batches 1-2 (test_edge_invariants.py, ``_both``).
 """
 
 from __future__ import annotations

@@ -17,7 +17,7 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 
-from test_edge_invariants import _both_tbl, _write_docs
+from test_edge_invariants import _both, _write_docs
 from test_edge_invariants_b3 import _write_part
 
 
@@ -69,7 +69,7 @@ def test_q115_multibyte_vocab_oracle_parity(spark, tmp_path):
         (3, "naïve naive plain", "en", "s", 17),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q115_fuzzy_vocab", "documents")
+    got, want = _both(spark, sf, "q115_fuzzy_vocab")
     pd.testing.assert_frame_equal(got, want)
     pairs = {
         (r["w1"], r["w2"]): r["dist"] for _, r in got.iterrows()
@@ -91,7 +91,7 @@ def test_q161_multibyte_names_oracle_parity(spark, tmp_path):
         (5, "café blend dark", "B2", "roast"),   # other block -> own entity
     ]
     sf = _write_part(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q161_entity_resolution", "part")
+    got, want = _both(spark, sf, "q161_entity_resolution")
     pd.testing.assert_frame_equal(got, want)
     by_entity = {
         r["entity_id"]: int(float(r["n_records"])) for _, r in got.iterrows()

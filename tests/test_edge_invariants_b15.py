@@ -22,7 +22,7 @@ import datetime
 import pandas as pd
 from pyspark.sql import functions as F
 
-from test_edge_invariants import _both_tbl
+from test_edge_invariants import _both
 
 
 def test_hashed_word_windows_null_text_with_cap(spark):
@@ -102,7 +102,7 @@ def test_round_half_boundary_and_signed_zero(spark, tmp_path):
         "props": pa.array([None] * len(rows), pa.string()),
     }), f"{sf}/events.parquet")
     for name in ("q60_topic_routing", "q148_trailing_range_frame"):
-        got, want = _both_tbl(spark, sf, name, "events")
+        got, want = _both(spark, sf, name)
         pd.testing.assert_frame_equal(got, want)
 
     # q50: 2-decimal retail prices whose x1.1 product prints as .xx5
@@ -114,5 +114,5 @@ def test_round_half_boundary_and_signed_zero(spark, tmp_path):
         "p_size": pa.array([5, 30], pa.int32()),
         "p_retailprice": pa.array([1148.85, 104.05], pa.float64()),
     }), f"{sf}/part.parquet")
-    got, want = _both_tbl(spark, sf, "q50_scalar_functions", "part")
+    got, want = _both(spark, sf, "q50_scalar_functions")
     pd.testing.assert_frame_equal(got, want)

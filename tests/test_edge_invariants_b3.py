@@ -9,12 +9,7 @@ drop semantics at the exact 5-gram boundary (q159), transitive-closure
 and length-delta edges in entity resolution (q161), and the calendar
 week boundary of the binned range join (q130).
 
-Same discipline as batches 1-2 (test_edge_invariants.py): each test
-writes a crafted fixture, runs the REGISTERED Spark query and its
-REGISTERED oracle SQL on the same file, compares driver-style
-(columns sorted by name, rows sorted by stringified values, string
-equality), then pins the expected rows so both engines being wrong
-together is also caught.
+Same discipline as batches 1-2 (test_edge_invariants.py, ``_both``).
 """
 
 from __future__ import annotations
@@ -26,7 +21,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _both_tbl, _write_docs, _write_events
+from test_edge_invariants import US, _both, _write_docs, _write_events
 
 
 def _write_embeddings(tmp_path, rows):
@@ -75,7 +70,7 @@ def test_q131_merge_with_absent_groups(spark, tmp_path):
         (7, "x", "pt", "s", 2),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q131_incremental_agg", "documents")
+    got, want = _both(spark, sf, "q131_incremental_agg")
     pd.testing.assert_frame_equal(got, want)
     by_lang = {r["lang"]: r for _, r in got.iterrows()}
     assert by_lang["fr"][["n_docs", "total_chars", "max_chars", "avg_chars_e2"]].tolist() == ["1", "7", "7", "700"]
@@ -92,7 +87,7 @@ def test_q141_entropy_degenerate_and_uniform(spark, tmp_path):
     d1 = tmp_path / "single"
     d1.mkdir()
     sf1 = _write_docs(d1, [(1, "a b c d", "en", "s1", 7)])
-    got, want = _both_tbl(spark, sf1, "q141_mix_entropy", "documents")
+    got, want = _both(spark, sf1, "q141_mix_entropy")
     pd.testing.assert_frame_equal(got, want)
     row = got.iloc[0]
     assert row["tokens"] == "4"
@@ -109,7 +104,7 @@ def test_q141_entropy_degenerate_and_uniform(spark, tmp_path):
             (3, "g h", "en", "s2", 3),
         ],
     )
-    got, want = _both_tbl(spark, sf2, "q141_mix_entropy", "documents")
+    got, want = _both(spark, sf2, "q141_mix_entropy")
     pd.testing.assert_frame_equal(got, want)
     assert set(got["share_e6"]) == {"500000"}
     assert set(got["mix_entropy_e6"]) == {"693147"}
@@ -131,7 +126,7 @@ def test_q142_shingle_window_and_cap_edges(spark, tmp_path):
         (6, long_text, "en", "F", len(long_text)),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q142_cross_source_overlap", "documents")
+    got, want = _both(spark, sf, "q142_cross_source_overlap")
     pd.testing.assert_frame_equal(got, want)
     pairs = {
         (r["src_a"], r["src_b"]): (r["n_shared"], r["containment_a"])
@@ -158,7 +153,7 @@ def test_q144_segment_boundaries(spark, tmp_path):
         (4, " ".join(f"v{i}" for i in range(21)), "en", "s", 60),  # 3 segs
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q144_segment_dedup", "documents")
+    got, want = _both(spark, sf, "q144_segment_dedup")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
     assert by_doc["1"][["n_segments", "n_dup_segments"]].tolist() == ["1", "0"]
@@ -180,7 +175,7 @@ def test_q146_cluster_cosine_identity_tie_and_zero(spark, tmp_path):
         (7, [1.0, 0.0], 3), (8, [0.0, 0.0], 3),   # zero vec in a pair
     ]
     sf = _write_embeddings(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q146_embedding_clusters", "embeddings")
+    got, want = _both(spark, sf, "q146_embedding_clusters")
     pd.testing.assert_frame_equal(got, want)
     by_label = {r["label"]: r for _, r in got.iterrows()}
     assert by_label["0"][["n_vecs", "rep_vec_id", "rep_cos", "mean_cos", "min_cos"]].tolist() == ["3", "1", "1.0", "1.0", "1.0"]
@@ -271,7 +266,7 @@ def test_q159_leakage_drop_semantics(spark, tmp_path):
         for i, txt in enumerate([t1, t2, c1, c2, c3, c4, c5])
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q159_leakage_free_split", "documents")
+    got, want = _both(spark, sf, "q159_leakage_free_split")
     pd.testing.assert_frame_equal(got, want)
     split = dict(zip(got["doc_id"], got["split"]))
     assert split == {
@@ -295,7 +290,7 @@ def test_q161_transitive_closure_and_blocking(spark, tmp_path):
         (7, "dogs", "B1", "T1"),  # length-delta exactly 1
     ]
     sf = _write_part(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q161_entity_resolution", "part")
+    got, want = _both(spark, sf, "q161_entity_resolution")
     pd.testing.assert_frame_equal(got, want)
     by_ent = {r["entity_id"]: r for _, r in got.iterrows()}
     assert by_ent["1"][["n_records", "n_names", "canonical_name"]].tolist() == ["3", "3", "cab"]

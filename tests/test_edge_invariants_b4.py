@@ -8,9 +8,7 @@ incremental-dedup suppression rules (q120), column profiling with NULLs
 exact +100%/-50% growth (q138), and zero-MAD and NULL-type outlier
 semantics (q145).
 
-Same discipline as batches 1-3: crafted fixture -> registered Spark
-query AND registered oracle SQL on the same file -> driver-style string
-compare -> pinned expected rows.
+Same discipline as batches 1-2 (test_edge_invariants.py, ``_both``).
 """
 
 from __future__ import annotations
@@ -22,13 +20,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _both_tbl, _write_docs, _write_events
-
-
-def _both_multi(spark, sf_dir, name, tables):
-    """Alias of test_edge_invariants._both_tbl with a view list (kept
-    for the batch 5-8 imports)."""
-    return _both_tbl(spark, sf_dir, name, tables)
+from test_edge_invariants import US, _both, _write_docs, _write_events
 
 
 _NULLISH = {"nan", "None", "<NA>", "NaT"}
@@ -74,7 +66,7 @@ def test_q63_asof_tie_and_no_match(spark, tmp_path):
             (31, 9, "F", 10.0, d("2024-01-01")),  # order for an absent user
         ],
     )
-    got, want = _both_multi(spark, str(tmp_path), "q63_asof_join", ["events", "orders"])
+    got, want = _both(spark, str(tmp_path), "q63_asof_join")
     pd.testing.assert_frame_equal(got, want)
     by_ev = dict(zip(got["event_id"], got["last_orderkey"]))
     assert by_ev["1"] == "12.0" or by_ev["1"] == "12"
@@ -98,7 +90,7 @@ def test_q91_jaccard_threshold_edge(spark, tmp_path):
         (5, a, "en", "s", len(a)),  # identical to a but 5%4 != 0: ignored
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q91_ngram_jaccard", "documents")
+    got, want = _both(spark, sf, "q91_ngram_jaccard")
     pd.testing.assert_frame_equal(got, want)
     assert len(got) == 1
     assert got.iloc[0][["id_a", "id_b", "jaccard"]].tolist() == ["4", "8", "0.4"]
@@ -140,7 +132,7 @@ def test_q104_containment_threshold_edge(spark, tmp_path):
         (2, doc_b, "en", "s", len(doc_b)),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q104_decontamination", "documents")
+    got, want = _both(spark, sf, "q104_decontamination")
     pd.testing.assert_frame_equal(got, want)
     assert len(got) == 1
     assert got.iloc[0][["doc_id", "n_overlap", "containment"]].tolist() == ["1", "1", "0.05"]
@@ -159,7 +151,7 @@ def test_q120_incremental_dedup_suppression(spark, tmp_path):
         (12, "fresh text", "en", "s", 10),   # new, unique -> kept
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q120_incremental_dedup", "documents")
+    got, want = _both(spark, sf, "q120_incremental_dedup")
     pd.testing.assert_frame_equal(got, want)
     md5 = lambda t: hashlib.md5(t.encode()).hexdigest()
     kept = dict(zip(got["doc_id"], got["digest"]))
@@ -180,7 +172,7 @@ def test_q132_column_stats_with_nulls(spark, tmp_path):
             (4, 7, "F", 7.25, d),
         ],
     )
-    got, want = _both_multi(spark, str(tmp_path), "q132_column_stats", ["orders"])
+    got, want = _both(spark, str(tmp_path), "q132_column_stats")
     pd.testing.assert_frame_equal(got, want)
     by_col = {r["col_name"]: r for _, r in got.iterrows()}
     ck = by_col["o_custkey"]

@@ -6,9 +6,7 @@ winsorize clip boundaries (q116), the u16-vs-w*65536 sampling edge one
 unit either side (q126), and the exclusive-lower / inclusive-upper
 trailing activity windows (q139).
 
-Same discipline as batches 1-4: crafted fixture -> registered Spark
-query AND registered oracle SQL on the same file -> driver-style string
-compare -> pinned expected rows.
+Same discipline as batches 1-2 (test_edge_invariants.py, ``_both``).
 """
 
 from __future__ import annotations
@@ -20,8 +18,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _both_tbl, _write_docs, _write_events
-from test_edge_invariants_b4 import _NULLISH, _both_multi
+from test_edge_invariants import US, _both, _write_docs, _write_events
 
 
 def _write_customer(tmp_path, rows):
@@ -77,7 +74,7 @@ def test_q92_quality_gate_boundaries(spark, tmp_path):
         (6, keep100, "en", "s", 100),  # exact dup of 1 -> dropped
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q92_corpus_clean", "documents")
+    got, want = _both(spark, sf, "q92_corpus_clean")
     pd.testing.assert_frame_equal(got, want)
     assert sorted(got["doc_id"]) == ["1", "4"]
 
@@ -92,7 +89,7 @@ def test_q105_repetition_degenerate_docs(spark, tmp_path):
         (3, "b c d e", "en", "s", 7),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q105_repetition_filter", "documents")
+    got, want = _both(spark, sf, "q105_repetition_filter")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
     assert by_doc["1"][["n_tokens", "dup_token_frac", "top_token_frac"]].tolist() == ["1", "0.0", "1.0"]
@@ -116,9 +113,7 @@ def test_q111_cdc_tombstone_tie_insert(spark, tmp_path):
     ]
     _write_events(tmp_path, ev_rows)
     _write_customer(tmp_path, [(1, 10.0), (2, 20.0), (3, 30.0), (5, 50.0)])
-    got, want = _both_multi(
-        spark, str(tmp_path), "q111_cdc_upsert", ["events", "customer"]
-    )
+    got, want = _both(spark, str(tmp_path), "q111_cdc_upsert")
     pd.testing.assert_frame_equal(got, want)
     by_key = {r["key"]: r for _, r in got.iterrows()}
     assert set(by_key) == {"1", "3", "4", "5"}  # key 2 tombstoned
@@ -156,7 +151,7 @@ def test_q115_length_band_edges(spark, tmp_path):
     band is exact, never lossy."""
     rows = [(1, "a ab abc abcd xyz", "en", "s", 17)]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q115_fuzzy_vocab", "documents")
+    got, want = _both(spark, sf, "q115_fuzzy_vocab")
     pd.testing.assert_frame_equal(got, want)
     pairs = {(r["w1"], r["w2"]): r["dist"] for _, r in got.iterrows()}
     assert pairs == {
@@ -175,7 +170,7 @@ def test_q116_winsorize_clip_boundaries(spark, tmp_path):
     two extremes."""
     rows = [("A", float(v)) for v in range(21)] + [("B", 5.0)] * 4
     sf = _write_lineitem_rf(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q116_winsorize", "lineitem")
+    got, want = _both(spark, sf, "q116_winsorize")
     pd.testing.assert_frame_equal(got, want)
     by_flag = {r["l_returnflag"]: r for _, r in got.iterrows()}
     a = by_flag["A"]
@@ -200,7 +195,7 @@ def test_q126_sampling_edge_one_unit(spark, tmp_path):
         (3, always, "en", "s", 1000),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q126_weighted_sample", "documents")
+    got, want = _both(spark, sf, "q126_weighted_sample")
     pd.testing.assert_frame_equal(got, want)
     kept = dict(zip(got["doc_id"], got["w"]))
     assert kept == {"1": "0.1", "3": "1.0"}

@@ -4,9 +4,7 @@ lateral top-3, q158 quality keeper), strict funnel ordering (q95),
 histogram bin edges (q118), and FK orphan semantics incl. NULL keys
 (q136).
 
-Same discipline as batches 1-5: crafted fixture -> registered Spark
-query AND registered oracle SQL on the same file -> driver-style string
-compare -> pinned expected rows.
+Same discipline as batches 1-2 (test_edge_invariants.py, ``_both``).
 """
 
 from __future__ import annotations
@@ -18,9 +16,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _both_tbl, _write_docs, _write_events
+from test_edge_invariants import US, _both, _write_docs, _write_events
 from test_edge_invariants_b3 import _write_embeddings
-from test_edge_invariants_b4 import _both_multi, _write_orders
+from test_edge_invariants_b4 import _write_orders
 
 
 def _write_customer_fk(tmp_path, rows):
@@ -86,7 +84,7 @@ def test_q73_topk_tie_at_cutoff(spark, tmp_path):
     # DESC), never an ANSI DIVIDE_BY_ZERO — the raw-`/` crash fixed in r6
     rows.append((13, [0.0, 0.0], 1))
     sf = _write_embeddings(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q73_cosine_topk", "embeddings")
+    got, want = _both(spark, sf, "q73_cosine_topk")
     pd.testing.assert_frame_equal(got, want)
     assert len(got) == 10
     ids = set(got["vec_id"])
@@ -133,7 +131,7 @@ def test_q101_top100_cutoff_tie(spark, tmp_path):
     doc2 = "w001 w002"                          # lifts one bigram to 2
     rows = [(1, doc1, "en", "s", len(doc1)), (2, doc2, "en", "s", len(doc2))]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q101_vocab_bigrams", "documents")
+    got, want = _both(spark, sf, "q101_vocab_bigrams")
     pd.testing.assert_frame_equal(got, want)
     assert len(got) == 100
     bigrams = set(got["bigram"])
@@ -154,7 +152,7 @@ def test_q106_idf_zero_and_term_ties(spark, tmp_path):
         (3, "common y1 y2 y3", "en", "s", 15),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q106_tfidf_terms", "documents")
+    got, want = _both(spark, sf, "q106_tfidf_terms")
     pd.testing.assert_frame_equal(got, want)
     ln3 = f"{round(math.log(3) + 1e-9, 6)}"
     d1 = {r["rk"]: (r["term"], r["tfidf"]) for _, r in got.iterrows() if r["doc_id"] == "1"}
@@ -188,9 +186,7 @@ def test_q113_lateral_top3_tie(spark, tmp_path):
             (301, 3, "O", 1.0, d),
         ],
     )
-    got, want = _both_multi(
-        spark, str(tmp_path), "q113_lateral_topk", ["customer", "orders"]
-    )
+    got, want = _both(spark, str(tmp_path), "q113_lateral_topk")
     pd.testing.assert_frame_equal(got, want)
     per_cust = got.groupby("c_custkey")["o_orderkey"].apply(set).to_dict()
     assert per_cust == {
@@ -237,12 +233,7 @@ def test_q136_orphans_including_null_fk(spark, tmp_path):
     )
     _write_lineitem_fk(tmp_path, [10, 10, 99])
     _write_supplier(tmp_path, [(1, 1), (2, 77)])
-    got, want = _both_multi(
-        spark,
-        str(tmp_path),
-        "q136_referential_integrity",
-        ["lineitem", "orders", "customer", "nation", "supplier"],
-    )
+    got, want = _both(spark, str(tmp_path), "q136_referential_integrity")
     pd.testing.assert_frame_equal(got, want)
     orphans = dict(zip(got["fk"], got["n_orphans"]))
     assert orphans == {
@@ -269,7 +260,7 @@ def test_q158_keeper_quality_beats_doc_id(spark, tmp_path):
         (5, "u1 u2 u3 u4 u5", "en", "s", 14),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q158_quality_keeper", "documents")
+    got, want = _both(spark, sf, "q158_quality_keeper")
     pd.testing.assert_frame_equal(got, want)
     by_cluster = {r["cluster_id"]: r for _, r in got.iterrows()}
     assert by_cluster["1"][["cluster_size", "keeper_doc_id"]].tolist() == ["2", "2"]

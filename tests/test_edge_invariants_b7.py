@@ -6,9 +6,7 @@ int64 cross-multiplied rebalance cut one u16 unit either side (q127),
 and the strict 30-minute session gap with the 20-step sequence cap
 (q140).
 
-Same discipline as batches 1-6: crafted fixture -> registered Spark
-query AND registered oracle SQL on the same file -> driver-style string
-compare -> pinned expected rows.
+Same discipline as batches 1-2 (test_edge_invariants.py, ``_both``).
 """
 
 from __future__ import annotations
@@ -19,7 +17,7 @@ import math
 import pandas as pd
 import pytest
 
-from test_edge_invariants import US, _both, _both_tbl, _write_docs, _write_events
+from test_edge_invariants import US, _both, _write_docs, _write_events
 
 
 def test_q108_pack_boundary_and_block_prefix(spark, tmp_path):
@@ -34,7 +32,7 @@ def test_q108_pack_boundary_and_block_prefix(spark, tmp_path):
         (130, "x", "en", "s", 1),                    # cum 1112 -> pack 2
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q108_sequence_packing", "documents")
+    got, want = _both(spark, sf, "q108_sequence_packing")
     pd.testing.assert_frame_equal(got, want)
     by_pack = {r["pack_id"]: r for _, r in got.iterrows()}
     assert by_pack["0"][["n_docs", "pack_tokens", "first_doc", "last_doc"]].tolist() == ["1", "512", "1", "1"]
@@ -55,7 +53,7 @@ def test_q110_chunk_grid_remainders(spark, tmp_path):
         (4, "solo", "en", "s", 1),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q110_context_chunks", "documents")
+    got, want = _both(spark, sf, "q110_context_chunks")
     pd.testing.assert_frame_equal(got, want)
     sizes = {
         (r["doc_id"], r["chunk_idx"]): r["n_chunk_tokens"]
@@ -82,7 +80,7 @@ def test_q122_lm_smoothing_extremes(spark, tmp_path):
         (15, "cc", "en", "s", 2),     # held-out, below trigram length
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q122_lm_score", "documents")
+    got, want = _both(spark, sf, "q122_lm_score")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
     assert set(by_doc) == {"5", "10"}
@@ -108,7 +106,7 @@ def test_q124_shard_assignment_and_order(spark, tmp_path):
         (4, t14, "en", "s", len(t14)),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q124_train_shards", "documents")
+    got, want = _both(spark, sf, "q124_train_shards")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
     assert by_doc["4"]["shard"] == "15"
@@ -131,7 +129,7 @@ def test_q127_rebalance_cut_one_unit(spark, tmp_path):
         (3, "the smallest language doc", "mn", "s", 25),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q127_domain_mix", "documents")
+    got, want = _both(spark, sf, "q127_domain_mix")
     pd.testing.assert_frame_equal(got, want)
     assert dict(zip(got["lang"], got["n_kept"])) == {"big": "1", "mn": "1"}
 

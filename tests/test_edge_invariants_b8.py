@@ -7,9 +7,7 @@ PII pattern boundaries (q123), transitive dedup clusters (q99), the
 UDTF empty-token filter (q133), and the datasheet's fractional median
 (q160, the BIGINT-cast rounding divergence this batch fixed).
 
-Same discipline as batches 1-7: crafted fixture -> registered Spark
-query AND registered oracle SQL on the same file -> driver-style string
-compare -> pinned expected rows.
+Same discipline as batches 1-2 (test_edge_invariants.py, ``_both``).
 """
 
 from __future__ import annotations
@@ -22,7 +20,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _both_tbl, _write_docs, _write_events
+from test_edge_invariants import US, _both, _write_docs, _write_events
 from test_edge_invariants_b4 import _NULLISH
 
 HOUR = 3600 * US
@@ -124,7 +122,7 @@ def test_q107_perfect_line_and_constant_x(spark, tmp_path):
         ("C", 5.0, 1.0), ("C", 5.0, 2.0), ("C", 5.0, 3.0),
     ]
     sf = _write_lineitem_qty(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q107_regression_aggs", "lineitem")
+    got, want = _both(spark, sf, "q107_regression_aggs")
     pd.testing.assert_frame_equal(got, want)
     by_flag = {r["l_returnflag"]: r for _, r in got.iterrows()}
     l = by_flag["L"]
@@ -173,7 +171,7 @@ def test_q123_pii_pattern_boundaries(spark, tmp_path):
         (5, "wrapped (a@b.co). done", "en", "s", 22),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q123_pii_scrub", "documents")
+    got, want = _both(spark, sf, "q123_pii_scrub")
     pd.testing.assert_frame_equal(got, want)
     counts = {
         r["doc_id"]: (r["n_email"], r["n_ip"], r["n_phone"])
@@ -202,7 +200,7 @@ def test_q99_transitive_cluster_excludes_singletons(spark, tmp_path):
         (4, "z1 z2 z3 z4 z5", "en", "s", 14),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q99_dedup_clusters", "documents")
+    got, want = _both(spark, sf, "q99_dedup_clusters")
     pd.testing.assert_frame_equal(got, want)
     assert dict(zip(got["doc_id"], got["cluster_id"])) == {"1": "1", "2": "1", "3": "1"}
     assert set(got["cluster_size"]) == {"3"}
@@ -218,7 +216,7 @@ def test_q133_udtf_empty_token_filter(spark, tmp_path):
         (5, "not in slice", "en", "s", 12),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q133_lateral_udtf", "documents")
+    got, want = _both(spark, sf, "q133_lateral_udtf")
     pd.testing.assert_frame_equal(got, want)
     assert [tuple(r) for _, r in got[["doc_id", "pos", "token"]].iterrows()] in (
         [("20", "1", "a"), ("20", "2", "b")],
@@ -241,7 +239,7 @@ def test_q160_fractional_median_floor(spark, tmp_path):
         (4, "e1 e2 e3 e4 e5 e6", "de", "s2", 17),
     ]
     sf = _write_docs(d_frac, frac_rows)
-    got, want = _both_tbl(spark, sf, "q160_corpus_datasheet", "documents")
+    got, want = _both(spark, sf, "q160_corpus_datasheet")
     pd.testing.assert_frame_equal(got, want)
     row = got.iloc[0]
     assert row[["n_docs", "n_tokens", "p50_tokens"]].tolist() == ["4", "14", "3"]
@@ -256,7 +254,7 @@ def test_q160_fractional_median_floor(spark, tmp_path):
     d_dup = tmp_path / "dup"
     d_dup.mkdir()
     sf = _write_docs(d_dup, dup_rows)
-    got, want = _both_tbl(spark, sf, "q160_corpus_datasheet", "documents")
+    got, want = _both(spark, sf, "q160_corpus_datasheet")
     pd.testing.assert_frame_equal(got, want)
     row = got.iloc[0]
     assert row[["n_docs", "exact_dup_rate", "n_langs", "n_sources"]].tolist() == ["5", "0.2", "3", "3"]

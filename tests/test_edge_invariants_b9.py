@@ -4,9 +4,7 @@ and malformed JSON props, NULL-value events through the spell tiers,
 NULL event_type at the map surface, and NULL-text documents through the
 profiling/dedup/multimodal family.
 
-Same discipline as batches 1-8: crafted fixture -> registered Spark
-query AND registered oracle SQL on the same file -> driver-style string
-compare -> pinned expected rows.
+Same discipline as batches 1-2 (test_edge_invariants.py, ``_both``).
 """
 
 from __future__ import annotations
@@ -16,7 +14,7 @@ import json
 import pandas as pd
 import pytest
 
-from test_edge_invariants import US, _both, _both_tbl, _write_docs, _write_events
+from test_edge_invariants import US, _both, _write_docs, _write_events
 from test_edge_invariants_b4 import _NULLISH
 
 T0 = 1_700_000_000 * US
@@ -145,7 +143,7 @@ def test_null_text_documents_family(spark, tmp_path):
         (4, "   ", "en", "s", 3),
     ]
     sf = _write_docs(tmp_path, rows)
-    got, want = _both_tbl(spark, sf, "q77_text_profile", "documents")
+    got, want = _both(spark, sf, "q77_text_profile")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
     assert by_doc["2"]["lang_pred"] == "und"
@@ -154,7 +152,7 @@ def test_null_text_documents_family(spark, tmp_path):
 
     for name in ("q105_repetition_filter", "q144_segment_dedup",
                  "q90_multimodal_features"):
-        got, want = _both_tbl(spark, sf, name, "documents")
+        got, want = _both(spark, sf, name)
         pd.testing.assert_frame_equal(got, want)
         id_col = got.columns[got.columns.str.contains("id")][0]
         assert "2" not in set(got[id_col]), name

@@ -2,7 +2,8 @@
 zero rows) is routine at production scale and must not abort a
 pipeline.  The full-registry sweep lives in tools/empty_sweep.py
 (r6 evidence: 156/159 cross-engine clean after the fixes below); this
-file keeps the fast regression core:
+file keeps the fast regression core, checked by the same rule
+(``tools/verify_local.py``'s ``check_query`` and ``oracle_con``):
 
 - the ANN family (q78/q79/q94/q119) returns an EMPTY result instead of
   crashing on `.first()[0]` dim/query-vector inference;
@@ -18,20 +19,16 @@ file keeps the fast regression core:
 
 from __future__ import annotations
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 import sanctum_spark.queries as qreg
 from conftest import SF_DIR
+from sanctum_spark.io import TABLES
+from tools.verify_local import check_query, oracle_con
 
 qreg.load_all_modules()
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 
 @pytest.fixture(scope="module")
@@ -42,23 +39,6 @@ def empty_sf(tmp_path_factory):
         schema = pa.schema([schema.field(i) for i in range(len(schema.names))])
         pq.write_table(schema.empty_table(), str(d / f"{t}.parquet"))
     return str(d)
-
-
-def _oracle(sf_dir, sql):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con.sql(sql).df()
-
-
-def _canon(df):
-    df = df.reindex(sorted(df.columns), axis=1).astype(str)
-    if len(df) == 0:
-        return df.reset_index(drop=True)
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
 def test_ann_family_returns_empty(spark, empty_sf):
@@ -80,11 +60,11 @@ def test_sample_families_match_oracle_on_empty(spark, empty_sf):
         "q148_trailing_range_frame", "q158_quality_keeper",
         "q160_corpus_datasheet",
     ]
+    con = oracle_con(empty_sf)
     for name in sample:
         q = qreg.REGISTRY[name]
-        got = _canon(q.fn(spark, empty_sf).toPandas())
-        want = _canon(_oracle(empty_sf, q.oracle))
-        assert got.equals(want), f"{name}: spark={got} oracle={want}"
+        rec, _ = check_query(spark, empty_sf, q.fn, q.oracle, con)
+        assert rec["err"] is None, f"{name}: {rec['err']}"
 
 
 def test_rollup_grand_total_divergence_documented(spark, empty_sf):
@@ -94,7 +74,8 @@ def test_rollup_grand_total_divergence_documented(spark, empty_sf):
     caught."""
     q = qreg.REGISTRY["q30_rollup"]
     got = q.fn(spark, empty_sf).toPandas()
-    want = _oracle(empty_sf, q.oracle)
+    with oracle_con(empty_sf) as con:
+        want = con.sql(q.oracle).df()
     assert len(got) == 0
     assert len(want) == 1 and str(want.iloc[0]["n"]) == "0"
 

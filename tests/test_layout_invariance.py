@@ -12,23 +12,20 @@ normal suite, not only in a round-level sweep:
 - sessionize (q62): window-function ordering over permuted input;
 - grouped agg + having (q01): map-side combine over different splits.
 
-Run A reads the tables as written with session confs; run B reads a
-row-permuted, small-row-group rewrite under tiny scan splits,
-shuffle.partitions=7, AQE off, codegen off, and planner broadcasts
-forced to sort-merge — the union of the sweep's two perturbation axes.
+Run A reads the tables as written with session confs; run B reads the
+sweep's row-permuted, small-row-group rewrite (``build_perturbed``)
+under tiny scan splits, shuffle.partitions=7, AQE off, codegen off, and
+planner broadcasts forced to sort-merge — the union of the sweep's two
+perturbation axes.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
-import numpy as np
-import pyarrow.parquet as pq
 import pytest
 
 from tests.conftest import SF_DIR
+from tools.layout_sweep import build_perturbed
+from tools.verify_local import canon, mismatch, str_equal
 
 QUERIES = [
     "q01_pricing_summary",
@@ -49,44 +46,26 @@ PERTURB = {
 }
 
 
-def _canon(df):
-    df = df.reindex(sorted(df.columns), axis=1).astype(str)
-    if len(df) == 0:
-        return df.reset_index(drop=True)
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
-
 @pytest.fixture(scope="module")
-def perturbed_dir(spark):
-    import sanctum_spark.queries as qreg
-
-    qreg.load_all_modules()
-    rng = np.random.RandomState(20260814)
-    dst = tempfile.mkdtemp(prefix="sf_layout_test_")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        tbl = pq.read_table(os.path.join(SF_DIR, f"{t}.parquet"))
-        shuffled = tbl.take(rng.permutation(len(tbl)))
-        pq.write_table(
-            shuffled, os.path.join(dst, f"{t}.parquet"),
-            row_group_size=max(16, len(tbl) // 8),
-        )
-    yield dst
-    shutil.rmtree(dst, ignore_errors=True)
+def perturbed_dir(tmp_path_factory):
+    dst = str(tmp_path_factory.mktemp("sf_layout"))
+    build_perturbed(dst)
+    return dst
 
 
 @pytest.mark.parametrize("name", QUERIES)
 def test_layout_and_exec_invariant(spark, name, perturbed_dir):
     import sanctum_spark.queries as qreg
 
+    qreg.load_all_modules()
     q = qreg.REGISTRY[name]
-    base = _canon(q.fn(spark, SF_DIR).toPandas())
+    base = canon(q.fn(spark, SF_DIR).toPandas())
 
     saved = {k: spark.conf.get(k, None) for k in PERTURB}
     for k, v in PERTURB.items():
         spark.conf.set(k, v)
     try:
-        pert = _canon(q.fn(spark, perturbed_dir).toPandas())
+        pert = canon(q.fn(spark, perturbed_dir).toPandas())
     finally:
         for k, v in saved.items():
             if v is None:
@@ -94,7 +73,6 @@ def test_layout_and_exec_invariant(spark, name, perturbed_dir):
             else:
                 spark.conf.set(k, v)
 
-    assert base.equals(pert), (
-        f"{name} is layout/exec-strategy dependent:\n"
-        f"A={len(base)} rows, B={len(pert)} rows"
+    assert str_equal(base, pert), (
+        f"{name} is layout/exec-strategy dependent: {mismatch(base, pert)}"
     )

@@ -1,50 +1,27 @@
 """Mirror of the driver's correctness gate: every registered query runs on
-Spark AND its DuckDB oracle at sf0.001; results must match exactly after
-sorting columns by name and rows by value (the driver hash-compares the
-same way at sf0.01)."""
+Spark AND its DuckDB oracle at sf0.001 through the gate's own per-query
+check, ``tools/verify_local.py``'s ``check_query``: ``canon`` +
+``str_equal`` (columns sorted by name, rows by stringified value,
+stringified frames equal; the driver hash-compares the same way at
+sf0.01), failing with ``mismatch``'s diff or the exception."""
 
 from __future__ import annotations
 
-import os
-
-import duckdb
-import pandas as pd
 import pytest
 
 from sanctum_spark import queries as qreg
+from tools.verify_local import check_query, oracle_con
 
 qreg.load_all_modules()
 ORACLE_QUERIES = sorted(n for n, q in qreg.REGISTRY.items() if q.oracle is not None)
 
 
-def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    from sanctum_spark.io import TABLES
-
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
-
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    if len(df) == 0:
-        return df.reset_index(drop=True)
-    key = df.astype(str)
-    order = key.sort_values(by=list(df.columns)).index
-    return df.loc[order].reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, sf_dir, name):
     q = qreg.REGISTRY[name]
-    got = canon(q.fn(spark, sf_dir).toPandas())
-    con = duck_con(sf_dir)
-    want = canon(con.sql(q.oracle).df())
-    con.close()
-    assert len(got) == len(want), f"{name}: rows {len(got)} != oracle {len(want)}"
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
+    with oracle_con(sf_dir) as con:
+        rec, _ = check_query(spark, sf_dir, q.fn, q.oracle, con)
+    assert rec["err"] is None, f"{name}: {rec['err']}"
 
 
 def test_entry_smoke(spark):

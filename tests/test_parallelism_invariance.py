@@ -6,10 +6,11 @@ The master's core count is the one cluster-vs-local axis no in-session
 conf can perturb (a JVM cannot change master), so this core runs ONE
 subprocess leg at local[3] — odd, small, not a divisor of the session's
 8, so every partition boundary moves — over the most parallelism-shaped
-queries and compares driver-style canon CSVs against the in-session
-local[8] results.  Divergence means an answer depends on task count:
-a per-partition counter in output, partition-id-keyed sampling,
-accumulator fan-in ordering, lifecycle hooks counted per partition.
+queries and compares ``tools/verify_local.py`` digests (sha256 of the
+stringified canon frame) against the in-session local[8] results.
+Divergence means an answer depends on task count: a per-partition
+counter in output, partition-id-keyed sampling, accumulator fan-in
+ordering, lifecycle hooks counted per partition.
 
 The core picks the surfaces where parallelism plausibly leaks:
 sketch merges (HLL), seeded reservoir sampling, per-partition
@@ -19,13 +20,14 @@ merge tree depends on partition count.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import subprocess
 import sys
 
 import pytest
+
+from tools.verify_local import canon, digest
 
 CORE = [
     "q26_approx_distinct",
@@ -36,22 +38,11 @@ CORE = [
 ]
 
 
-def _canon(df):
-    df = df.reindex(sorted(df.columns), axis=1).astype(str)
-    if len(df) == 0:
-        return df.reset_index(drop=True)
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
-
-def _sha(df) -> str:
-    return hashlib.sha256(_canon(df).to_csv(index=False).encode()).hexdigest()
-
-
 _LEG_SRC = r"""
-import hashlib, json, sys
+import json, sys
 import sanctum_spark.queries as qreg
 from sanctum_spark.session import get_spark
-from tools.sweep_common import canon
+from tools.verify_local import canon, digest
 
 names, sf = json.loads(sys.argv[1]), sys.argv[2]
 qreg.load_all_modules()
@@ -59,8 +50,7 @@ spark = get_spark("parallelism_core_leg")
 spark.sparkContext.setLogLevel("ERROR")
 out = {}
 for n in names:
-    c = canon(qreg.REGISTRY[n].fn(spark, sf).toPandas())
-    out[n] = hashlib.sha256(c.to_csv(index=False).encode()).hexdigest()
+    out[n] = digest(canon(qreg.REGISTRY[n].fn(spark, sf).toPandas()))
 print("LEG_JSON:" + json.dumps(out))
 """
 
@@ -78,7 +68,10 @@ def test_parallelism_invariant_core(spark, sf_dir):
     assert int(leg_cores) != session_cores
 
     qreg.load_all_modules()
-    base = {n: _sha(qreg.REGISTRY[n].fn(spark, sf_dir).toPandas()) for n in CORE}
+    base = {
+        n: digest(canon(qreg.REGISTRY[n].fn(spark, sf_dir).toPandas()))
+        for n in CORE
+    }
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, SPARK_GRAFT_CPUS=leg_cores, PYTHONPATH=repo)

@@ -20,9 +20,9 @@ Run A: session defaults (maxRecordsPerBatch=131072 — at sf0.001 every
 Run B: maxRecordsPerBatch=7 — every boundary sees many tiny batches,
        so any cross-batch assumption must change the answer.
 
-Both runs over the SAME tables; comparison is the driver-style canon
-(columns sorted by name, rows sorted by stringified values, string
-equality) — Spark-vs-Spark, since the invariance claim is internal.
+Both runs over the SAME tables; comparison is the oracle gate's
+(``verify_local.registry_frames`` + ``diverged``: canon frames,
+``str_equal``) — Spark-vs-Spark, since the invariance claim is internal.
 
 Grouped-map (``applyInPandas``) semantics present one DataFrame per
 GROUP regardless of wire batching, so this axis exercises it only at
@@ -40,51 +40,30 @@ import sys
 
 sys.path.insert(0, ".")
 
-from tools.sweep_common import SRC, canon
+from tools.verify_local import diverged, registry_frames
 
+SRC = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 TINY_BATCH = "7"
-
-
-def run_registry(spark, sf: str) -> dict:
-    import sanctum_spark.queries as qreg
-
-    out = {}
-    for name, q in qreg.REGISTRY.items():
-        try:
-            out[name] = canon(q.fn(spark, sf).toPandas())
-        except Exception as ex:  # noqa: BLE001 - sweep records, not raises
-            out[name] = f"CRASH {type(ex).__name__}: {str(ex)[:140]}"
-    return out
 
 
 def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
-    import sanctum_spark.queries as qreg
     from sanctum_spark.session import get_spark
 
-    qreg.load_all_modules()
     spark = get_spark("batchsize_sweep")
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    base = run_registry(spark, SRC)
+    base = registry_frames(spark, SRC)
 
     saved = spark.conf.get(key)
     spark.conf.set(key, TINY_BATCH)
     try:
-        tiny = run_registry(spark, SRC)
+        tiny = registry_frames(spark, SRC)
     finally:
         spark.conf.set(key, saved)
 
-    bad = {}
-    for name in base:
-        a, b = base[name], tiny[name]
-        if isinstance(a, str) or isinstance(b, str):
-            bad[name] = {"a": a if isinstance(a, str) else "ok",
-                         "b": b if isinstance(b, str) else "ok"}
-        elif not a.equals(b):
-            bad[name] = {"a": f"{len(a)} rows", "b": f"{len(b)} rows",
-                         "diff": "batch-size-dependent values"}
+    bad = diverged(base, tiny)
     print(json.dumps(bad, indent=1))
     print(
         f"summary: {len(base)} queries; {len(base) - len(bad)} "

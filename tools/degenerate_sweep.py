@@ -7,6 +7,7 @@ Usage: PYTHONPATH=. python tools/degenerate_sweep.py
 """
 
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -16,7 +17,11 @@ sys.path.insert(0, ".")
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tools.sweep_common import SRC, TABLES, run_sweep
+from sanctum_spark.io import TABLES
+from sanctum_spark.session import get_spark
+from tools.verify_local import sweep
+
+SRC = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 sf = tempfile.mkdtemp(prefix="sf_null_")
 for t in TABLES:
@@ -70,4 +75,5 @@ pq.write_table(
     f"{sf}/events.parquet",
 )
 
-run_sweep(sf, "degenerate_sweep")
+os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+sweep(get_spark("degenerate_sweep"), sf)

@@ -8,6 +8,7 @@ Usage: PYTHONPATH=. python tools/duplicate_sweep.py
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
@@ -16,7 +17,12 @@ sys.path.insert(0, ".")
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tools.sweep_common import SRC, TABLES, run_sweep
+from sanctum_spark.io import TABLES
+from sanctum_spark.session import get_spark
+from tools.verify_local import sweep
+
+SRC = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
+
 sf = tempfile.mkdtemp(prefix="sf_dup_")
 for t in TABLES:
     if t != "documents":
@@ -36,4 +42,5 @@ tbl = pa.table({
     "n_chars": pa.array([r[4] for r in rows], pa.int64()),
 })
 pq.write_table(tbl, f"{sf}/documents.parquet")
-run_sweep(sf, "dup_sweep")
+os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+sweep(get_spark("dup_sweep"), sf)

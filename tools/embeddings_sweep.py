@@ -5,6 +5,7 @@ Expected steady state (r6): 0 problems (147 match + 12 rows-only).
 Usage: PYTHONPATH=. python tools/embeddings_sweep.py
 """
 
+import os
 import shutil
 import sys
 import tempfile
@@ -14,7 +15,11 @@ sys.path.insert(0, ".")
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tools.sweep_common import SRC, TABLES, run_sweep
+from sanctum_spark.io import TABLES
+from sanctum_spark.session import get_spark
+from tools.verify_local import sweep
+
+SRC = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 sf = tempfile.mkdtemp(prefix="sf_emb_")
 for t in TABLES:
@@ -43,4 +48,5 @@ pq.write_table(
     f"{sf}/embeddings.parquet",
 )
 
-run_sweep(sf, "embeddings_sweep")
+os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+sweep(get_spark("embeddings_sweep"), sf)

@@ -8,6 +8,7 @@ exceeds the decimal grain (see the util.py integer-grain DOMAIN note).
 Usage: PYTHONPATH=. python tools/extreme_sweep.py
 """
 
+import os
 import shutil
 import sys
 import tempfile
@@ -18,7 +19,11 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tools.sweep_common import SRC, TABLES, run_sweep
+from sanctum_spark.io import TABLES
+from sanctum_spark.session import get_spark
+from tools.verify_local import sweep
+
+SRC = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 sf = tempfile.mkdtemp(prefix="sf_ext_")
 for t in TABLES:
@@ -54,4 +59,5 @@ pq.write_table(
     f"{sf}/events.parquet",
 )
 
-run_sweep(sf, "extreme_sweep")
+os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+sweep(get_spark("extreme_sweep"), sf)

@@ -19,6 +19,7 @@ Usage: PYTHONPATH=. python tools/fuzz_sweep.py [n_seeds]  (default 2)
 from __future__ import annotations
 
 import datetime
+import os
 import shutil
 import sys
 import tempfile
@@ -28,7 +29,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tools.sweep_common import run_sweep
+from sanctum_spark.session import get_spark
+from tools.verify_local import sweep
 
 WORDS = (
     "the fast key order sort table scan merge part window small hash join "
@@ -191,14 +193,14 @@ def build_tables(dst: str, seed: int) -> None:
 
 def main() -> int:
     n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 2
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    spark = get_spark("fuzz_sweep")
     any_bad = False
     for seed in range(1, n_seeds + 1):
         sf = tempfile.mkdtemp(prefix=f"sf_fuzz_{seed}_")
         build_tables(sf, seed=20260814 + seed)
         print(f"=== fuzz seed {seed} -> {sf}")
-        results = run_sweep(sf, f"fuzz_sweep_{seed}")
-        bad = {k: v for k, v in results.items() if v["status"] not in ("match", "ok")}
-        any_bad = any_bad or bool(bad)
+        any_bad = bool(sweep(spark, sf)) or any_bad
         shutil.rmtree(sf, ignore_errors=True)
     return 1 if any_bad else 0
 

@@ -17,6 +17,7 @@ Usage: PYTHONPATH=. python tools/hotkey_sweep.py
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
@@ -25,7 +26,11 @@ sys.path.insert(0, ".")
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tools.sweep_common import SRC, TABLES, run_sweep
+from sanctum_spark.io import TABLES
+from sanctum_spark.session import get_spark
+from tools.verify_local import sweep
+
+SRC = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _remap(table: pa.Table, col: str, hot_value, keep_every: int = 5) -> pa.Table:
@@ -63,9 +68,9 @@ def main() -> int:
         f"hot keys: user_id={hot_user}, o_custkey={hot_cust}, "
         f"l_suppkey={hot_supp} (80% of rows each)"
     )
-    results = run_sweep(sf, "hotkey_sweep")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    bad = sweep(get_spark("hotkey_sweep"), sf)
     shutil.rmtree(sf, ignore_errors=True)
-    bad = {k: v for k, v in results.items() if v["status"] not in ("match", "ok")}
     return 1 if bad else 0
 
 

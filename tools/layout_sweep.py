@@ -15,8 +15,9 @@ function of table CONTENT — identical results under:
 Anything that diverges depends on physical layout — top-k ties broken
 by partition order, ``first``/``any_value`` without an order, rand()
 leaking into output — and would return DIFFERENT ANSWERS on a real
-cluster than in CI.  Comparison is the driver-style canon (columns
-sorted by name, rows sorted by stringified values, string equality).
+cluster than in CI.  Comparison is the oracle gate's
+(``verify_local.registry_frames`` + ``diverged``: canon frames,
+``str_equal``).
 
 Usage: PYTHONPATH=. python tools/layout_sweep.py [--exec]
 
@@ -40,7 +41,10 @@ sys.path.insert(0, ".")
 import numpy as np
 import pyarrow.parquet as pq
 
-from tools.sweep_common import SRC, TABLES, canon
+from sanctum_spark.io import TABLES
+from tools.verify_local import diverged, registry_frames
+
+SRC = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 PERTURB_CONFS = {
     "spark.sql.shuffle.partitions": "7",
@@ -75,27 +79,13 @@ def build_perturbed(dst: str) -> None:
         pq.write_table(shuffled, f"{dst}/{t}.parquet", row_group_size=rg)
 
 
-def run_registry(spark, sf: str) -> dict:
-    import sanctum_spark.queries as qreg
-
-    out = {}
-    for name, q in qreg.REGISTRY.items():
-        try:
-            out[name] = canon(q.fn(spark, sf).toPandas())
-        except Exception as ex:  # noqa: BLE001 - sweep records, not raises
-            out[name] = f"CRASH {type(ex).__name__}: {str(ex)[:140]}"
-    return out
-
-
 def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     exec_mode = "--exec" in sys.argv
     confs = EXEC_CONFS if exec_mode else PERTURB_CONFS
 
-    import sanctum_spark.queries as qreg
     from sanctum_spark.session import get_spark
 
-    qreg.load_all_modules()
     spark = get_spark("layout_sweep")
 
     if exec_mode:
@@ -104,13 +94,13 @@ def main() -> int:
         dst = tempfile.mkdtemp(prefix="sf_layout_")
         build_perturbed(dst)
 
-    base = run_registry(spark, SRC)
+    base = registry_frames(spark, SRC)
 
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
-        pert = run_registry(spark, dst)
+        pert = registry_frames(spark, dst)
     finally:
         for k, v in saved.items():
             if v is None:
@@ -118,15 +108,7 @@ def main() -> int:
             else:
                 spark.conf.set(k, v)
 
-    bad = {}
-    for name in base:
-        a, b = base[name], pert[name]
-        if isinstance(a, str) or isinstance(b, str):
-            bad[name] = {"a": a if isinstance(a, str) else "ok",
-                         "b": b if isinstance(b, str) else "ok"}
-        elif not a.equals(b):
-            bad[name] = {"a": f"{len(a)} rows", "b": f"{len(b)} rows",
-                         "diff": "layout-dependent values"}
+    bad = diverged(base, pert)
     print(json.dumps(bad, indent=1))
     label = "exec-strategy" if exec_mode else "layout"
     print(

@@ -17,17 +17,17 @@ Protocol: the full registry runs in two SUBPROCESS legs (a master
 cannot change inside one JVM) — leg A local[8] (the sweep default
 elsewhere), leg B local[3] (odd, small, not a divisor of 8, so every
 partition boundary moves).  Each leg writes {query: {rows, cols,
-sha256(canon CSV)}}; the driver compares.  Comparison is the
-driver-style canon (columns sorted by name, rows sorted by stringified
-values) hashed, so any value divergence — not just row counts — fails.
+sha}}, the sha being ``verify_local.digest`` of the query's
+``verify_local.registry_frames`` frame (the oracle gate's canon:
+columns sorted by name, rows sorted by stringified values); the parent
+compares, so any value divergence — not just row counts — fails.
 
 Usage: PYTHONPATH=. python tools/parallelism_sweep.py
-       (internal)  ... --leg <cpus> <out.json>
+       (internal)  ... --leg <out.json>
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import subprocess
@@ -39,27 +39,16 @@ SF = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def run_leg(out_path: str) -> int:
-    from tools.sweep_common import canon
-
-    import sanctum_spark.queries as qreg
     from sanctum_spark.session import get_spark
+    from tools.verify_local import digest, registry_frames
 
-    qreg.load_all_modules()
     spark = get_spark("parallelism_sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    out = {}
-    for name, q in qreg.REGISTRY.items():
-        try:
-            c = canon(q.fn(spark, SF).toPandas())
-            out[name] = {
-                "rows": len(c),
-                "cols": list(c.columns),
-                "sha": hashlib.sha256(
-                    c.to_csv(index=False).encode()
-                ).hexdigest(),
-            }
-        except Exception as ex:  # noqa: BLE001 - sweep records, not raises
-            out[name] = {"crash": f"{type(ex).__name__}: {str(ex)[:140]}"}
+    out = {
+        name: {"crash": c} if isinstance(c, str)
+        else {"rows": len(c), "cols": list(c.columns), "sha": digest(c)}
+        for name, c in registry_frames(spark, SF).items()
+    }
     with open(out_path, "w") as f:
         json.dump(out, f)
     return 0

@@ -5,6 +5,7 @@ state (r6): 0 problems (147 match + 12 rows-only).
 Usage: PYTHONPATH=. python tools/relational_nulls_sweep.py
 """
 
+import os
 import shutil
 import sys
 import tempfile
@@ -15,7 +16,10 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tools.sweep_common import SRC, TABLES, run_sweep
+from sanctum_spark.session import get_spark
+from tools.verify_local import sweep
+
+SRC = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 sf = tempfile.mkdtemp(prefix="sf_rel_")
 for t in ("region", "nation", "events", "documents", "embeddings"):
@@ -53,4 +57,5 @@ aug("part", {"p_partkey": [960001], "p_name": [None], "p_brand": [None],
 aug("supplier", {"s_suppkey": [950001], "s_name": [None],
                  "s_nationkey": [None], "s_acctbal": [None]})
 
-run_sweep(sf, "relational_nulls_sweep")
+os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+sweep(get_spark("relational_nulls_sweep"), sf)

@@ -14,6 +14,7 @@ injectively to ASCII, so q115/q161 now match on any vocabulary
 Usage: PYTHONPATH=. python tools/unicode_sweep.py
 """
 
+import os
 import shutil
 import sys
 import tempfile
@@ -23,7 +24,11 @@ sys.path.insert(0, ".")
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tools.sweep_common import SRC, TABLES, run_sweep
+from sanctum_spark.io import TABLES
+from sanctum_spark.session import get_spark
+from tools.verify_local import sweep
+
+SRC = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 sf = tempfile.mkdtemp(prefix="sf_uni_")
 for t in TABLES:
@@ -56,4 +61,5 @@ pq.write_table(
     f"{sf}/documents.parquet",
 )
 
-run_sweep(sf, "unicode_sweep")
+os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+sweep(get_spark("unicode_sweep"), sf)
