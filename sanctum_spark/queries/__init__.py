@@ -94,20 +94,27 @@ def load_all_modules() -> None:
 #      (q151 window rewrite, q119 probe removal, q90/q104/q75/q121
 #      scan fan-outs, q79 candidate-dedup pin, q128 Morton fast path;
 #      q99/q158/q161/q114 also carry the r14 CC/pagerank/linkage
-#      operator changes) — externally-unverified rewrites lead;
+#      operator changes) — externally-unverified rewrites lead,
+#      with q145 (changed r16, last CORRECTNESS row r11) and q29
+#      (re-planned r14, last CORRECTNESS row r12), which the standing
+#      policy puts here too (``REPLANNED``);
 #   2. the 9 rows deferred since r10 (now the staleness floor):
 #      q70/q91 (bit-identity fuzz families A/G), q71/q72/q76/q92
 #      (fused-pipeline equality, fuzz family O), q73 (numpy-replay
 #      family D), q86 (stream-join-equals-batch-CEP pin), q89
 #      (closed-form degenerate pins);
-#   3. 18 of the 50 r11-era rows: q144/q146 first (their modules —
+#   3. 16 of the 50 r11-era rows: q144/q146 first (their modules —
 #      dedup.py, similarity.py — changed since their last driver row,
 #      the standing tie-break), then name order.
 # The FULL registry is still verified every round locally via
 # ``tools/verify_local.py`` (driver-strength string compare since r6),
 # so rotation never substitutes for whole-surface checking.
-VERIFY_FIRST: list[str] = [
-    # --- 1. r13/r14 optimization-touched (externally unverified first) ---
+
+# Every query re-planned since r13 (section 1 of the rotation).  The
+# rotation leads with them and tests/test_fixture_matrix.py runs each
+# over every crafted fixture in tools/fixtures.py, so a later rewrite
+# joins both by joining this list.
+REPLANNED: list[str] = [
     "q85_grouped_map_normalize",
     "q88_user_correlation",
     "q38_excess_volume_suppliers",
@@ -131,6 +138,13 @@ VERIFY_FIRST: list[str] = [
     "q128_zorder_key",
     "q75_simhash_pairs",
     "q121_cross_corpus_neardup",
+    "q145_mad_outliers",
+    "q29_min_cost_supplier",
+]
+
+VERIFY_FIRST: list[str] = [
+    # --- 1. re-planned since r13 (externally unverified first) ---
+    *REPLANNED,
     # --- 2. the r10 staleness floor (deferred twice, strongest
     #        independent in-suite evidence) ---
     "q70_exact_dedup",
@@ -160,8 +174,6 @@ VERIFY_FIRST: list[str] = [
     "q133_lateral_udtf",
     "q134_key_skew",
     "q135_ewma",
-    "q136_referential_integrity",
-    "q137_time_gaps",
 ]
 
 

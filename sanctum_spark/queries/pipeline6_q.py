@@ -607,7 +607,10 @@ def q150(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the engines DISAGREE on numbering (Spark dayofweek: 1=Sunday; "
         "DuckDB dayofweek: 0=Sunday) while the statistic is "
         "label-invariant; surfacing dow would need an explicit "
-        "convention alignment."
+        "convention alignment. NULLs: a NULL event_type or NULL-ts "
+        "(NULL dow) cell counts toward the grand total n, and toward its "
+        "row or column total, but is not a cell of the table — the "
+        "oracle's USING joins drop it after its n CTE has counted it."
     ),
 )
 def q151(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,6 +632,11 @@ def q151(spark: SparkSession, sf_dir: str) -> DataFrame:
         cont.withColumn("n", F.sum("o").over(W.partitionBy()).cast("double"))
         .withColumn("r", F.sum("o").over(W.partitionBy("event_type")))
         .withColumn("c", F.sum("o").over(W.partitionBy("dow")))
+    )
+    # NULL keys drop only here, after the windows: n (and r or c) still
+    # count them, as the oracle's n CTE does before its USING joins
+    joined = joined.where(
+        F.col("event_type").isNotNull() & F.col("dow").isNotNull()
     )
     e = F.col("r") * F.col("c") / F.col("n")
     return joined.agg(

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import contextlib
 import os
 import sys
 
@@ -9,6 +8,8 @@ import pytest
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
+
+from tools.verify_local import confs  # noqa: E402
 
 SF_DIR = os.environ.get("SANCTUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -27,26 +28,13 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-@contextlib.contextmanager
 def broadcast_threshold(spark, value: str):
     """Both broadcast-join thresholds (the planner's and AQE's) at
-    ``value`` for the block, then each back to its earlier setting — or
-    unset, if it was unset.  ``"-1"`` turns broadcast off, and with it
-    connected_components' small-graph path, so CC calls inside take the
-    round loop; a tiny value such as ``"48b"`` keeps the path on but
+    ``value`` for a ``with`` block, then each back to its earlier setting
+    — or unset, if it was unset.  ``"-1"`` turns broadcast off, and with
+    it connected_components' small-graph path, so CC calls inside take
+    the round loop; a tiny value such as ``"48b"`` keeps the path on but
     sends any edge list over its cap to the rounds."""
-    keys = (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    )
-    old = {k: spark.conf.get(k, None) for k in keys}
-    for k in keys:
-        spark.conf.set(k, value)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    return confs(spark, dict.fromkeys(keys, value))

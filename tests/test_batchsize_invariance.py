@@ -1,6 +1,6 @@
 """Fast regression core for the Arrow-batch-size invariance axis
 (tenth robustness family — full-registry evidence pass:
-tools/batchsize_sweep.py, 159/159 clean at sf0.001, r7).
+``tools/sweep.py batchsize``, 159/159 clean at sf0.001).
 
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` is an engine tunable:
 131072 in this repo's sessions, 10000 stock Spark, and effectively
@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import pytest
 
-from tools.verify_local import canon, mismatch, str_equal
+from tools.verify_local import canon, confs, mismatch, str_equal
 
 CORE = [
     "q82_spell_cast_vectorized",
@@ -33,9 +33,6 @@ CORE = [
     "q153_dtw_similarity",
 ]
 
-BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
-
-
 @pytest.mark.parametrize("name", CORE)
 def test_batch_size_invariant(spark, sf_dir, name):
     import sanctum_spark.queries as qreg
@@ -43,12 +40,8 @@ def test_batch_size_invariant(spark, sf_dir, name):
     qreg.load_all_modules()
     q = qreg.REGISTRY[name]
     base = canon(q.fn(spark, sf_dir).toPandas())
-    saved = spark.conf.get(BATCH_KEY)
-    spark.conf.set(BATCH_KEY, "7")
-    try:
+    with confs(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"}):
         tiny = canon(q.fn(spark, sf_dir).toPandas())
-    finally:
-        spark.conf.set(BATCH_KEY, saved)
     # mismatch names the first rows held by one side only, not just the
     # counts: the likelier failure is equal counts with diverging values
     assert str_equal(base, tiny), (

@@ -240,16 +240,20 @@ def test_q151_chi2_zero_on_independent_table(spark, tmp_path):
     """A contingency table with exact row/column independence (every
     cell o == r*c/n) must give chi2 == 0 on both engines — the dow
     numbering difference (Spark 1=Sunday vs DuckDB 0=Sunday) must stay
-    label-invariant."""
+    label-invariant.  NULL event_type and NULL ts rows count toward n and
+    the totals but are not cells (the 3x3 table with them is independent)."""
     day1 = pd.Timestamp("2024-01-08").value // 1000  # a Monday
     day2 = pd.Timestamp("2024-01-09").value // 1000  # a Tuesday
     rows = []
     eid = 0
-    # type A: 10 on day1, 20 on day2; type B: 5 / 10  -> independent
-    for day, counts in ((day1, {"A": 10, "B": 5}), (day2, {"A": 20, "B": 10})):
+    # types A / B / NULL on day1, day2, NULL ts  -> independent
+    for day, counts in ((day1, {"A": 10, "B": 5, None: 5}),
+                        (day2, {"A": 20, "B": 10, None: 10}),
+                        (None, {"A": 2, "B": 1, None: 1})):
         for etype, k in counts.items():
             for i in range(k):
-                rows.append((eid := eid + 1, day + i, i, etype, 1.0))
+                ts = None if day is None else day + i
+                rows.append((eid := eid + 1, ts, i, etype, 1.0))
     sf = _write_events(tmp_path, rows)
     got, want = _both(spark, sf, "q151_chi2_independence")
     pd.testing.assert_frame_equal(got, want)

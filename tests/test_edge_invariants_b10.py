@@ -1,5 +1,5 @@
 """Cross-engine invariants, batch 10: Unicode text through the corpus
-family (r6 unicode sweep, tools/unicode_sweep.py).  CJK without spaces,
+family (r6 unicode sweep, tools/fixtures.py ``unicode``).  CJK without spaces,
 emoji with ZWJ sequences, combining marks, NBSP / ideographic space,
 and RTL Arabic must flow through tokenization, hashing, profiling and
 the multimodal byte path IDENTICALLY on both engines; the two known
@@ -96,7 +96,7 @@ def test_documented_case_and_levenshtein_divergences(spark):
 
 def test_degenerate_embeddings_family(spark, tmp_path):
     """Degenerate vectors through the array/ANN family (r6 embeddings
-    sweep, tools/embeddings_sweep.py): NULL / empty / ragged / NaN /
+    sweep, tools/fixtures.py ``embeddings``): NULL / empty / ragged / NaN /
     Inf vectors flow through the array scalar surface (q33/q43/q54/q96)
     and brute-force cosine (q73) driver-equally — out-of-bounds indexes
     are NULL (try_element_at, never an ANSI crash), a ragged vector has

@@ -1,5 +1,5 @@
 """Cross-engine invariants, batch 11: regression pins for the r6
-relational-nulls sweep (tools/relational_nulls_sweep.py) — the NOT IN
+relational-nulls sweep (tools/fixtures.py ``relational_nulls``) — the NOT IN
 NULL trap, NULL-operand concat, and NULL z-order dimensions.
 """
 

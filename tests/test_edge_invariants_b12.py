@@ -1,5 +1,5 @@
 """Cross-engine invariants, batch 12: regression pins for the r6
-randomized-fuzz sweep findings (tools/fuzz_sweep.py) — the five real
+randomized-fuzz sweep findings (tools/fixtures.py ``fuzz``) — the five real
 defects random table composition surfaced that no crafted fixture had:
 
 1. NULL-text docs paired each other at jaccard 1.0 (shingle_tokens

@@ -1,5 +1,5 @@
 """Cross-engine threshold-edge invariants, batch 9: regression pins for
-the r6 degenerate-row sweep fixes (tools/degenerate_sweep.py) — NULL
+the r6 degenerate-row sweep fixes (tools/fixtures.py ``degenerate``) — NULL
 and malformed JSON props, NULL-value events through the spell tiers,
 NULL event_type at the map surface, and NULL-text documents through the
 profiling/dedup/multimodal family.

@@ -1,8 +1,9 @@
 """Empty-input robustness: an empty ingest day (all tables present,
 zero rows) is routine at production scale and must not abort a
-pipeline.  The full-registry sweep lives in tools/empty_sweep.py
-(r6 evidence: 156/159 cross-engine clean after the fixes below); this
-file keeps the fast regression core, checked by the same rule
+pipeline.  The full-registry sweep is ``tools/sweep.py empty`` over the
+``empty`` fixture in tools/fixtures.py (156/159 cross-engine clean
+after the fixes below); this file keeps the fast regression core,
+checked by the same rule
 (``tools/verify_local.py``'s ``check_query`` and ``oracle_con``):
 
 - the ANN family (q78/q79/q94/q119) returns an EMPTY result instead of
@@ -19,13 +20,11 @@ file keeps the fast regression core, checked by the same rule
 
 from __future__ import annotations
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 import sanctum_spark.queries as qreg
 from conftest import SF_DIR
-from sanctum_spark.io import TABLES
+from tools.fixtures import materialize
 from tools.verify_local import check_query, oracle_con
 
 qreg.load_all_modules()
@@ -33,12 +32,8 @@ qreg.load_all_modules()
 
 @pytest.fixture(scope="module")
 def empty_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("sf_empty")
-    for t in TABLES:
-        schema = pq.read_schema(f"{SF_DIR}/{t}.parquet")
-        schema = pa.schema([schema.field(i) for i in range(len(schema.names))])
-        pq.write_table(schema.empty_table(), str(d / f"{t}.parquet"))
-    return str(d)
+    return materialize("empty", SF_DIR,
+                       str(tmp_path_factory.mktemp("sf_empty")))
 
 
 def test_ann_family_returns_empty(spark, empty_sf):

@@ -1,6 +1,6 @@
 """Fast regression core for the task-parallelism invariance axis
 (eleventh robustness family — full-registry evidence pass:
-tools/parallelism_sweep.py, 159/159 clean at sf0.001, r8).
+``tools/sweep.py parallelism``, 159/159 clean at sf0.001).
 
 The master's core count is the one cluster-vs-local axis no in-session
 conf can perturb (a JVM cannot change master), so this core runs ONE

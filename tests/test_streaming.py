@@ -19,6 +19,7 @@ from sanctum_spark.streaming import stateful as ST
 from sanctum_spark.streaming import windows as WIN
 from sanctum_spark.streaming.routing import demux_foreach_batch
 from sanctum_spark.spells.registry import Spell
+from tools.verify_local import confs
 
 
 @pytest.fixture()
@@ -399,10 +400,8 @@ def test_stateful_ewma_multi_chunk_ordering(spark, sf_dir, staged, tmp_path):
     batch fold."""
     from sanctum_spark.queries.pipeline4_q import q135
 
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "7")  # every key's batch spans many chunks
-    try:
+    # every key's batch spans many chunks
+    with confs(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"}):
         stream = SRC.events_file_stream(spark, staged).select(
             "user_id", "ts", "event_id", "value"
         )
@@ -422,8 +421,6 @@ def test_stateful_ewma_multi_chunk_ordering(spark, sf_dir, staged, tmp_path):
             for r in q135(spark, sf_dir).collect()
         }
         assert final == want
-    finally:
-        spark.conf.set(key, old)
 
 
 def test_windowed_psi_drift_matches_batch(spark, sf_dir, staged):

@@ -1,7 +1,7 @@
 """Operator-PARAMETER fuzz (r8 verdict task 5 — thirteenth robustness
 family).
 
-tools/fuzz_sweep.py randomizes CONTENT (whole star schemas) but runs every
+tools/fixtures.py ``fuzz`` randomizes CONTENT (star schemas) but runs every
 operator at its registered parameters.  This sweep randomizes the
 PARAMETERS — shingle_k, thresholds, hash/band counts, window caps, codec
 shapes — where boundary math lives (ceil guards, prefix lengths, band

@@ -13,12 +13,13 @@ into tools/verify_local_out[_<sf>]_partial.json instead (see
 write_results).
 
 This module is the one oracle compare: tier-1's oracle-parity,
-crafted-fixture and invariance tests and the tools/*_sweep.py sweeps
-all compare through its functions.
+crafted-fixture, fixture-matrix and invariance tests and
+tools/sweep.py all compare through its functions.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -159,6 +160,23 @@ def sweep(spark, sf_dir: str) -> dict[str, dict]:
           f"{n['ok']} rows-only ok; {len(bad)} problems")
     print("sf:", sf_dir)
     return bad
+
+
+@contextlib.contextmanager
+def confs(spark, mapping: dict[str, str]):
+    """The session confs in ``mapping`` for the block, then each key back
+    to its earlier value, or unset if it was unset."""
+    old = {k: spark.conf.get(k, None) for k in mapping}
+    for k, v in mapping.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def registry_frames(spark, sf_dir: str) -> dict[str, pd.DataFrame | str]:
