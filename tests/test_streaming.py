@@ -613,3 +613,42 @@ def test_expression_spell_streams_equal_batch(spark, sf_dir, staged):
         .collect()
     )
     assert got == want and len(got) > 0
+
+
+_CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def test_checkpoint_manager_is_filesystem_based(spark, sf_dir, tmp_path):
+    """Streaming checkpoints go through the FileSystem-based manager (no
+    forked readlink per file: see sanctum_spark/session.py), and it
+    writes, by name, the files Spark's FileContext default writes: the
+    ``commits/.N.crc`` sidecars included, which
+    test_eventdump.py::test_reshard_hands_off_after_sink_logged_uncommitted_batch
+    deletes by name, and no ``.tmp`` left behind."""
+    pkg = spark._jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    made = pkg.CheckpointFileManager.create(
+        spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "probe")),
+        spark._jsparkSession.sessionState().newHadoopConf())
+    assert (made.getClass().getName()
+            == _CKPT_PKG + "FileSystemBasedCheckpointFileManager")
+
+    stage = SRC.stage_event_stream(spark, sf_dir, str(tmp_path / "stage"),
+                                   n_files=2)
+    trees = []
+    for leg, mapping in (
+        ("default", {}),
+        ("filecontext",
+         {"spark.sql.streaming.checkpointFileManagerClass":
+          _CKPT_PKG + "FileContextBasedCheckpointFileManager"}),
+    ):
+        ck = tmp_path / leg
+        with confs(spark, mapping):
+            _drain(WIN.tumbling_window_agg(SRC.events_file_stream(spark, stage)),
+                   f"ckmgr_{leg}_{uuid.uuid4().hex[:8]}", checkpoint=str(ck))
+        trees.append(sorted(str(p.relative_to(ck)) for p in ck.rglob("*")
+                            if p.is_file()))
+    assert trees[0] == trees[1]
+    assert {"commits/1", "commits/.1.crc", "offsets/.1.crc"} <= set(trees[0])
+    assert any(f.startswith("state/") and f.endswith(".delta")
+               for f in trees[0])
+    assert not [f for f in trees[0] if f.endswith(".tmp")]

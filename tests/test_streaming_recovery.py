@@ -84,3 +84,46 @@ def test_cep_restart_recovers_state_exactly_once(spark, sf_dir, tmp_path):
     # run 2 must have added matches (state carried across the restart,
     # not a fresh start that reprocessed everything)
     assert run1 < len(got)
+
+
+def test_filecontext_checkpoint_resumes_exactly_once(spark, sf_dir, tmp_path):
+    """A checkpoint written by Spark's default FileContext manager (as
+    every checkpoint was before the session switched to the FileSystem
+    one) resumes under the session's manager.  Batch 0 of a streaming
+    dedup runs under FileContext over 200 events; then a file replaying
+    them beside 100 new ones arrives, and the resumed run must read only
+    that file (offsets), drop the replayed 200 (dedup state) and append
+    to the sink log: each of the 300 events lands exactly once."""
+    from pyspark.sql import functions as F
+
+    from sanctum_spark.io import load_table
+    from sanctum_spark.streaming.windows import streaming_dedup
+    from tools.verify_local import confs
+
+    ev = load_table(spark, sf_dir, "events")
+    ids = [r["event_id"] for r in
+           ev.select("event_id").orderBy("event_id").limit(300).collect()]
+    assert len(ids) == 300
+    live, out, ck = (str(tmp_path / d) for d in ("live", "out", "ck"))
+
+    def drain():
+        return _drain_to_parquet(
+            streaming_dedup(SRC.events_file_stream(spark, live), ["event_id"]),
+            out, ck,
+        )
+
+    ev.filter(F.col("event_id") <= ids[199]).coalesce(1).write.parquet(live)
+    filecontext = ("org.apache.spark.sql.execution.streaming.checkpointing."
+                   "FileContextBasedCheckpointFileManager")
+    with confs(spark, {"spark.sql.streaming.checkpointFileManagerClass":
+                       filecontext}):
+        drain()
+    assert spark.read.parquet(out).count() == 200
+
+    ev.filter(F.col("event_id") <= ids[299]).coalesce(1) \
+        .write.mode("append").parquet(live)
+    q = drain()
+    assert [p["batchId"] for p in q.recentProgress] == [1]
+    assert q.recentProgress[0]["numInputRows"] == 300
+    got = sorted(r["event_id"] for r in spark.read.parquet(out).collect())
+    assert got == ids

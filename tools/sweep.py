@@ -92,32 +92,47 @@ def invariance(spark, name: str, base: dict, tmp: str) -> bool:
     return not bad
 
 
-def leg(out: str) -> None:
-    """One parallelism leg: {query: {rows, cols, sha} or {crash}} over
-    ``SRC`` at this process's SPARK_GRAFT_CPUS, written to ``out``."""
+def record(frame) -> dict:
+    """A leg's entry for one ``registry_frames`` value: {rows, cols, sha}
+    of a canon frame, or {crash} with Spark's error text."""
+    if isinstance(frame, str):
+        return {"crash": frame}
+    return {"rows": len(frame), "cols": list(frame.columns),
+            "sha": digest(frame)}
+
+
+def leg(out: str, names: list[str] | None, sf: str) -> None:
+    """One parallelism leg: the ``record`` of each of ``names`` (None:
+    the whole registry) over ``sf`` at this process's SPARK_GRAFT_CPUS,
+    as JSON in ``out``."""
     spark = get_spark("sweep_leg")
     spark.sparkContext.setLogLevel("ERROR")
     with open(out, "w") as fh:
-        json.dump({
-            name: {"crash": c} if isinstance(c, str)
-            else {"rows": len(c), "cols": list(c.columns), "sha": digest(c)}
-            for name, c in registry_frames(spark, SRC).items()
-        }, fh)
+        json.dump({name: record(c) for name, c
+                   in registry_frames(spark, sf, names).items()}, fh)
     spark.stop()
 
 
+def run_leg(cpus: str, out: str, names: list[str] | None = None,
+            sf: str = SRC, timeout: float | None = None) -> dict:
+    """``leg`` in a subprocess at local[cpus] (a master cannot change
+    inside one JVM); returns its records."""
+    subprocess.run(
+        [sys.executable, "-c",
+         "import json, sys; from tools.sweep import leg; "
+         "leg(sys.argv[1], json.loads(sys.argv[2]), sys.argv[3])",
+         out, json.dumps(names), sf],
+        env=dict(os.environ, SPARK_GRAFT_CPUS=cpus, PYTHONPATH=REPO),
+        cwd=REPO, check=True, timeout=timeout,
+    )
+    with open(out) as fh:
+        return json.load(fh)
+
+
 def parallelism(tmp: str) -> bool:
-    legs = {}
-    for cpus in ("8", "3"):
-        out = os.path.join(tmp, f"parallelism_{cpus}.json")
-        subprocess.run(
-            [sys.executable, "-c",
-             "import sys; from tools.sweep import leg; leg(sys.argv[1])", out],
-            env=dict(os.environ, SPARK_GRAFT_CPUS=cpus, PYTHONPATH=REPO),
-            cwd=REPO, check=True,
-        )
-        with open(out) as fh:
-            legs[f"local[{cpus}]"] = json.load(fh)
+    legs = {f"local[{cpus}]": run_leg(
+                cpus, os.path.join(tmp, f"parallelism_{cpus}.json"))
+            for cpus in ("8", "3")}
     a, b = legs.values()
     names = sorted(set(a) | set(b))
     problems = {n: {k: leg.get(n) for k, leg in legs.items()}
@@ -135,8 +150,8 @@ def main(names: list[str]) -> int:
         print(__doc__, file=sys.stderr)
         return 2
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    # the session's 48g heap default let one full-registry JVM grow past
-    # 11 GB resident on a 15 GB host; fixture tables are tiny
+    # fixture tables are tiny, and the session's default heap (half of
+    # physical memory) lets two sweep JVMs side by side fill the host
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     ok, spark, base = True, None, None
     with tempfile.TemporaryDirectory(prefix="sweep_") as tmp:

@@ -179,15 +179,19 @@ def confs(spark, mapping: dict[str, str]):
                 spark.conf.set(k, v)
 
 
-def registry_frames(spark, sf_dir: str) -> dict[str, pd.DataFrame | str]:
+def registry_frames(spark, sf_dir: str, names: list[str] | None = None
+                    ) -> dict[str, pd.DataFrame | str]:
     """One side of a Spark-vs-Spark invariance sweep: each registered
-    query's ``canon`` frame over ``sf_dir``, or its error text when
-    Spark raised."""
+    query's (or each of ``names``') ``canon`` frame over ``sf_dir``, or
+    its error text when Spark raised."""
     import sanctum_spark.queries as qreg
 
+    qs = qreg.queries()
+    if names is not None:
+        qs = {n: qs[n] for n in names}
     return {
         name: rec["err"] if got is None else got
-        for name, rec, got in check_each(spark, sf_dir, qreg.queries(), {})
+        for name, rec, got in check_each(spark, sf_dir, qs, {})
     }
 
 
