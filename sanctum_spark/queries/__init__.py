@@ -11,6 +11,13 @@ values, so every computed column is aliased identically in the Spark code
 and the oracle SQL.  Float aggregates are rounded (2-6 dp) on BOTH sides so
 summation-order differences between Spark partial aggregation and DuckDB
 never flip the hash.
+
+The queries live in five family modules, one per set of tables read
+(the oracle SQL, or for a rows-only query its source): the spell-runtime
+queries in ``spells_q``; any other query in ``vectors_q`` if it reads
+``embeddings``, else in ``corpus_q`` if it reads ``documents``, else in
+``events_q`` if it reads ``events``, else in ``relational`` (the star
+tables).  ``util`` holds the cross-engine rounding pins they share.
 """
 
 from __future__ import annotations
@@ -50,22 +57,10 @@ def load_all_modules() -> None:
     """Import every query module so registration side effects run."""
     from sanctum_spark.queries import (  # noqa: F401
         relational,
-        relational2,
-        relational3,
-        relational4,
-        relational5,
         events_q,
-        llm_q,
+        corpus_q,
+        vectors_q,
         spells_q,
-        ops_q,
-        coverage_q,
-        pipeline_q,
-        pipeline2_q,
-        pipeline3_q,
-        pipeline4_q,
-        pipeline5_q,
-        pipeline6_q,
-        pipeline7_q,
     )
 
 
@@ -82,30 +77,6 @@ def load_all_modules() -> None:
 # 159 (r6 verdict task #6), so the rotation cycles the whole surface every
 # ~3 rounds.
 #
-# Round 14 selection (r13 verdict task #3 orders this rotation
-# explicitly: "seed the r14 front-50 with the 15 touched/replanned
-# queries ... ahead of the 9 deferred r10-era rows, then the stalest
-# remainder").  Census over CORRECTNESS_r01-r13 at round start:
-# r10x9 (the rows the r13 rotation deferred), r11x50, r12x50, r13x50.
-#   1. every query whose plan or code changed in the r13/r14
-#      optimization rounds — the 15 the r13 verdict names (q85, q88,
-#      q38, q74, q99, q109, q114, q122, q142, q147, q158, q81, q44,
-#      q111, q161) plus the 8 further queries r14 itself touched
-#      (q151 window rewrite, q119 probe removal, q90/q104/q75/q121
-#      scan fan-outs, q79 candidate-dedup pin, q128 Morton fast path;
-#      q99/q158/q161/q114 also carry the r14 CC/pagerank/linkage
-#      operator changes) — externally-unverified rewrites lead,
-#      with q145 (changed r16, last CORRECTNESS row r11) and q29
-#      (re-planned r14, last CORRECTNESS row r12), which the standing
-#      policy puts here too (``REPLANNED``);
-#   2. the 9 rows deferred since r10 (now the staleness floor):
-#      q70/q91 (bit-identity fuzz families A/G), q71/q72/q76/q92
-#      (fused-pipeline equality, fuzz family O), q73 (numpy-replay
-#      family D), q86 (stream-join-equals-batch-CEP pin), q89
-#      (closed-form degenerate pins);
-#   3. 16 of the 50 r11-era rows: q144/q146 first (their modules —
-#      dedup.py, similarity.py — changed since their last driver row,
-#      the standing tie-break), then name order.
 # The FULL registry is still verified every round locally via
 # ``tools/verify_local.py`` (driver-strength string compare since r6),
 # so rotation never substitutes for whole-surface checking.

@@ -2,24 +2,29 @@
 families (r5 verdict task 8): the sf fixtures exercise the bulk path, but
 the exact boundary — a class of exactly k rows, a click landing exactly
 on the CEP deadline, an SCD2 interval left open — is where Spark and the
-DuckDB oracle could silently disagree.  Each test writes a crafted
-events.parquet, runs the REGISTERED Spark query and its REGISTERED
-oracle SQL on the same file through ``_both``, which returns both sides
+DuckDB oracle could silently disagree.  Each test writes crafted
+tables with ``_write`` (the testdata schema, left-out columns NULL),
+runs the REGISTERED Spark query and its REGISTERED oracle SQL on the
+same files through ``_both``, which returns both sides
 as the oracle gate's stringified canon frames (``tools/verify_local.py``:
 columns sorted by name, rows sorted by stringified values; the oracle's
 views are the table files present in the crafted dir), compares them,
 and then pins the expected rows so both engines being wrong together is
-also caught.  The later batches (``_b3``..``_b15``) reuse ``_both``.
+also caught.  The later batches (``_b3``..``_b15``) reuse ``_write``
+and ``_both``.
 """
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
-import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 import sanctum_spark.queries as qreg
+from conftest import SF_DIR
+from tools.fixtures import from_columns
 from tools.verify_local import canon, oracle_con
 
 qreg.load_all_modules()
@@ -27,28 +32,31 @@ qreg.load_all_modules()
 US = 1_000_000  # microseconds per second
 HOUR_US = 3600 * US
 
+# the fields of the row tuples the tests write, in order (``_cols``)
+EVENTS = "event_id ts user_id event_type value props"
+DOCS = "doc_id text lang source n_chars"
+EMBEDDINGS = "vec_id embedding label"
+ORDERS = "o_orderkey o_custkey o_orderstatus o_totalprice o_orderdate"
+PART = "p_partkey p_name p_brand p_type"
 
-def _write_events(tmp_path, rows):
-    """rows: (event_id, ts_us_epoch, user_id, event_type, value[, props]).
-    Writes the same naive timestamp[us] encoding the generated testdata
-    uses; props defaults to '{}' when a row omits it."""
-    tbl = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array(
-                [None if r[4] is None else float(r[4]) for r in rows],
-                pa.float64(),
-            ),
-            "props": pa.array(
-                [r[5] if len(r) > 5 else "{}" for r in rows], pa.string()
-            ),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "events.parquet"))
+
+def _write(tmp_path, table, **cols):
+    """Write ``table`` into ``tmp_path`` from ``cols`` ({column:
+    values}), in the schema of that table's testdata file (ts as the
+    naive timestamp[us] the generator writes); a column left out is
+    NULL.  Returns the directory, a crafted sf_dir."""
+    schema = pq.read_schema(os.path.join(SF_DIR, f"{table}.parquet"))
+    pq.write_table(from_columns(schema, cols),
+                   str(tmp_path / f"{table}.parquet"))
     return str(tmp_path)
+
+
+def _cols(names, tuples):
+    """``_write``'s {column: values} of row ``tuples`` whose fields are
+    the first columns of the space-separated ``names``."""
+    widths = {len(t) for t in tuples}
+    assert len(widths) <= 1, f"row tuples of mixed widths {widths}"
+    return dict(zip(names.split(), map(list, zip(*tuples))))
 
 
 def _both(spark, sf_dir, name):
@@ -66,7 +74,7 @@ def test_q163_q164_threshold_edges(spark, tmp_path):
     """k-anonymity / distinct-individuals gates at the exact thresholds:
     k rows releases, k-1 suppresses; k rows from l-1 individuals fails
     only the q164 gate.  One QI class per user_id band, same hour."""
-    from sanctum_spark.queries.pipeline7_q import K_ANON, L_DIVERSE
+    from sanctum_spark.queries.events_q import K_ANON, L_DIVERSE
 
     t0 = 1_700_000_000 * US  # any fixed instant, naive µs epoch
     rows = []
@@ -82,7 +90,7 @@ def test_q163_q164_threshold_edges(spark, tmp_path):
         rows.append(
             (eid := eid + 1, t0 + i, 300 + i % (L_DIVERSE - 1), "view", 110.0)
         )
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
 
     got, want = _both(spark, sf, "q163_k_anonymity")
     pd.testing.assert_frame_equal(got, want)
@@ -106,7 +114,7 @@ def test_q152_cep_deadline_boundary(spark, tmp_path):
     """The 48h CEP deadline is INCLUSIVE (<=) on both engines: a
     purchase exactly at view_ts + 48h completes the pattern; one
     nanosecond — here one µs, the fixture grain — later does not."""
-    from sanctum_spark.queries.pipeline6_q import CEP_WINDOW_NS
+    from sanctum_spark.queries.events_q import CEP_WINDOW_NS
 
     t0 = 1_700_000_000 * US
     deadline_us = t0 + CEP_WINDOW_NS // 1000  # 48h after the view
@@ -125,7 +133,7 @@ def test_q152_cep_deadline_boundary(spark, tmp_path):
         (8, deadline_us, 3, "click", 1.0),
         (9, deadline_us, 3, "purchase", 1.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q152_cep_pattern")
     pd.testing.assert_frame_equal(got, want)
     assert sorted(got["user_id"]) == ["1", "3"]
@@ -143,7 +151,7 @@ def test_q152_purchase_before_click_not_matched(spark, tmp_path):
         (2, t0 + HOUR_US, 1, "purchase", 1.0),
         (3, t0 + 2 * HOUR_US, 1, "click", 1.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q152_cep_pattern")
     pd.testing.assert_frame_equal(got, want)
     assert len(got) == 0
@@ -166,7 +174,7 @@ def test_q149_scd2_open_interval_and_ties(spark, tmp_path):
         (6, t0 + 1 * US, 2, "Y", 1.0),
         (7, t0 + 1 * US, 2, "Z", 1.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q149_scd2_intervals")
     pd.testing.assert_frame_equal(got, want)
 
@@ -198,7 +206,7 @@ def test_q150_psi_identical_periods_zero(spark, tmp_path):
     for period_t in (t_a, t_b):
         for i, v in enumerate([5.0, 25.0, 45.0, 65.0, 85.0]):
             rows.append((eid := eid + 1, period_t + i, i, "view", v))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q150_psi_drift")
     pd.testing.assert_frame_equal(got, want)
     assert set(got["psi"]) == {"0.0"}
@@ -207,33 +215,6 @@ def test_q150_psi_identical_periods_zero(spark, tmp_path):
 
 if __name__ == "__main__":
     pytest.main([__file__, "-q"])
-
-
-def _write_docs(tmp_path, rows):
-    """rows: (doc_id, text_or_None, lang, source, n_chars) — the
-    documents table schema."""
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([r[4] for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
-def _write_lineitem(tmp_path, prices):
-    tbl = pa.table(
-        {
-            "l_orderkey": pa.array(range(len(prices)), pa.int64()),
-            "l_extendedprice": pa.array(prices, pa.float64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "lineitem.parquet"))
-    return str(tmp_path)
 
 
 def test_q151_chi2_zero_on_independent_table(spark, tmp_path):
@@ -254,7 +235,7 @@ def test_q151_chi2_zero_on_independent_table(spark, tmp_path):
             for i in range(k):
                 ts = None if day is None else day + i
                 rows.append((eid := eid + 1, ts, i, etype, 1.0))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q151_chi2_independence")
     pd.testing.assert_frame_equal(got, want)
     row = got.iloc[0]
@@ -267,7 +248,8 @@ def test_q154_benford_price_boundary(spark, tmp_path):
     """The l_extendedprice >= 1 cut is inclusive on both engines
     (price 1.0 contributes digit 1, price 0.5 is excluded), and digit
     shares are exact at a tiny grain."""
-    sf = _write_lineitem(tmp_path, [0.5, 1.0, 1.5, 19.99, 100.0, 9.0])
+    sf = _write(tmp_path, "lineitem",
+                l_extendedprice=[0.5, 1.0, 1.5, 19.99, 100.0, 9.0])
     got, want = _both(spark, sf, "q154_benford_digits")
     pd.testing.assert_frame_equal(got, want)
     by_digit = {r["digit"]: r for _, r in got.iterrows()}
@@ -291,7 +273,7 @@ def test_q155_reservoir_weight_and_ties(spark, tmp_path):
         (4, "gamma delta", "en", "s", 100),
         (5, "other doc", "de", "s", 50),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q155_weighted_reservoir")
     pd.testing.assert_frame_equal(got, want)
     en = (
@@ -316,7 +298,7 @@ def test_q156_perfect_powerlaw_r2_one(spark, tmp_path):
             uid += 1
             for i in range(cnt):
                 rows.append((eid := eid + 1, t0 + eid, uid, "view", 1.0))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q156_powerlaw_fit")
     pd.testing.assert_frame_equal(got, want)
     row = got.iloc[0]
@@ -340,10 +322,10 @@ def test_q157_manifest_detects_substitution(spark, tmp_path):
     d_b = tmp_path / "b"
     d_a.mkdir()
     d_b.mkdir()
-    sf_a = _write_docs(d_a, clean)
+    sf_a = _write(d_a, "documents", **_cols(DOCS, clean))
     corrupted = [r if r[0] != 3 else (3, "doc four text", "en", "s", 13)
                  for r in clean]
-    sf_b = _write_docs(d_b, corrupted)
+    sf_b = _write(d_b, "documents", **_cols(DOCS, corrupted))
 
     got_a, want_a = _both(spark, sf_a, "q157_shard_manifest")
     pd.testing.assert_frame_equal(got_a, want_a)
@@ -365,7 +347,7 @@ def test_q162_bm25_null_text_rows(spark, tmp_path):
         (4, "nothing relevant here", "en", "s", 21),
         (5, "partition pruning with spark", "en", "s", 28),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q162_bm25_topk")
     pd.testing.assert_frame_equal(got, want)
     assert "3" not in set(got["doc_id"])

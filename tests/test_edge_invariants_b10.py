@@ -16,7 +16,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from test_edge_invariants import _both, _write_docs
+from test_edge_invariants import DOCS, EMBEDDINGS, _both, _cols, _write
 
 CJK = "漢字テキストに空白なし"
 EMOJI = "emoji 👨‍👩‍👧‍👦 text 🎉 done"
@@ -31,7 +31,7 @@ def _uni_docs(tmp_path):
     rows = [
         (i + 1, t, "xx", "uni", len(t)) for i, t in enumerate(texts)
     ]
-    return _write_docs(tmp_path, rows)
+    return _write(tmp_path, "documents", **_cols(DOCS, rows))
 
 
 def test_q90_unicode_byte_counts(spark, tmp_path):
@@ -102,7 +102,6 @@ def test_degenerate_embeddings_family(spark, tmp_path):
     are NULL (try_element_at, never an ANSI crash), a ragged vector has
     NULL cosine (the oracle's dim guard vs zip_with NULL padding), and
     the ANN quartet neither crashes nor scores non-finite vectors."""
-    from test_edge_invariants_b3 import _write_embeddings
 
     import sanctum_spark.queries as qreg
 
@@ -117,7 +116,7 @@ def test_degenerate_embeddings_family(spark, tmp_path):
         (25, [float("inf")] * dim, 1),
         (26, [0.5] * dim, None),            # NULL label
     ]
-    sf = _write_embeddings(tmp_path, rows)
+    sf = _write(tmp_path, "embeddings", **_cols(EMBEDDINGS, rows))
     for name in ("q33_explode_positions", "q43_array_manipulation",
                  "q54_array_functions", "q96_array_higher_order",
                  "q73_cosine_topk"):

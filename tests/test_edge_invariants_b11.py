@@ -8,10 +8,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from test_edge_invariants import _both
-from test_edge_invariants_b3 import _write_part
-from test_edge_invariants_b4 import _write_orders
-from test_edge_invariants_b6 import _write_customer_fk
+from test_edge_invariants import ORDERS, PART, _both, _cols, _write
 
 
 def test_q11_not_in_null_trap(spark, tmp_path):
@@ -20,10 +17,13 @@ def test_q11_not_in_null_trap(spark, tmp_path):
     Spark's left_anti agree that the order-less customer survives and
     the NULL key matches nobody."""
     d = pd.Timestamp("2024-01-01").value // 1000
-    _write_customer_fk(tmp_path, [(1, 0), (2, 0), (3, 0)])
-    _write_orders(
-        tmp_path,
-        [(10, 1, "O", 1.0, d), (11, None, "O", 1.0, d)],  # NULL o_custkey
+    _write(tmp_path, "customer", c_custkey=[1, 2, 3],
+           c_name=["Customer#1", "Customer#2", "Customer#3"])
+    _write(
+        tmp_path, "orders",
+        **_cols("o_orderkey o_custkey o_orderstatus o_totalprice o_orderdate",
+                [(10, 1, "O", 1.0, d),
+                 (11, None, "O", 1.0, d)]),  # NULL o_custkey
     )
     got, want = _both(spark, str(tmp_path), "q11_anti_join")
     pd.testing.assert_frame_equal(got, want)
@@ -35,9 +35,11 @@ def test_q50_q53_null_concat_semantics(spark, tmp_path):
     NULL args while Spark's concat propagates NULL — the explicit
     COALESCE('') pins brand_type ':' and trimmed_type '' identically,
     and the ||-based mixed_case stays NULL on both."""
-    _write_part(
-        tmp_path,
-        [(1, "cat", "B1", "T1"), (2, None, None, None)],
+    _write(
+        tmp_path, "part",
+        **_cols(PART,
+                [(1, "cat", "B1", "T1"), (2, None, None, None)]),
+        p_size=[1, 1], p_retailprice=[1.0, 1.0],
     )
     for name in ("q50_scalar_functions", "q53_string_functions"):
         got, want = _both(spark, str(tmp_path), name)
@@ -56,14 +58,14 @@ def test_q128_null_dimension_excluded(spark, tmp_path):
     without the filter, Spark sorts NULLs FIRST in ASC while DuckDB
     sorts them LAST, silently shifting the LIMIT window."""
     d = lambda s: pd.Timestamp(s).value // 1000
-    _write_orders(
-        tmp_path,
-        [
+    _write(
+        tmp_path, "orders",
+        **_cols(ORDERS, [
             (1, 5, "O", 1.0, d("1992-02-01")),
             (2, None, "O", 1.0, d("1992-03-01")),   # NULL custkey: excluded
             (3, 7, "O", 1.0, None),                 # NULL date: excluded
             (4, 6, "O", 1.0, d("1992-02-02")),
-        ],
+        ]),
     )
     got, want = _both(spark, str(tmp_path), "q128_zorder_key")
     pd.testing.assert_frame_equal(got, want)

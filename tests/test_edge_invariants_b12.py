@@ -29,7 +29,7 @@ import json
 import pandas as pd
 import pytest
 
-from test_edge_invariants import US, _both, _write_docs, _write_events
+from test_edge_invariants import DOCS, EVENTS, US, _both, _cols, _write
 
 T0 = 1_700_000_000 * US
 HOUR = 3600 * US
@@ -48,7 +48,7 @@ def test_null_text_docs_never_pair(spark, tmp_path):
         (20, a, "en", "s", len(a)),
         (3, a, "en", "s", len(a)),  # identical but 3 % 4 != 0: out of slice
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q91_ngram_jaccard")
     pd.testing.assert_frame_equal(got, want)
     assert got[["id_a", "id_b"]].values.tolist() == [["16", "20"]]
@@ -67,7 +67,7 @@ def test_null_text_docs_cluster_as_singletons(spark, tmp_path):
         (5, None, "en", "s", None),
         (6, b, "en", "s", len(b)),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q99_dedup_clusters")
     pd.testing.assert_frame_equal(got, want)
     # no NULL doc id may share a cluster with another doc
@@ -90,7 +90,7 @@ def test_minhash_skips_null_text(spark, tmp_path):
         (3, None, "en", "s", None),
         (4, None, "en", "s", None),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     import sanctum_spark.queries as qreg
 
     out = qreg.REGISTRY["q74_minhash_lsh_pairs"].fn(spark, sf).toPandas()
@@ -110,7 +110,7 @@ def test_q64_integer_grain_sum_at_half_boundary(spark, tmp_path):
         (4, T0 + HOUR, 1, "click", 0.0005),
         (5, T0 + HOUR + 1, 1, "click", None),  # NULL skipped by SUM
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q64_tumbling_window")
     pd.testing.assert_frame_equal(got, want)
     import math
@@ -145,7 +145,7 @@ def test_q88_integer_grain_series_and_pairwise_deletion(spark, tmp_path):
         (e, t, u, et, None if (u == 3 and t == T0 + 2 * HOUR) else v)
         for (e, t, u, et, v) in rows
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q88_user_correlation")
     pd.testing.assert_frame_equal(got, want)
     # user 3 still pairs (6 shared hours >= 5; the NULL hour counts for
@@ -161,7 +161,7 @@ def test_q84_share_e2_half_boundary(spark, tmp_path):
         (2, T0, 1, "view", 53.25, json.dumps({"k": 4})),   # 26.625 -> 2663
         (3, T0, 1, "view", None, json.dumps({"k": 0})),    # NULL share row
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q84_spell_fanout_udtf")
     pd.testing.assert_frame_equal(got, want)
     by = {(r["event_id"], r["copy_idx"]): r["share_e2"] for _, r in got.iterrows()}
@@ -182,7 +182,7 @@ def test_q153_all_null_value_day_excluded(spark, tmp_path):
         (3, T0 + 24 * HOUR, 2, "view", None),  # mixed day: NULL skipped
         (4, T0 + 24 * HOUR, 2, "view", 12.5),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q153_dtw_similarity")
     pd.testing.assert_frame_equal(got, want)
     assert set(got["user_id"]) == {"2"}

@@ -32,7 +32,7 @@ import json
 import pandas as pd
 import pytest
 
-from test_edge_invariants import US, _both, _write_events
+from test_edge_invariants import EVENTS, US, _both, _cols, _write
 
 T0 = 1_700_000_000 * US
 
@@ -55,7 +55,7 @@ def _k_class_fixture(tmp_path):
         (11, T0 + 11, 13, "view", 11.0, "{}"),                    # missing key
         (12, T0 + 12, 13, "view", 12.0, json.dumps({"k": 2})),    # plain small int
     ]
-    return _write_events(tmp_path, rows)
+    return _write(tmp_path, "events", **_cols(EVENTS, rows))
 
 
 def test_quoted_json_k_oracle_parity(spark, tmp_path):
@@ -107,7 +107,7 @@ def test_q83_cancelling_mass_null_both_sides(spark, tmp_path):
         (4, T0 + 4, 2, "view", 1.0),
         (5, T0 + 5, 2, "view", 2.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q83_grouped_agg_udf")
     pd.testing.assert_frame_equal(got, want)
     by_user = dict(zip(got["user_id"], got["self_weighted"]))

@@ -17,8 +17,7 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 
-from test_edge_invariants import _both, _write_docs
-from test_edge_invariants_b3 import _write_part
+from test_edge_invariants import DOCS, PART, _both, _cols, _write
 
 
 def test_helper_matches_spark_on_multibyte(spark):
@@ -68,7 +67,7 @@ def test_q115_multibyte_vocab_oracle_parity(spark, tmp_path):
         (2, "漢字 漢宇 naive", "zh", "s", 11),
         (3, "naïve naive plain", "en", "s", 17),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q115_fuzzy_vocab")
     pd.testing.assert_frame_equal(got, want)
     pairs = {
@@ -90,7 +89,7 @@ def test_q161_multibyte_names_oracle_parity(spark, tmp_path):
         (4, "unrelated name", "B1", "roast"),
         (5, "café blend dark", "B2", "roast"),   # other block -> own entity
     ]
-    sf = _write_part(tmp_path, rows)
+    sf = _write(tmp_path, "part", **_cols(PART, rows))
     got, want = _both(spark, sf, "q161_entity_resolution")
     pd.testing.assert_frame_equal(got, want)
     by_entity = {

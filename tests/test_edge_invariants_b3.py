@@ -17,41 +17,18 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _write_docs, _write_events
-
-
-def _write_embeddings(tmp_path, rows):
-    """rows: (vec_id, [float, ...], label) — the embeddings table schema
-    (list<float32>, int32 label) the generated testdata uses."""
-    tbl = pa.table(
-        {
-            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-            "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
-            "label": pa.array([r[2] for r in rows], pa.int32()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-    return str(tmp_path)
-
-
-def _write_part(tmp_path, rows):
-    """rows: (p_partkey, p_name, p_brand, p_type)."""
-    tbl = pa.table(
-        {
-            "p_partkey": pa.array([r[0] for r in rows], pa.int64()),
-            "p_name": pa.array([r[1] for r in rows], pa.string()),
-            "p_brand": pa.array([r[2] for r in rows], pa.string()),
-            "p_type": pa.array([r[3] for r in rows], pa.string()),
-            "p_size": pa.array([1] * len(rows), pa.int32()),
-            "p_retailprice": pa.array([1.0] * len(rows), pa.float64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "part.parquet"))
-    return str(tmp_path)
+from test_edge_invariants import (
+    DOCS,
+    EMBEDDINGS,
+    EVENTS,
+    PART,
+    US,
+    _both,
+    _cols,
+    _write,
+)
 
 
 def test_q131_merge_with_absent_groups(spark, tmp_path):
@@ -69,7 +46,7 @@ def test_q131_merge_with_absent_groups(spark, tmp_path):
         (5, "x", "pt", "s", 1),
         (7, "x", "pt", "s", 2),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q131_incremental_agg")
     pd.testing.assert_frame_equal(got, want)
     by_lang = {r["lang"]: r for _, r in got.iterrows()}
@@ -86,7 +63,8 @@ def test_q141_entropy_degenerate_and_uniform(spark, tmp_path):
     693147 — on both engines."""
     d1 = tmp_path / "single"
     d1.mkdir()
-    sf1 = _write_docs(d1, [(1, "a b c d", "en", "s1", 7)])
+    sf1 = _write(d1, "documents",
+                 **_cols(DOCS, [(1, "a b c d", "en", "s1", 7)]))
     got, want = _both(spark, sf1, "q141_mix_entropy")
     pd.testing.assert_frame_equal(got, want)
     row = got.iloc[0]
@@ -96,13 +74,13 @@ def test_q141_entropy_degenerate_and_uniform(spark, tmp_path):
 
     d2 = tmp_path / "uniform"
     d2.mkdir()
-    sf2 = _write_docs(
-        d2,
-        [
+    sf2 = _write(
+        d2, "documents",
+        **_cols(DOCS, [
             (1, "a b c d", "en", "s1", 7),  # 4 tokens
             (2, "e f", "en", "s2", 3),      # 2 + 2 = 4 tokens
             (3, "g h", "en", "s2", 3),
-        ],
+        ]),
     )
     got, want = _both(spark, sf2, "q141_mix_entropy")
     pd.testing.assert_frame_equal(got, want)
@@ -125,7 +103,7 @@ def test_q142_shingle_window_and_cap_edges(spark, tmp_path):
         (5, long_text, "en", "E", len(long_text)),
         (6, long_text, "en", "F", len(long_text)),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q142_cross_source_overlap")
     pd.testing.assert_frame_equal(got, want)
     pairs = {
@@ -152,7 +130,7 @@ def test_q144_segment_boundaries(spark, tmp_path):
         (3, "u1 u2 u3 u4", "en", "s", 11),             # short: 1 segment
         (4, " ".join(f"v{i}" for i in range(21)), "en", "s", 60),  # 3 segs
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q144_segment_dedup")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
@@ -174,7 +152,7 @@ def test_q146_cluster_cosine_identity_tie_and_zero(spark, tmp_path):
         (6, [0.0, 0.0], 2),                        # lone zero vector
         (7, [1.0, 0.0], 3), (8, [0.0, 0.0], 3),   # zero vec in a pair
     ]
-    sf = _write_embeddings(tmp_path, rows)
+    sf = _write(tmp_path, "embeddings", **_cols(EMBEDDINGS, rows))
     got, want = _both(spark, sf, "q146_embedding_clusters")
     pd.testing.assert_frame_equal(got, want)
     by_label = {r["label"]: r for _, r in got.iterrows()}
@@ -201,7 +179,7 @@ def test_q148_range_frame_day_edges(spark, tmp_path):
         (5, day0, 3, "view", 1.5),             # same-day pair
         (6, day0 + 3600 * US, 3, "view", 2.5),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q148_trailing_range_frame")
     pd.testing.assert_frame_equal(got, want)
     by_key = {(r["user_id"], r["day"][:10]): r for _, r in got.iterrows()}
@@ -225,7 +203,7 @@ def test_q130_week_bin_boundary(spark, tmp_path):
         (2, sun1, 1, "view", 1.0),
         (3, mon2, 1, "view", 1.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q130_binned_range_join")
     pd.testing.assert_frame_equal(got, want)
     weeks = {r["week_start"][:10]: r["n_events"] for _, r in got.iterrows()}
@@ -234,7 +212,7 @@ def test_q130_week_bin_boundary(spark, tmp_path):
 
 def _u16(text: str) -> int:
     """Python replica of the engines' md5-last-4-hex-digits u16 sampler
-    (pipeline6_q._u16_spark / _u16_sql)."""
+    (corpus_q.u16_spark / u16_sql)."""
     return int(hashlib.md5(text.encode()).hexdigest()[28:32], 16)
 
 
@@ -265,7 +243,7 @@ def test_q159_leakage_drop_semantics(spark, tmp_path):
         (i + 1, txt, "en", "s", len(txt))
         for i, txt in enumerate([t1, t2, c1, c2, c3, c4, c5])
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q159_leakage_free_split")
     pd.testing.assert_frame_equal(got, want)
     split = dict(zip(got["doc_id"], got["split"]))
@@ -289,7 +267,7 @@ def test_q161_transitive_closure_and_blocking(spark, tmp_path):
         (6, "dog", "B1", "T1"),
         (7, "dogs", "B1", "T1"),  # length-delta exactly 1
     ]
-    sf = _write_part(tmp_path, rows)
+    sf = _write(tmp_path, "part", **_cols(PART, rows))
     got, want = _both(spark, sf, "q161_entity_resolution")
     pd.testing.assert_frame_equal(got, want)
     by_ent = {r["entity_id"]: r for _, r in got.iterrows()}

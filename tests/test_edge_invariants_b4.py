@@ -16,31 +16,12 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _write_docs, _write_events
+from test_edge_invariants import DOCS, EVENTS, ORDERS, US, _both, _cols, _write
 
 
 _NULLISH = {"nan", "None", "<NA>", "NaT"}
-
-
-def _write_orders(tmp_path, rows):
-    """rows: (o_orderkey, o_custkey|None, o_orderstatus|None,
-    o_totalprice, o_orderdate_us)."""
-    tbl = pa.table(
-        {
-            "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "o_custkey": pa.array([r[1] for r in rows], pa.int64()),
-            "o_orderstatus": pa.array([r[2] for r in rows], pa.string()),
-            "o_totalprice": pa.array([r[3] for r in rows], pa.float64()),
-            "o_orderdate": pa.array([r[4] for r in rows], pa.timestamp("us")),
-            "o_orderpriority": pa.array(["1-URGENT"] * len(rows), pa.string()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "orders.parquet"))
-    return str(tmp_path)
 
 
 def test_q63_asof_tie_and_no_match(spark, tmp_path):
@@ -56,15 +37,15 @@ def test_q63_asof_tie_and_no_match(spark, tmp_path):
         (3, d("2024-01-06 00:00:00"), 2, "view", 1.0),  # normal prior order
         (4, d("2024-01-06 00:00:00"), 3, "view", 1.0),  # user with no orders
     ]
-    _write_events(tmp_path, ev_rows)
-    _write_orders(
-        tmp_path,
-        [
+    _write(tmp_path, "events", **_cols(EVENTS, ev_rows))
+    _write(
+        tmp_path, "orders",
+        **_cols(ORDERS, [
             (11, 1, "O", 10.0, d("2024-01-10")),
             (12, 1, "O", 10.0, d("2024-01-10")),  # same date, higher key wins
             (21, 2, "F", 10.0, d("2024-01-05")),
             (31, 9, "F", 10.0, d("2024-01-01")),  # order for an absent user
-        ],
+        ]),
     )
     got, want = _both(spark, str(tmp_path), "q63_asof_join")
     pd.testing.assert_frame_equal(got, want)
@@ -89,7 +70,7 @@ def test_q91_jaccard_threshold_edge(spark, tmp_path):
         (12, c, "en", "s", len(c)),
         (5, a, "en", "s", len(a)),  # identical to a but 5%4 != 0: ignored
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q91_ngram_jaccard")
     pd.testing.assert_frame_equal(got, want)
     assert len(got) == 1
@@ -109,7 +90,7 @@ def test_q100_rollup_merge_equals_direct(spark, tmp_path):
         (4, d("2024-01-08 10:00:00"), 2, "b", 5.00),
         (5, d("2024-01-08 11:00:00"), 2, "b", 1.00),  # min in the 2nd hour
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q100_hypertable_rollup")
     pd.testing.assert_frame_equal(got, want)
     by_key = {(r["day"], r["event_type"]): r for _, r in got.iterrows()}
@@ -131,7 +112,7 @@ def test_q104_containment_threshold_edge(spark, tmp_path):
         (1, doc_a, "en", "s", len(doc_a)),
         (2, doc_b, "en", "s", len(doc_b)),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q104_decontamination")
     pd.testing.assert_frame_equal(got, want)
     assert len(got) == 1
@@ -150,7 +131,7 @@ def test_q120_incremental_dedup_suppression(spark, tmp_path):
         (9, "batch dup", "en", "s", 9),      # new, internal dup -> dropped
         (12, "fresh text", "en", "s", 10),   # new, unique -> kept
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q120_incremental_dedup")
     pd.testing.assert_frame_equal(got, want)
     md5 = lambda t: hashlib.md5(t.encode()).hexdigest()
@@ -163,14 +144,14 @@ def test_q132_column_stats_with_nulls(spark, tmp_path):
     min/max skip them — for both a numeric and a string column, on both
     engines."""
     d = pd.Timestamp("2024-01-01").value // 1000
-    _write_orders(
-        tmp_path,
-        [
+    _write(
+        tmp_path, "orders",
+        **_cols(ORDERS, [
             (1, None, None, 5.5, d),
             (2, 5, "F", 5.5, d),
             (3, 5, "O", 7.25, d),
             (4, 7, "F", 7.25, d),
-        ],
+        ]),
     )
     got, want = _both(spark, str(tmp_path), "q132_column_stats")
     pd.testing.assert_frame_equal(got, want)
@@ -195,7 +176,7 @@ def test_q137_single_hour_gap(spark, tmp_path):
         (4, d("2024-01-08 11:45:00"), 2, "dense", 1.0),
         (5, d("2024-01-08 10:00:00"), 3, "single", 1.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q137_time_gaps")
     pd.testing.assert_frame_equal(got, want)
     assert dict(zip(got["event_type"], got["n_missing_hours"])) == {"gap": "1"}
@@ -211,7 +192,7 @@ def test_q138_growth_edges(spark, tmp_path):
     for wk, n in (("2024-01-01", 2), ("2024-01-08", 4), ("2024-01-15", 2)):
         for i in range(n):
             rows.append((eid := eid + 1, d(wk) + i * US, i, "g", 1.0))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q138_wow_growth")
     pd.testing.assert_frame_equal(got, want)
     by_wk = {r["wk"][:10]: r for _, r in got.iterrows()}
@@ -235,7 +216,7 @@ def test_q145_zero_mad_outliers(spark, tmp_path):
         rows.append((eid := eid + 1, t0 + eid, 2, "burst", v))
     for v in [1.0, 2.0, 3.0, 4.0, 100.0]:
         rows.append((eid := eid + 1, t0 + eid, 3, "spread", v))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q145_mad_outliers")
     pd.testing.assert_frame_equal(got, want)
     by_type = {r["event_type"]: r for _, r in got.iterrows()}
@@ -256,7 +237,7 @@ def test_q145_null_event_type_dropped(spark, tmp_path):
         rows.append((eid := eid + 1, t0 + eid, 1, "spread", v))
     for v in [500.0, 600.0, 700.0]:
         rows.append((eid := eid + 1, t0 + eid, 2, None, v))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q145_mad_outliers")
     pd.testing.assert_frame_equal(got, want)
     assert got["event_type"].tolist() == ["spread"]

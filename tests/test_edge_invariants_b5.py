@@ -14,39 +14,9 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _write_docs, _write_events
-
-
-def _write_customer(tmp_path, rows):
-    """rows: (c_custkey, c_acctbal)."""
-    tbl = pa.table(
-        {
-            "c_custkey": pa.array([r[0] for r in rows], pa.int64()),
-            "c_name": pa.array([f"Customer#{r[0]}" for r in rows], pa.string()),
-            "c_nationkey": pa.array([0] * len(rows), pa.int32()),
-            "c_acctbal": pa.array([r[1] for r in rows], pa.float64()),
-            "c_mktsegment": pa.array(["BUILDING"] * len(rows), pa.string()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "customer.parquet"))
-    return str(tmp_path)
-
-
-def _write_lineitem_rf(tmp_path, rows):
-    """rows: (l_returnflag, l_extendedprice)."""
-    tbl = pa.table(
-        {
-            "l_orderkey": pa.array(range(len(rows)), pa.int64()),
-            "l_returnflag": pa.array([r[0] for r in rows], pa.string()),
-            "l_extendedprice": pa.array([r[1] for r in rows], pa.float64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "lineitem.parquet"))
-    return str(tmp_path)
+from test_edge_invariants import DOCS, EVENTS, US, _both, _cols, _write
 
 
 def test_q92_quality_gate_boundaries(spark, tmp_path):
@@ -73,7 +43,7 @@ def test_q92_quality_gate_boundaries(spark, tmp_path):
         (5, toobig, "en", "s", 20001),
         (6, keep100, "en", "s", 100),  # exact dup of 1 -> dropped
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q92_corpus_clean")
     pd.testing.assert_frame_equal(got, want)
     assert sorted(got["doc_id"]) == ["1", "4"]
@@ -88,7 +58,7 @@ def test_q105_repetition_degenerate_docs(spark, tmp_path):
         (2, "a a a a a", "en", "s", 9),
         (3, "b c d e", "en", "s", 7),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q105_repetition_filter")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
@@ -111,8 +81,9 @@ def test_q111_cdc_tombstone_tie_insert(spark, tmp_path):
         (40, t, 5, "error", 0.0),        # key 5: tombstone ...
         (41, t + 1, 5, "view", 7.0),     # ... overridden 1 us later
     ]
-    _write_events(tmp_path, ev_rows)
-    _write_customer(tmp_path, [(1, 10.0), (2, 20.0), (3, 30.0), (5, 50.0)])
+    _write(tmp_path, "events", **_cols(EVENTS, ev_rows))
+    _write(tmp_path, "customer", c_custkey=[1, 2, 3, 5],
+           c_acctbal=[10.0, 20.0, 30.0, 50.0])
     got, want = _both(spark, str(tmp_path), "q111_cdc_upsert")
     pd.testing.assert_frame_equal(got, want)
     by_key = {r["key"]: r for _, r in got.iterrows()}
@@ -138,7 +109,7 @@ def test_q112_epoch_week_boundary(spark, tmp_path):
         (4, t0, 2, "view", 1.0),                     # never purchases
         (5, t0 + week_us, 2, "click", 1.0),
     ]
-    sf = _write_events(tmp_path, ev_rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, ev_rows))
     got, want = _both(spark, sf, "q112_cohort_retention")
     pd.testing.assert_frame_equal(got, want)
     rows = {(r["cohort"], r["weeks_since"]): r["n_users"] for _, r in got.iterrows()}
@@ -150,7 +121,7 @@ def test_q115_length_band_edges(spark, tmp_path):
     in, lev 3 at delta 0 is out — and because lev >= |len delta|, the
     band is exact, never lossy."""
     rows = [(1, "a ab abc abcd xyz", "en", "s", 17)]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q115_fuzzy_vocab")
     pd.testing.assert_frame_equal(got, want)
     pairs = {(r["w1"], r["w2"]): r["dist"] for _, r in got.iterrows()}
@@ -169,7 +140,7 @@ def test_q116_winsorize_clip_boundaries(spark, tmp_path):
     the average untouched; a symmetric 0..20 series clips exactly its
     two extremes."""
     rows = [("A", float(v)) for v in range(21)] + [("B", 5.0)] * 4
-    sf = _write_lineitem_rf(tmp_path, rows)
+    sf = _write(tmp_path, "lineitem", **_cols("l_returnflag l_extendedprice", rows))
     got, want = _both(spark, sf, "q116_winsorize")
     pd.testing.assert_frame_equal(got, want)
     by_flag = {r["l_returnflag"]: r for _, r in got.iterrows()}
@@ -194,7 +165,7 @@ def test_q126_sampling_edge_one_unit(spark, tmp_path):
         (2, drop_text, "en", "s", 100),
         (3, always, "en", "s", 1000),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q126_weighted_sample")
     pd.testing.assert_frame_equal(got, want)
     kept = dict(zip(got["doc_id"], got["w"]))
@@ -211,7 +182,7 @@ def test_q139_trailing_window_exclusive_lower(spark, tmp_path):
         (2, d("2024-01-02 10:00:00"), 2, "view", 1.0),  # 6 days before the 8th
         (3, d("2024-01-08 10:00:00"), 3, "view", 1.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q139_active_users")
     pd.testing.assert_frame_equal(got, want)
     by_day = {r["day"][:10]: r for _, r in got.iterrows()}

@@ -12,61 +12,18 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _write_docs, _write_events
-from test_edge_invariants_b3 import _write_embeddings
-from test_edge_invariants_b4 import _write_orders
-
-
-def _write_customer_fk(tmp_path, rows):
-    """rows: (c_custkey, c_nationkey|None)."""
-    tbl = pa.table(
-        {
-            "c_custkey": pa.array([r[0] for r in rows], pa.int64()),
-            "c_name": pa.array([f"Customer#{r[0]}" for r in rows], pa.string()),
-            "c_nationkey": pa.array([r[1] for r in rows], pa.int32()),
-            "c_acctbal": pa.array([0.0] * len(rows), pa.float64()),
-            "c_mktsegment": pa.array(["BUILDING"] * len(rows), pa.string()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "customer.parquet"))
-
-
-def _write_lineitem_fk(tmp_path, orderkeys):
-    tbl = pa.table(
-        {
-            "l_orderkey": pa.array(orderkeys, pa.int64()),
-            "l_extendedprice": pa.array([1.0] * len(orderkeys), pa.float64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "lineitem.parquet"))
-
-
-def _write_nation(tmp_path, keys):
-    tbl = pa.table(
-        {
-            "n_nationkey": pa.array(keys, pa.int32()),
-            "n_name": pa.array([f"N{k}" for k in keys], pa.string()),
-            "n_regionkey": pa.array([0] * len(keys), pa.int32()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "nation.parquet"))
-
-
-def _write_supplier(tmp_path, rows):
-    """rows: (s_suppkey, s_nationkey)."""
-    tbl = pa.table(
-        {
-            "s_suppkey": pa.array([r[0] for r in rows], pa.int64()),
-            "s_name": pa.array([f"S{r[0]}" for r in rows], pa.string()),
-            "s_nationkey": pa.array([r[1] for r in rows], pa.int32()),
-            "s_acctbal": pa.array([0.0] * len(rows), pa.float64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "supplier.parquet"))
+from test_edge_invariants import (
+    DOCS,
+    EMBEDDINGS,
+    EVENTS,
+    ORDERS,
+    US,
+    _both,
+    _cols,
+    _write,
+)
 
 
 def test_q73_topk_tie_at_cutoff(spark, tmp_path):
@@ -83,7 +40,7 @@ def test_q73_topk_tie_at_cutoff(spark, tmp_path):
     # zero-norm candidate: NULL cosine on both engines (ranked last by
     # DESC), never an ANSI DIVIDE_BY_ZERO — the raw-`/` crash fixed in r6
     rows.append((13, [0.0, 0.0], 1))
-    sf = _write_embeddings(tmp_path, rows)
+    sf = _write(tmp_path, "embeddings", **_cols(EMBEDDINGS, rows))
     got, want = _both(spark, sf, "q73_cosine_topk")
     pd.testing.assert_frame_equal(got, want)
     assert len(got) == 10
@@ -114,7 +71,7 @@ def test_q95_strict_funnel_ordering(spark, tmp_path):
         (11, t, 5, "view", 1.0), (12, t + 5 * s, 5, "view", 1.0),
         (13, t + 2 * s, 5, "click", 1.0), (14, t + 3 * s, 5, "purchase", 1.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q95_funnel")
     pd.testing.assert_frame_equal(got, want)
     by_user = {r["user_id"]: r for _, r in got.iterrows()}
@@ -130,7 +87,7 @@ def test_q101_top100_cutoff_tie(spark, tmp_path):
     doc1 = " ".join(toks)                       # 149 distinct bigrams
     doc2 = "w001 w002"                          # lifts one bigram to 2
     rows = [(1, doc1, "en", "s", len(doc1)), (2, doc2, "en", "s", len(doc2))]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q101_vocab_bigrams")
     pd.testing.assert_frame_equal(got, want)
     assert len(got) == 100
@@ -151,7 +108,7 @@ def test_q106_idf_zero_and_term_ties(spark, tmp_path):
         (2, "common x1", "en", "s", 9),
         (3, "common y1 y2 y3", "en", "s", 15),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q106_tfidf_terms")
     pd.testing.assert_frame_equal(got, want)
     ln3 = f"{round(math.log(3) + 1e-9, 6)}"
@@ -176,15 +133,17 @@ def test_q113_lateral_top3_tie(spark, tmp_path):
     for t in ("region", "nation", "supplier", "part", "lineitem",
               "events", "documents", "embeddings"):
         shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path)
-    _write_customer_fk(tmp_path, [(1, 0), (2, 0), (3, 0), (4, 0)])
-    _write_orders(
-        tmp_path,
-        [
+    keys = [1, 2, 3, 4]
+    _write(tmp_path, "customer", c_custkey=keys, c_nationkey=[0] * 4,
+           c_name=[f"Customer#{k}" for k in keys])
+    _write(
+        tmp_path, "orders",
+        **_cols(ORDERS, [
             (101, 1, "O", 10.0, d), (102, 1, "O", 9.0, d),
             (103, 1, "O", 9.0, d), (104, 1, "O", 9.0, d),  # tie: 104 out
             (201, 2, "O", 5.0, d), (202, 2, "O", 4.0, d), (203, 2, "O", 3.0, d),
             (301, 3, "O", 1.0, d),
-        ],
+        ]),
     )
     got, want = _both(spark, str(tmp_path), "q113_lateral_topk")
     pd.testing.assert_frame_equal(got, want)
@@ -210,7 +169,7 @@ def test_q118_bin_edges_and_constant_group(spark, tmp_path):
         (4, t, 1, "r", 10.0),   # hi -> floor 10 -> clamp 9
         (5, t, 2, "c", 7.0), (6, t, 2, "c", 7.0), (7, t, 2, "c", 7.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q118_histogram")
     pd.testing.assert_frame_equal(got, want)
     bins = {(r["event_type"], r["bin"]): r["n"] for _, r in got.iterrows()}
@@ -225,14 +184,15 @@ def test_q136_orphans_including_null_fk(spark, tmp_path):
     counts as an orphan on both engines — alongside ordinary dangling
     keys on all four constraint edges."""
     d = pd.Timestamp("2024-01-01").value // 1000
-    _write_nation(tmp_path, [1, 2])
-    _write_customer_fk(tmp_path, [(1, 1), (2, 99), (3, None)])
-    _write_orders(
-        tmp_path,
-        [(10, 1, "O", 1.0, d), (11, 42, "O", 1.0, d), (12, None, "O", 1.0, d)],
+    _write(tmp_path, "nation", n_nationkey=[1, 2])
+    _write(tmp_path, "customer", c_custkey=[1, 2, 3], c_nationkey=[1, 99, None])
+    _write(
+        tmp_path, "orders",
+        **_cols(ORDERS, [(10, 1, "O", 1.0, d), (11, 42, "O", 1.0, d),
+                         (12, None, "O", 1.0, d)]),
     )
-    _write_lineitem_fk(tmp_path, [10, 10, 99])
-    _write_supplier(tmp_path, [(1, 1), (2, 77)])
+    _write(tmp_path, "lineitem", l_orderkey=[10, 10, 99])
+    _write(tmp_path, "supplier", s_suppkey=[1, 2], s_nationkey=[1, 77])
     got, want = _both(spark, str(tmp_path), "q136_referential_integrity")
     pd.testing.assert_frame_equal(got, want)
     orphans = dict(zip(got["fk"], got["n_orphans"]))
@@ -259,7 +219,7 @@ def test_q158_keeper_quality_beats_doc_id(spark, tmp_path):
         (4, c, "en", "s", len(c)),   # ... lower doc_id keeps
         (5, "u1 u2 u3 u4 u5", "en", "s", 14),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q158_quality_keeper")
     pd.testing.assert_frame_equal(got, want)
     by_cluster = {r["cluster_id"]: r for _, r in got.iterrows()}

@@ -17,7 +17,7 @@ import math
 import pandas as pd
 import pytest
 
-from test_edge_invariants import US, _both, _write_docs, _write_events
+from test_edge_invariants import DOCS, EVENTS, US, _both, _cols, _write
 
 
 def test_q108_pack_boundary_and_block_prefix(spark, tmp_path):
@@ -31,7 +31,7 @@ def test_q108_pack_boundary_and_block_prefix(spark, tmp_path):
         (64, " ".join(["x"] * 500), "en", "s", 1),   # cum 612 -> pack 1
         (130, "x", "en", "s", 1),                    # cum 1112 -> pack 2
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q108_sequence_packing")
     pd.testing.assert_frame_equal(got, want)
     by_pack = {r["pack_id"]: r for _, r in got.iterrows()}
@@ -52,7 +52,7 @@ def test_q110_chunk_grid_remainders(spark, tmp_path):
         (3, mk("c", 25), "en", "s", 1),
         (4, "solo", "en", "s", 1),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q110_context_chunks")
     pd.testing.assert_frame_equal(got, want)
     sizes = {
@@ -79,7 +79,7 @@ def test_q122_lm_smoothing_extremes(spark, tmp_path):
         (10, "bbbb", "en", "s", 4),   # held-out, fully unseen
         (15, "cc", "en", "s", 2),     # held-out, below trigram length
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q122_lm_score")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
@@ -105,7 +105,7 @@ def test_q124_shard_assignment_and_order(spark, tmp_path):
         (3, s129, "en", "s", len(s129)),
         (4, t14, "en", "s", len(t14)),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q124_train_shards")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
@@ -128,7 +128,7 @@ def test_q127_rebalance_cut_one_unit(spark, tmp_path):
         (2, dropped, "big", "s", len(dropped)),
         (3, "the smallest language doc", "mn", "s", 25),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q127_domain_mix")
     pd.testing.assert_frame_equal(got, want)
     assert dict(zip(got["lang"], got["n_kept"])) == {"big": "1", "mn": "1"}
@@ -153,7 +153,7 @@ def test_q140_session_gap_and_sequence_cap(spark, tmp_path):
     # u3: 22 events 1 s apart -> one session, sequence capped at 20
     for i in range(22):
         rows.append((100 + i, t + i * US, 3, "view" if i % 2 == 0 else "click", 1.0))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q140_session_sequences")
     pd.testing.assert_frame_equal(got, want)
     by_key = {(r["user_id"], r["session_id"]): r for _, r in got.iterrows()}

@@ -16,31 +16,12 @@ import hashlib
 import json
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-from test_edge_invariants import US, _both, _write_docs, _write_events
+from test_edge_invariants import DOCS, EVENTS, US, _both, _cols, _write
 from test_edge_invariants_b4 import _NULLISH
 
 HOUR = 3600 * US
-
-
-_write_events_props = _write_events  # base writer takes optional props
-
-
-def _write_lineitem_qty(tmp_path, rows):
-    """rows: (l_returnflag, l_quantity|None, l_extendedprice)."""
-    tbl = pa.table(
-        {
-            "l_orderkey": pa.array(range(len(rows)), pa.int64()),
-            "l_returnflag": pa.array([r[0] for r in rows], pa.string()),
-            "l_quantity": pa.array([r[1] for r in rows], pa.float64()),
-            "l_extendedprice": pa.array([r[2] for r in rows], pa.float64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "lineitem.parquet"))
-    return str(tmp_path)
 
 
 def test_q89_dispersion_degenerate_groups(spark, tmp_path):
@@ -66,7 +47,7 @@ def test_q89_dispersion_degenerate_groups(spark, tmp_path):
         rows.append((eid := eid + 1, t + i, 4, "mixed", v, json.dumps({"k": k})))
     rows.append((eid := eid + 1, t + 10, 4, "mixed", 100.0, "{}"))
     rows.append((eid := eid + 1, t + 11, 4, "mixed", -100.0, "{}"))
-    sf = _write_events_props(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q89_dispersion")
     pd.testing.assert_frame_equal(got, want)
     by_type = {r["event_type"]: r for _, r in got.iterrows()}
@@ -102,7 +83,7 @@ def test_q88_null_corr_ranks_last(spark, tmp_path):
             rows.append((eid := eid + 1, t + i * HOUR, uid, "view", v))
     for i in range(4):  # u4: only 4 active hours -> filtered out
         rows.append((eid := eid + 1, t + i * HOUR, 4, "view", 1.0))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q88_user_correlation")
     pd.testing.assert_frame_equal(got, want)
     partners = got.groupby("user_id")["partner_id"].apply(set).to_dict()
@@ -121,7 +102,8 @@ def test_q107_perfect_line_and_constant_x(spark, tmp_path):
         ("L", None, 999.0),               # excluded from every regr_*
         ("C", 5.0, 1.0), ("C", 5.0, 2.0), ("C", 5.0, 3.0),
     ]
-    sf = _write_lineitem_qty(tmp_path, rows)
+    sf = _write(tmp_path, "lineitem",
+                **_cols("l_returnflag l_quantity l_extendedprice", rows))
     got, want = _both(spark, sf, "q107_regression_aggs")
     pd.testing.assert_frame_equal(got, want)
     by_flag = {r["l_returnflag"]: r for _, r in got.iterrows()}
@@ -144,7 +126,7 @@ def test_q117_hash_order_and_small_groups(spark, tmp_path):
         rows.append((201 + i, t + i, 2, "view", 1.0))
     for i in range(2):
         rows.append((301 + i, t + i, 3, "view", 1.0))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q117_group_sample")
     pd.testing.assert_frame_equal(got, want)
     kept = got.groupby("user_id")["event_id"].apply(set).to_dict()
@@ -170,7 +152,7 @@ def test_q123_pii_pattern_boundaries(spark, tmp_path):
         (4, "x@y.c single letter tld", "en", "s", 23),
         (5, "wrapped (a@b.co). done", "en", "s", 22),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q123_pii_scrub")
     pd.testing.assert_frame_equal(got, want)
     counts = {
@@ -199,7 +181,7 @@ def test_q99_transitive_cluster_excludes_singletons(spark, tmp_path):
         (3, c, "en", "s", len(c)),
         (4, "z1 z2 z3 z4 z5", "en", "s", 14),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q99_dedup_clusters")
     pd.testing.assert_frame_equal(got, want)
     assert dict(zip(got["doc_id"], got["cluster_id"])) == {"1": "1", "2": "1", "3": "1"}
@@ -215,7 +197,7 @@ def test_q133_udtf_empty_token_filter(spark, tmp_path):
         (40, "", "en", "s", 0),
         (5, "not in slice", "en", "s", 12),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q133_lateral_udtf")
     pd.testing.assert_frame_equal(got, want)
     assert [tuple(r) for _, r in got[["doc_id", "pos", "token"]].iterrows()] in (
@@ -238,7 +220,7 @@ def test_q160_fractional_median_floor(spark, tmp_path):
         (3, "c1 c2 c3 c4", "en", "s2", 11),
         (4, "e1 e2 e3 e4 e5 e6", "de", "s2", 17),
     ]
-    sf = _write_docs(d_frac, frac_rows)
+    sf = _write(d_frac, "documents", **_cols(DOCS, frac_rows))
     got, want = _both(spark, sf, "q160_corpus_datasheet")
     pd.testing.assert_frame_equal(got, want)
     row = got.iloc[0]
@@ -253,7 +235,7 @@ def test_q160_fractional_median_floor(spark, tmp_path):
     ]
     d_dup = tmp_path / "dup"
     d_dup.mkdir()
-    sf = _write_docs(d_dup, dup_rows)
+    sf = _write(d_dup, "documents", **_cols(DOCS, dup_rows))
     got, want = _both(spark, sf, "q160_corpus_datasheet")
     pd.testing.assert_frame_equal(got, want)
     row = got.iloc[0]

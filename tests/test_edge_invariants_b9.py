@@ -14,7 +14,7 @@ import json
 import pandas as pd
 import pytest
 
-from test_edge_invariants import US, _both, _write_docs, _write_events
+from test_edge_invariants import DOCS, EVENTS, US, _both, _cols, _write
 from test_edge_invariants_b4 import _NULLISH
 
 T0 = 1_700_000_000 * US
@@ -37,7 +37,7 @@ def test_q84_q61_malformed_props(spark, tmp_path):
         # Spark try_cast('3.7') is NULL while a bare DuckDB TRY_CAST
         # would ROUND to 4 — the sql_json_int json_type guard pins NULL
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q84_spell_fanout_udtf")
     pd.testing.assert_frame_equal(got, want)
     assert set(got["event_id"]) == {"1", "5"}
@@ -72,7 +72,7 @@ def test_q81_runaway_loop_on_missing_k(spark, tmp_path):
         (5, T0, 1, "view", 1.0, json.dumps({"k": "abc"})),  # non-numeric
         (6, T0, 1, "view", 1.0, json.dumps({"k": 3.7})),    # fractional
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q81_spell_loop")
     pd.testing.assert_frame_equal(got, want)
     casts = dict(zip(got["event_id"], got["n_casts"]))
@@ -88,10 +88,10 @@ def test_q80_q82_null_value_kept_by_all_tiers(spark, tmp_path):
     rows = [
         (1, T0, 1, "purchase", 60.0),
         (2, T0, 1, "purchase", 40.0),   # dropped: value < 50
-        (3, T0, 1, "purchase", None, "{}"),  # NULL value: kept, NULL boost
+        (3, T0, 1, "purchase", None),  # NULL value: kept, NULL boost
         (4, T0, 1, "click", 60.0),      # topic-filtered
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     for name in ("q80_spell_cast", "q82_spell_cast_vectorized"):
         got, want = _both(spark, sf, name)
         pd.testing.assert_frame_equal(got, want)
@@ -122,7 +122,7 @@ def test_q97_q103_null_event_type_excluded(spark, tmp_path):
         rows.append((eid := eid + 1, T0 + eid, 1, "view", 1.0))
     for _ in range(15):
         rows.append((eid := eid + 1, T0 + eid, 1, None, 1.0))
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q97_map_functions")
     pd.testing.assert_frame_equal(got, want)
     assert dict(zip(got["key"], got["doubled"])) == {"view": "30"}
@@ -142,7 +142,7 @@ def test_null_text_documents_family(spark, tmp_path):
         (3, "", "en", "s", 0),
         (4, "   ", "en", "s", 3),
     ]
-    sf = _write_docs(tmp_path, rows)
+    sf = _write(tmp_path, "documents", **_cols(DOCS, rows))
     got, want = _both(spark, sf, "q77_text_profile")
     pd.testing.assert_frame_equal(got, want)
     by_doc = {r["doc_id"]: r for _, r in got.iterrows()}
@@ -168,7 +168,7 @@ def test_q140_all_null_type_session_seq(spark, tmp_path):
         (3, T0 + US, 2, None, 1.0),
         (4, T0 + 2 * US, 2, "click", 1.0),
     ]
-    sf = _write_events(tmp_path, rows)
+    sf = _write(tmp_path, "events", **_cols(EVENTS, rows))
     got, want = _both(spark, sf, "q140_session_sequences")
     pd.testing.assert_frame_equal(got, want)
     seqs = dict(zip(got["user_id"], got["seq"]))

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import sanctum_spark.queries as qreg
 from sanctum_spark.io import load_table
 from sanctum_spark.operators import dedup as D
 from sanctum_spark.operators import joins as J
@@ -15,6 +16,8 @@ from sanctum_spark.operators import similarity as S
 from sanctum_spark.operators import text as TX
 
 from conftest import broadcast_threshold
+
+qreg.load_all_modules()
 
 
 @pytest.fixture(scope="module")
@@ -100,7 +103,7 @@ def test_asof_join_matches_window_formulation(spark, sf_dir):
         .select("event_id", "o_orderkey")
         .collect()
     )
-    from sanctum_spark.queries.events_q import q63
+    q63 = qreg.REGISTRY["q63_asof_join"].fn
 
     want = {r["event_id"]: r["last_orderkey"] for r in q63(spark, sf_dir).collect()}
     assert len(got) == len(want)
@@ -419,7 +422,7 @@ def test_approx_distinct_accuracy(spark, sf_dir):
     """q26's HLL++ estimate must sit within its configured rsd=0.02 of
     the exact per-group distinct count it emits alongside (5% ceiling
     leaves headroom for the sketch's tail probability)."""
-    from sanctum_spark.queries.relational2 import q26
+    q26 = qreg.REGISTRY["q26_approx_distinct"].fn
 
     for r in q26(spark, sf_dir).collect():
         rel = abs(r["approx_parts"] - r["exact_parts"]) / r["exact_parts"]
@@ -429,7 +432,7 @@ def test_approx_distinct_accuracy(spark, sf_dir):
 def test_hll_union_accuracy(spark, sf_dir):
     """Unioned per-group HLL sketches must estimate the global distinct
     count within the sketch's error bound (~2% at default lgConfigK)."""
-    from sanctum_spark.queries.pipeline_q import q98
+    q98 = qreg.REGISTRY["q98_hll_mergeable"].fn
 
     rows = {r["event_type"]: r["approx_users"] for r in q98(spark, sf_dir).collect()}
     ev = load_table(spark, sf_dir, "events")
@@ -439,7 +442,7 @@ def test_hll_union_accuracy(spark, sf_dir):
 
 
 def test_approx_percentile_accuracy(spark, sf_dir):
-    from sanctum_spark.queries.coverage_q import q87
+    q87 = qreg.REGISTRY["q87_approx_percentile"].fn
 
     for r in q87(spark, sf_dir).collect():
         rel = abs(r["approx_median"] - r["exact_median"]) / abs(r["exact_median"])
@@ -1191,10 +1194,8 @@ def test_q153_dtw_matches_driver_side_reference(spark, sf_dir):
     unbanded optimum for the compare)."""
     import numpy as np
 
-    import sanctum_spark.queries as qreg
     from sanctum_spark.operators.timeseries import REF_PATTERN, dtw_banded
 
-    qreg.load_all_modules()
     out = {
         r["user_id"]: (r["n_days"], r["dtw_dist_e4"])
         for r in qreg.REGISTRY["q153_dtw_similarity"].fn(spark, sf_dir).collect()
@@ -1269,9 +1270,6 @@ def test_segment_dedup_conservation_invariants(spark, sf_dir):
 def test_psi_invariants(spark, sf_dir):
     """PSI is symmetric-positive: total >= 0, and the smoothed shares on
     each side sum to (n + 10*1)/(n + 10) == 1 exactly (Laplace mass)."""
-    import sanctum_spark.queries as qreg
-
-    qreg.load_all_modules()
     rows = qreg.REGISTRY["q150_psi_drift"].fn(spark, sf_dir).collect()
     assert len(rows) == 10
     psi = rows[0]["psi"]
@@ -1330,10 +1328,8 @@ def test_q147_two_pass_equals_direct_exact(spark, sf_dir):
     over the full corpus (the sample only prunes work, never answers)."""
     from pyspark.sql import functions as F
 
-    import sanctum_spark.queries as qreg
     from sanctum_spark.io import load_table
 
-    qreg.load_all_modules()
     got = {
         (r["token"], r["cnt"])
         for r in qreg.REGISTRY["q147_heavy_hitters"].fn(spark, sf_dir).collect()
@@ -1356,11 +1352,9 @@ def test_q152_cep_matches_python_state_machine(spark, sf_dir):
     """The join-free suffix-min formulation rests on a monotonicity
     argument; replay the pattern with an explicit per-user NFA in Python
     and require identical match instances."""
-    import sanctum_spark.queries as qreg
     from sanctum_spark.io import load_table
-    from sanctum_spark.queries.pipeline6_q import CEP_WINDOW_NS
+    from sanctum_spark.queries.events_q import CEP_WINDOW_NS
 
-    qreg.load_all_modules()
     got = {
         (r["user_id"], r["view_ts"], r["click_ts"], r["purchase_ts"])
         for r in qreg.REGISTRY["q152_cep_pattern"].fn(spark, sf_dir).collect()
@@ -1482,9 +1476,6 @@ def test_order_sensitive_queries_are_run_deterministic(spark, sf_dir):
     """Queries whose output depends on rank/tie-break/sample selection
     must return identical results across runs in one session (partition
     scheduling must not leak into results): run each twice, hash-equal."""
-    import sanctum_spark.queries as qreg
-
-    qreg.load_all_modules()
     for name in (
         "q155_weighted_reservoir",
         "q117_group_sample",
@@ -1506,10 +1497,8 @@ def test_q159_split_has_zero_leakage(spark, sf_dir):
     document, and every dropped candidate does share one."""
     from pyspark.sql import functions as F
 
-    import sanctum_spark.queries as qreg
     from sanctum_spark.io import load_table
 
-    qreg.load_all_modules()
     split = qreg.REGISTRY["q159_leakage_free_split"].fn(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").join(split, "doc_id")
     toks = F.split(F.trim(F.lower("text")), r"\s+")
@@ -1605,9 +1594,6 @@ def test_q161_er_matches_bruteforce_union_find(spark, sf_dir):
     pair join, and the transitive closure; the blocking KEY itself is
     part of the match definition, so both sides share it by design.
     O(n^2) pure-Python — guarded to small fixture scales."""
-    import sanctum_spark.queries as qreg
-
-    qreg.load_all_modules()
     recs = [
         (r["p_partkey"], r["p_name"], r["p_brand"], r["p_type"])
         for r in spark.read.parquet(f"{sf_dir}/part.parquet").collect()
@@ -1657,15 +1643,13 @@ def test_q162_bm25_matches_pure_python(spark, sf_dir):
     distributed top-k exactly (doc ids AND rounded scores)."""
     import math
 
-    import sanctum_spark.queries as qreg
-    from sanctum_spark.queries.pipeline7_q import (
+    from sanctum_spark.queries.corpus_q import (
         BM25_B,
         BM25_K1,
         BM25_TERMS,
         BM25_TOPK,
     )
 
-    qreg.load_all_modules()
     # tokenize exactly like both engines: trim + lower + regex \s+ split
     # (str.split() would diverge on empty/whitespace-only docs: regex
     # split of '' yields [''] -> dl=1, matching size(split(trim(''))))
@@ -1931,7 +1915,7 @@ def test_auto_plan_construction_runs_zero_jobs(spark, sf_dir):
     (r8 verdict task 6's done-criterion, pinned).  The q99/q158 query
     FUNCTIONS can't be probed whole — connected_components is iterative
     and executes during construction by design — so the pin targets the
-    exact call they make (pipeline_q.py q99 / pipeline6_q.py q158)."""
+    exact call they make (corpus_q.py q99 / q158)."""
     from sanctum_spark.io import load_table, parquet_row_count
 
     docs = load_table(spark, sf_dir, "documents")

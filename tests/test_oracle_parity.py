@@ -42,12 +42,17 @@ def test_registry_consistency():
 def test_rotation_invariants():
     """The driver verifies the FIRST 50 registry entries; the rotation
     (VERIFY_FIRST) must stay exactly 50 unique registered names leading
-    queries(), and the registry stays frozen at 159 (r6 verdict)."""
+    queries(), and the registry stays frozen at 159 (r6 verdict): the
+    names themselves are pinned by their fingerprint, so a query lost or
+    renamed in a module move fails here."""
+    from bench import _registry_sha
+
     vf = qreg.VERIFY_FIRST
     assert len(vf) == 50 and len(set(vf)) == 50
     ordered = list(qreg.queries())
     assert len(ordered) == 159
     assert ordered[:50] == vf
+    assert _registry_sha(qreg.REGISTRY) == "93d4e2606995"
 
 
 def test_no_duplicate_column_names(spark, sf_dir):

@@ -377,7 +377,7 @@ def test_q142_no_cartesian_and_broadcast_sizes(spark, sf_dir):
     """Cross-source overlap: the shingle self-join must be a hash join
     (never nested-loop/cartesian) and the source-size join-back a
     broadcast."""
-    from sanctum_spark.queries.pipeline5_q import _q142_build
+    from sanctum_spark.queries.corpus_q import _q142_build
 
     out, srcs_all = _q142_build(spark, sf_dir)
     out.count()  # materialize the cache so InMemoryTableScan appears
@@ -433,11 +433,11 @@ def test_q147_candidates_broadcast_semi(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from sanctum_spark.io import load_table
-    from sanctum_spark.queries.pipeline6_q import _u16_spark
+    from sanctum_spark.queries.corpus_q import u16_spark
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        _u16_spark().alias("u"),
+        u16_spark().alias("u"),
         F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("token"),
     )
     cand = (
@@ -519,7 +519,7 @@ def test_q161_er_blocked_equi_join(spark, sf_dir):
     Inspect the pre-clustering stage: connected_components' eager
     checkpoint truncates the registered query's plan."""
     from sanctum_spark.operators.linkage import blocked_candidate_pairs
-    from sanctum_spark.queries.pipeline7_q import _q161_records
+    from sanctum_spark.queries.relational import _q161_records
 
     pairs = blocked_candidate_pairs(
         _q161_records(spark, sf_dir),
@@ -550,7 +550,7 @@ def test_q162_bm25_topk_plan(spark, sf_dir):
 
     from sanctum_spark.io import load_table
     from sanctum_spark.operators.retrieval import _bm25_build
-    from sanctum_spark.queries.pipeline7_q import (
+    from sanctum_spark.queries.corpus_q import (
         BM25_B,
         BM25_K1,
         BM25_TERMS,

@@ -1,7 +1,7 @@
 """q88's integer-moment Pearson overflow guard (r13 verdict task #8).
 
 q88_user_correlation computes corr from six exact BIGINT raw moments
-(coverage_q.py).  Longs wrap SILENTLY in non-ANSI mode, so the in-code
+(events_q.py).  Longs wrap SILENTLY in non-ANSI mode, so the in-code
 overflow bound — largest term n*sum(av*bv) <= n_hours^2 * max|v|^2 —
 must be enforced by a test on the actual data rather than trusted as a
 comment: a regenerated/widened dataset that violates it would corrupt
@@ -66,6 +66,6 @@ def test_q88_moment_terms_fit_int64(sf_dir: str) -> None:
         f"q88 integer moments too close to int64 overflow at {sf_dir}: "
         f"max|v|={max_v}, n_hours={n_hours}, worst term {worst:.3e}, "
         f"headroom {headroom:.1f}x < {MIN_HEADROOM}x. Recompute the "
-        "second-moment terms in DECIMAL(38,0) (coverage_q.py q88) or "
+        "second-moment terms in DECIMAL(38,0) (events_q.py q88) or "
         "re-derive the bound before trusting the BIGINT path."
     )

@@ -13,6 +13,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+import sanctum_spark.queries as qreg
 from sanctum_spark.io import load_table
 from sanctum_spark.streaming import sources as SRC
 from sanctum_spark.streaming import stateful as ST
@@ -20,6 +21,8 @@ from sanctum_spark.streaming import windows as WIN
 from sanctum_spark.streaming.routing import demux_foreach_batch
 from sanctum_spark.spells.registry import Spell
 from tools.verify_local import confs
+
+qreg.load_all_modules()
 
 
 @pytest.fixture()
@@ -159,7 +162,7 @@ def test_session_window_matches_batch_sessionize(spark, sf_dir, staged):
     got = sorted(
         (r["user_id"], r["n_events"]) for r in spark.table(name).collect()
     )
-    from sanctum_spark.queries.events_q import q62
+    q62 = qreg.REGISTRY["q62_sessionize"].fn
 
     want = sorted((r["user_id"], r["n_events"]) for r in q62(spark, sf_dir).collect())
     assert got == want
@@ -367,7 +370,7 @@ def test_streaming_ewma_matches_batch_fold(spark, sf_dir, staged, tmp_path):
     """The stateful streaming EWMA (unbounded-history recurrence in
     per-key state) converges to exactly the q135 batch fold when batches
     arrive time-ordered."""
-    from sanctum_spark.queries.pipeline4_q import q135
+    q135 = qreg.REGISTRY["q135_ewma"].fn
 
     stream = SRC.events_file_stream(spark, staged).select(
         "user_id", "ts", "event_id", "value"
@@ -398,7 +401,7 @@ def test_stateful_ewma_multi_chunk_ordering(spark, sf_dir, staged, tmp_path):
     must still fold the WHOLE batch in (ts, event_id) order — per-chunk
     sorting is not enough.  Force tiny chunks and require the exact q135
     batch fold."""
-    from sanctum_spark.queries.pipeline4_q import q135
+    q135 = qreg.REGISTRY["q135_ewma"].fn
 
     # every key's batch spans many chunks
     with confs(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"}):
@@ -484,11 +487,9 @@ def test_streaming_cep_matches_batch_q152(spark, sf_dir, staged):
     """The streaming NFA must emit exactly the batch q152 match set over
     the replayed event log (completions appear in the micro-batch whose
     purchase closes them; state carries partial matches across batches)."""
-    import sanctum_spark.queries as qreg
-    from sanctum_spark.queries.pipeline6_q import CEP_WINDOW_NS
+    from sanctum_spark.queries.events_q import CEP_WINDOW_NS
     from sanctum_spark.streaming.cep import streaming_cep_pattern
 
-    qreg.load_all_modules()
     stream = SRC.events_file_stream(spark, staged)
     matches = streaming_cep_pattern(stream, CEP_WINDOW_NS)
     name = f"cep_{uuid.uuid4().hex[:8]}"

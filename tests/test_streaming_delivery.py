@@ -25,10 +25,13 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+import sanctum_spark.queries as qreg
 from sanctum_spark.io import load_table
 from sanctum_spark.streaming import sources as SRC
 from sanctum_spark.streaming import stateful as ST
 from sanctum_spark.streaming import windows as WIN
+
+qreg.load_all_modules()
 
 
 @pytest.fixture(scope="module")
@@ -78,14 +81,14 @@ def test_perturbed_session_window_matches_batch(spark, sf_dir, staged_perturbed)
     got = sorted(
         (r["user_id"], r["n_events"]) for r in spark.table(name).collect()
     )
-    from sanctum_spark.queries.events_q import q62
+    q62 = qreg.REGISTRY["q62_sessionize"].fn
 
     want = sorted((r["user_id"], r["n_events"]) for r in q62(spark, sf_dir).collect())
     assert got == want
 
 
 def test_perturbed_stateful_ewma_matches_batch(spark, sf_dir, staged_perturbed, tmp_path):
-    from sanctum_spark.queries.pipeline4_q import q135
+    q135 = qreg.REGISTRY["q135_ewma"].fn
 
     stream = SRC.events_file_stream(spark, staged_perturbed).select(
         "user_id", "ts", "event_id", "value"
@@ -109,11 +112,9 @@ def test_perturbed_stateful_ewma_matches_batch(spark, sf_dir, staged_perturbed, 
 
 
 def test_perturbed_cep_matches_batch(spark, sf_dir, staged_perturbed):
-    import sanctum_spark.queries as qreg
-    from sanctum_spark.queries.pipeline6_q import CEP_WINDOW_NS
+    from sanctum_spark.queries.events_q import CEP_WINDOW_NS
     from sanctum_spark.streaming.cep import streaming_cep_pattern
 
-    qreg.load_all_modules()
     stream = SRC.events_file_stream(spark, staged_perturbed)
     matches = streaming_cep_pattern(stream, CEP_WINDOW_NS)
     name = f"cep_p_{uuid.uuid4().hex[:8]}"

@@ -7,9 +7,12 @@ import uuid
 
 from pyspark.sql import functions as F
 
+import sanctum_spark.queries as qreg
 from sanctum_spark.io import load_table
 from sanctum_spark.streaming import joins as SJ
 from sanctum_spark.streaming import sources as SRC
+
+qreg.load_all_modules()
 
 
 def test_stream_static_enrichment(spark, sf_dir, tmp_path):
@@ -52,7 +55,7 @@ def test_stream_stream_interval_join_matches_batch_cep(spark, sf_dir, tmp_path):
         .collect()
     }
 
-    from sanctum_spark.queries.coverage_q import q86
+    q86 = qreg.REGISTRY["q86_event_sequence"].fn
 
     want = {
         (r["user_id"], r["n_converting_clicks"]) for r in q86(spark, sf_dir).collect()

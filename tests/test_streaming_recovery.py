@@ -37,7 +37,7 @@ def _drain_to_parquet(stream_df, out_dir, checkpoint):
 
 def test_cep_restart_recovers_state_exactly_once(spark, sf_dir, tmp_path):
     import sanctum_spark.queries as qreg
-    from sanctum_spark.queries.pipeline6_q import CEP_WINDOW_NS
+    from sanctum_spark.queries.events_q import CEP_WINDOW_NS
     from sanctum_spark.streaming.cep import streaming_cep_pattern
 
     qreg.load_all_modules()

@@ -71,15 +71,21 @@ def _write(dst: str, table: str, tbl: pa.Table, **kw) -> None:
     pq.write_table(tbl.replace_schema_metadata(None), _path(dst, table), **kw)
 
 
-def _append(src: str, dst: str, table: str, cols: dict[str, list]) -> None:
-    """``table`` from ``src`` plus the rows in ``cols`` ({column:
-    values}), in the source schema; a column left out is NULL."""
-    tbl = pq.read_table(_path(src, table))
-    n = len(next(iter(cols.values())))
-    extra = pa.Table.from_arrays(
-        [pa.array(cols.get(f.name, [None] * n), f.type) for f in tbl.schema],
-        schema=tbl.schema,
+def from_columns(schema: pa.Schema, cols: dict[str, list]) -> pa.Table:
+    """The rows in ``cols`` ({column: values}) in ``schema``; a column
+    left out is NULL."""
+    n = len(next(iter(cols.values()), []))
+    return pa.Table.from_arrays(
+        [pa.array(cols.get(f.name, [None] * n), f.type) for f in schema],
+        schema=schema,
     )
+
+
+def _append(src: str, dst: str, table: str, cols: dict[str, list]) -> None:
+    """``table`` from ``src`` plus the rows in ``cols``, in the source
+    schema (``from_columns``)."""
+    tbl = pq.read_table(_path(src, table))
+    extra = from_columns(tbl.schema, cols)
     _write(dst, table, pa.concat_tables([tbl, extra]))
 
 

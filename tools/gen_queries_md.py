@@ -17,10 +17,8 @@ driver verifies). **Oracle** = DuckDB-checked (row count + schema +
 order-insensitive value hash at sf0.01); rows-only entries are
 engine-specific pipelines whose determinism/recall is asserted in
 `tests/` instead. SURVEY.md §2.3 is the coverage checklist this
-inventory fills.
-
-| Query | Oracle | What it covers |
-|---|---|---|
+inventory fills.  One section per family module: a query's family
+follows from the tables it reads (`sanctum_spark/queries/__init__.py`).
 """
 
 FOOTER = """
@@ -39,14 +37,24 @@ def main() -> None:
     from sanctum_spark import queries as qreg
 
     qreg.load_all_modules()
+    families: dict[str, list] = {}
+    for q in qreg.REGISTRY.values():
+        families.setdefault(q.fn.__module__, []).append(q)
     lines = [HEADER]
     n_oracle = 0
-    for name in sorted(qreg.REGISTRY):
-        q = qreg.REGISTRY[name]
-        mark = "✓" if q.oracle is not None else "rows-only"
-        n_oracle += q.oracle is not None
-        doc = " ".join(q.doc.split()) or "(no doc)"
-        lines.append(f"| `{name}` | {mark} | {doc} |\n")
+    for module, qs in families.items():
+        n_fam = sum(q.oracle is not None for q in qs)
+        n_oracle += n_fam
+        summary = " ".join(sys.modules[module].__doc__.split("\n\n")[0].split())
+        lines.append(
+            f"\n## `{module.rsplit('.', 1)[1]}`: {len(qs)} queries, "
+            f"{n_fam} oracle-paired\n\n{summary}\n\n"
+            "| Query | Oracle | What it covers |\n|---|---|---|\n"
+        )
+        for q in sorted(qs, key=lambda q: int(q.name[1:].split("_")[0])):
+            mark = "✓" if q.oracle is not None else "rows-only"
+            doc = " ".join(q.doc.split()) or "(no doc)"
+            lines.append(f"| `{q.name}` | {mark} | {doc} |\n")
     lines.append(f"\n{len(qreg.REGISTRY)} queries, {n_oracle} oracle-paired.\n")
     lines.append(FOOTER)
     with open(os.path.join(REPO, "QUERIES.md"), "w") as fh:
