@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sanctum_spark.io import spread_scan
+
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """Exact dedup groups: digest → copies + keeper (lowest id).
@@ -610,7 +612,14 @@ def ngram_jaccard_pairs(
             .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
             .withColumn(
                 "jaccard",
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
+                # try_divide: a repeated id can sum more intersections
+                # than one of its rows' sizes allows, and a zero
+                # denominator is NULL (never kept), as in the SQL oracle,
+                # not an ANSI DIVIDE_BY_ZERO error
+                F.try_divide(
+                    F.col("n_inter"),
+                    (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
+                ),
             )
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
@@ -853,6 +862,14 @@ _PAIR_BYTES = 16  # one (src, dst) pair of LONGs
 _MAX_BROADCAST_BYTES = 8 << 30  # Spark refuses to broadcast more than 8 GiB
 
 
+def _broadcast_limit(spark) -> int | None:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes as Spark parses
+    it ("10MB", "-1", ...), at most the 8 GiB Spark can broadcast;
+    ``None`` when -1 turns broadcast off."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return None if threshold < 0 else min(threshold, _MAX_BROADCAST_BYTES)
+
+
 def _small_graph_labels(sym: DataFrame) -> DataFrame | None:
     """Exact ``(id, component)`` labels computed on the driver when the
     materialized symmetric edge list fits under Spark's broadcast
@@ -863,7 +880,6 @@ def _small_graph_labels(sym: DataFrame) -> DataFrame | None:
     ``cap`` = autoBroadcastJoinThreshold / 16 B per (src, dst) pair — one
     Arrow collect.  A graph above ``cap`` pays the count alone (one scan
     of the materialized list, no rows shipped) before the round loop.
-    The threshold is read as Spark parses it ("10MB", "-1", ...).
 
     Driver memory: at most ``cap`` edge rows are collected, but peak
     driver memory is a multiple of the threshold, not the threshold.
@@ -877,20 +893,17 @@ def _small_graph_labels(sym: DataFrame) -> DataFrame | None:
     it, as it does for every broadcast.
     """
     import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
 
-    spark = sym.sparkSession
-    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    if threshold < 0:
+    limit = _broadcast_limit(sym.sparkSession)
+    if limit is None:
         return None
-    cap = min(threshold, _MAX_BROADCAST_BYTES) // _PAIR_BYTES
     # One job, rows counted in the JVM: no row crosses to Python, and
     # unlike DataFrame.count() there is no aggregate shuffle (a second
     # job under AQE).  Measured at 2 M materialized pairs, local[2] on
     # a 4-vCPU host: 0.12 s, against 0.22 s for count() and 0.80 s for
     # collecting cap + 1 rows through Arrow.
-    if sym._jdf.queryExecution().toRdd().count() > cap:
+    if sym._jdf.queryExecution().toRdd().count() > limit // _PAIR_BYTES:
         return None
     tbl = sym.toArrow()
     src, dst = tbl.column("src"), tbl.column("dst")
@@ -907,8 +920,18 @@ def _small_graph_labels(sym: DataFrame) -> DataFrame | None:
     u = np.searchsorted(nodes, pc.filter(src, once).to_numpy())
     v = np.searchsorted(nodes, pc.filter(dst, once).to_numpy())
     del src, dst, once
+    return _labels_frame(sym.sparkSession, nodes, u, v, has_null)
+
+
+def _labels_frame(spark, nodes, u, v, has_null: bool = False) -> DataFrame:
+    """The local ``(id long, component long)`` frame of the sorted,
+    distinct node ids ``nodes`` under the undirected edges
+    ``(nodes[u[i]], nodes[v[i]])``: every node labelled with the least id
+    of its component (``_min_roots``), plus one ``(NULL, NULL)`` row when
+    ``has_null``."""
+    import pyarrow as pa
+
     root = _min_roots(u, v, len(nodes))
-    del u, v
     ids, comps = pa.array(nodes, pa.int64()), pa.array(nodes[root], pa.int64())
     if has_null:
         ids = pa.concat_arrays([ids, pa.nulls(1, pa.int64())])
@@ -1157,6 +1180,215 @@ def connected_components(
             "use a log-round algorithm for long-chain graphs"
         )
     return labels
+
+
+def near_duplicate_clusters(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_k: int = 3,
+    threshold: float = 0.5,
+    hashed: bool = False,
+    prefix_filter: bool | str = True,
+    doc_count: int | None = None,
+) -> DataFrame:
+    """Near-duplicate clusters ``(id, component)``: the connected
+    components of the exact n-gram Jaccard pairs, i.e.
+    ``connected_components(ngram_jaccard_pairs(docs, ...))``, with the
+    same rows and schema.
+
+    A corpus that fits the broadcast threshold is clustered on the
+    driver, without the pair plan's shuffles or the CC loop's jobs:
+
+    - Size gate, no Spark job: ``spark.sql.autoBroadcastJoinThreshold``
+      is at least 0 and Catalyst's ``sizeInBytes`` estimate for ``docs``
+      (the one that makes Spark broadcast a table) is at most it.  -1
+      turns the path off, as it does for ``connected_components``' own
+      small-graph path.
+    - One Arrow collect of ``(id, shingles)``; Spark computes the
+      shingles with the same ``shingle_hashes``/``shingle_tokens`` the
+      pair plan uses, so both paths see the same sets.
+    - Candidate check on the driver: the exact candidate volume
+      Σ c·(c−1)/2 over per-shingle row counts c must be at most
+      autoBroadcastJoinThreshold / 16 B pairs, the cap of
+      ``connected_components``' small-graph path.  Above it (hot
+      shingles) the collected table is dropped and the Spark plan runs,
+      so such a corpus pays the collect job on top of the Spark plan.
+
+    The local pairs follow the relational definition of the naive plan
+    and the SQL oracle (``corpus_q.jaccard_pairs_sql``): intersections
+    counted per ``(id_a < id_b)`` over every row sharing a shingle, sizes
+    joined per row, float64 ``n_inter / (n_a + n_b − n_inter)`` kept when
+    ≥ ``threshold`` (a zero denominator is NULL, never kept).  A NULL id
+    pairs with nothing; NULL text has no shingles.  Components are
+    labelled by ``_min_roots`` and come back as a local frame, so the CC
+    round loop and its checkpoints never run.
+
+    Driver memory is bounded by the gate (measured at both caps in
+    ``_local_clusters``): about 4x autoBroadcastJoinThreshold at the
+    candidate cap, and about 45 B per collected shingle instance at the
+    size cap.  ``prefix_filter`` and ``doc_count`` only steer the Spark plan, which
+    spreads a scan of few splits over every core first (``spread_scan``);
+    the driver path collects the frame as given, in one job.  A frame
+    without a size estimate (Catalyst's default is larger than any
+    threshold) takes the Spark plan.
+    """
+    local = _local_clusters(docs, text_col, id_col, shingle_k, threshold, hashed)
+    if local is not None:
+        return local
+    # The pair plan shingles scan-side: fan a scan of few splits out to
+    # every core first (spread_scan's partition probe; a no-op on a
+    # frame already spread).
+    pairs = ngram_jaccard_pairs(
+        spread_scan(docs), text_col, id_col, shingle_k=shingle_k,
+        threshold=threshold, hashed=hashed, prefix_filter=prefix_filter,
+        doc_count=doc_count,
+    )
+    return connected_components(pairs, "id_a", "id_b")
+
+
+def _local_clusters(
+    docs: DataFrame, text_col: str, id_col: str, shingle_k: int,
+    threshold: float, hashed: bool,
+) -> DataFrame | None:
+    """``near_duplicate_clusters``' driver path, or ``None`` when the
+    size gate or the candidate check sends the corpus to the Spark plan
+    (a non-integral id goes there too, where connected_components
+    rejects it).
+
+    Driver memory, measured on local[2] (4-vCPU host) with the session's
+    64 MiB threshold:
+
+    - At the candidate cap (4.18 M candidates from 9,000 documents in
+      the test tables' 33-word vocabulary; 3.9 MB of shingles), the pair
+      arrays peaked at 196 MB of numpy plus 12 MB of Arrow, 3.1x the
+      threshold; process RSS grew 262 MB (3.9x).
+    - At the size cap, measured at a 42 MB estimate (140 k documents of
+      random words from a 200 k vocabulary, 7.6 M shingle instances
+      collected as 61 MB), sorting the instances took 179 MB of Arrow
+      and RSS grew 222 MB past the collected table: about 37 B per
+      instance in Python, plus the JVM's copy of the collected batches
+      (8 B per instance) until Python reads them — about 8x the
+      estimate.  Text that compresses better carries more shingles per
+      estimated byte, and this bound grows with that ratio: the test
+      tables' text collects 3.7 B of shingle hashes per parquet byte,
+      against 1.45 here.
+
+    So budget about 4x the threshold for hot-shingle corpora and about
+    45 B per shingle instance for large ones; lowering
+    autoBroadcastJoinThreshold lowers both, as it does for every
+    broadcast.
+    """
+    from pyspark.sql.types import IntegralType
+
+    spark = docs.sparkSession
+    limit = _broadcast_limit(spark)
+    if limit is None or not isinstance(docs.schema[id_col].dataType, IntegralType):
+        return None
+    size = int(str(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    if size > limit:
+        return None
+    make = shingle_hashes if hashed else shingle_tokens
+    tbl = docs.select(
+        F.col(id_col).cast("long").alias("id"),
+        make(text_col, shingle_k).alias("shingles"),
+    ).toArrow()
+    edges = _jaccard_edges(tbl, threshold, limit // _PAIR_BYTES)
+    if edges is None:
+        return None
+    return _labels_frame(spark, *edges)
+
+
+def _jaccard_edges(tbl, threshold: float, cap: int):
+    """``(nodes, u, v)`` for ``_labels_frame``: the pairs of ``tbl``
+    (``id``, ``shingles``) with Jaccard ≥ ``threshold`` under the
+    relational definition ``near_duplicate_clusters`` states, or
+    ``None`` when the candidate volume exceeds ``cap`` pairs.  Each
+    array is freed once used: the peak is the instance sort or the
+    candidate arrays, measured in ``_local_clusters``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    tbl = tbl.filter(pc.is_valid(tbl["id"]))  # a NULL id pairs with nothing
+    uniq, dense = np.unique(tbl["id"].to_numpy(), return_inverse=True)
+    n = len(uniq)
+    sh = tbl["shingles"].combine_chunks()
+    del tbl
+    sizes = pc.list_value_length(sh).to_numpy()
+    ends = np.cumsum(sizes)  # a row's shingles end at this flat position
+    # Every (row, shingle) instance grouped by shingle: sort, then keep
+    # the runs of two or more equal shingles (a shingle of one row pairs
+    # nothing).  Sorting, not hashing, and byte masks over all instances:
+    # a hash table over mostly distinct shingles took several times the
+    # sort's memory.
+    flat = pc.list_flatten(sh)
+    del sh
+    order = pc.sort_indices(flat)
+    flat = flat.take(order)
+    order = order.to_numpy()
+    same = pc.equal(flat[1:], flat[:-1]).to_numpy(zero_copy_only=False)
+    del flat
+    shared = np.zeros(len(order), bool)  # equal to a neighbour
+    shared[1:] = same
+    shared[:-1] |= same
+    starts = np.ones(len(order), bool)  # first of its run
+    starts[1:] = ~same
+    head = np.flatnonzero(starts[shared])
+    del same, starts
+    count = np.diff(np.r_[head, shared.sum()])
+    del head
+    if int((count * (count - 1) // 2).sum()) > cap:
+        return None
+    # the dense id of the row holding each shared instance, by run
+    d = dense[np.searchsorted(ends, order[shared], side="right")].astype(np.int32)
+    del order, shared
+    # Each position pairs with every later one of its group: the
+    # c·(c−1)/2 candidates.
+    later = np.repeat(np.cumsum(count), count) - np.arange(len(d)) - 1
+    first = np.repeat(np.arange(len(d), dtype=np.int32), later)
+    second = np.arange(len(first), dtype=np.int32)
+    second -= np.repeat((np.cumsum(later) - later).astype(np.int32), later)
+    second += first
+    second += 1
+    del later
+    a = d[first]
+    del first
+    b = d[second]
+    del second, d
+    # n_inter per (id_a < id_b): one count per shared shingle per row
+    # pair; a row never pairs with a row of its own id.
+    keep = a != b
+    key = np.minimum(a, b)[keep].astype(np.int64)
+    key *= n
+    key += np.maximum(a, b)[keep]
+    del a, b, keep
+    key.sort()
+    head = np.flatnonzero(np.r_[True, key[1:] != key[:-1]]) if len(key) else key
+    n_inter = np.diff(np.r_[head, len(key)])
+    a, b = (x.astype(np.int32) for x in np.divmod(key[head], n))
+    del key, head
+    # sizes joined per row: every row of id_a against every row of id_b
+    by_id = np.argsort(dense, kind="stable")
+    per_id = np.bincount(dense, minlength=n)
+    if per_id.max(initial=0) > 1:
+        start = np.cumsum(per_id) - per_id
+        m = per_id[a] * per_id[b]
+        p = np.repeat(np.arange(len(m)), m)
+        j = np.arange(len(p)) - np.repeat(np.cumsum(m) - m, m)
+        nb = per_id[b][p]
+        ra, rb = by_id[start[a][p] + j // nb], by_id[start[b][p] + j % nb]
+        del m, j, nb
+    else:  # one row per id, the usual corpus: pair i is row pair i
+        p, ra, rb = np.arange(len(a)), by_id[a], by_id[b]
+    n_inter = n_inter[p]
+    den = sizes[ra] + sizes[rb] - n_inter
+    del ra, rb
+    with np.errstate(divide="ignore", invalid="ignore"):
+        ok = (den != 0) & (n_inter / den.astype(np.float64) >= threshold)
+    kept = np.unique(p[ok])
+    a, b = a[kept], b[kept]
+    nodes = np.unique(np.concatenate([a, b]))
+    return uniq[nodes], np.searchsorted(nodes, a), np.searchsorted(nodes, b)
 
 
 def segment_dedup_profile(

@@ -30,11 +30,11 @@ from sanctum_spark.operators.bpe import bpe_apply, bpe_train
 from sanctum_spark.operators.curation import pack_sequences
 from sanctum_spark.operators.dedup import (
     _let,
-    connected_components,
     cross_corpus_near_duplicates,
     drop_exact_duplicates,
     hashed_word_windows,
     incremental_exact_new,
+    near_duplicate_clusters,
     ngram_jaccard_pairs,
     segment_dedup_profile,
 )
@@ -537,20 +537,23 @@ def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pipeline runs between pair generation and keeper selection. "
         "At 100 TB the edge input is q74's banded MinHash pairs (the CC "
         "operator is edge-source-agnostic; exact Jaccard is the "
-        "oracle-able validation source used here). An edge list that "
-        "fits the broadcast threshold (threshold/16 B pairs; -1 turns "
-        "this off) is collected once and labelled exactly on the driver, "
-        "holding at most that many pairs; a larger one runs rounds, where "
-        "labels only decrease so SUM(label) is the convergence metric and "
-        "a localCheckpoint per round keeps the plan O(1) deep. Oracle is a "
-        "DuckDB recursive CTE computing the same min-reachable-id fixpoint."
+        "oracle-able validation source used here). A corpus whose "
+        "Catalyst size estimate fits the broadcast threshold (-1 turns "
+        "this off) is collected once as (doc_id, shingle hashes) and "
+        "clustered exactly on the driver, unless its candidate volume "
+        "(c(c-1)/2 summed over per-shingle document counts) exceeds "
+        "threshold/16 B pairs; a larger corpus runs the Spark pair plan "
+        "and connected-components rounds, where labels only decrease so "
+        "SUM(label) is the convergence metric and a localCheckpoint per "
+        "round keeps the plan O(1) deep. Cluster sizes are one window "
+        "count over the labels. Oracle is a DuckDB recursive CTE "
+        "computing the same min-reachable-id fixpoint."
     ),
 )
 def q99(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_scan(
-        load_table(spark, sf_dir, "documents"),
-        parquet_split_count(sf_dir, "documents"),
-    )
+    # the plain scan: near_duplicate_clusters fans it out (spread_scan)
+    # for its Spark plan only, so the driver path collects in one job
+    docs = load_table(spark, sf_dir, "documents")
     # prefix_filter="auto": this is CORPUS-GRAIN clustering, so the
     # candidate stage must survive corpus growth — measured octaves
     # (r7 paired A/B): naive 3.77x wall per doubling at sf0.2->0.4
@@ -563,20 +566,18 @@ def q99(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_count from parquet footers: the auto plan switch needs the
     # corpus cardinality, and footer metadata answers it with zero Spark
     # jobs (vs the count() fallback — a full extra corpus scan at 100 TB).
-    pairs = ngram_jaccard_pairs(
+    comp = near_duplicate_clusters(
         docs, "text", "doc_id", shingle_k=3, threshold=0.4, hashed=True,
         prefix_filter="auto",
         doc_count=parquet_row_count(sf_dir, "documents"),
     )
-    comp = connected_components(pairs, "id_a", "id_b")
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        comp.join(sizes, "component")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-            "cluster_size",
-        )
+    # cluster_size as a window count: one shuffle of the labels by
+    # component, where groupBy + join back took an aggregate, a broadcast
+    # and a join (4 jobs against 2 on the driver path's local labels)
+    return comp.select(
+        F.col("id").alias("doc_id"),
+        F.col("component").alias("cluster_id"),
+        F.count(F.lit(1)).over(W.partitionBy("component")).alias("cluster_size"),
     )
 
 
@@ -2136,33 +2137,32 @@ def q157(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "quality-aware canonicalization: near-dup clusters (q99's exact-"
-        "Jaccard connected components) each keep their HIGHEST-QUALITY "
-        "member (q125's logistic score, rank on the rounded score with "
-        "doc_id tiebreak), not the lowest id — the keeper-selection "
-        "policy real curation uses (best formatting survives, mirrors "
-        "die). Singletons are their own cluster and keeper. Scale shape: "
-        "adds one broadcast-able (doc, score) projection and a per-"
-        "cluster WindowGroupLimit rank on top of the existing CC "
-        "machinery; the quality score is a zero-shuffle scan expression."
+        "Jaccard connected components, clustered on the driver when the "
+        "corpus fits the broadcast threshold, as in q99) each keep their "
+        "HIGHEST-QUALITY member (q125's logistic score, rank on the "
+        "rounded score with doc_id tiebreak), not the lowest id — the "
+        "keeper-selection policy real curation uses (best formatting "
+        "survives, mirrors die). Singletons are their own cluster and "
+        "keeper. Scale shape: adds one broadcast-able (doc, score) "
+        "projection and a per-cluster WindowGroupLimit rank on top of the "
+        "near-duplicate cluster operator; the quality score is a "
+        "zero-shuffle scan expression."
     ),
 )
 def q158(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_scan(
-        load_table(spark, sf_dir, "documents"),
-        parquet_split_count(sf_dir, "documents"),
-    )
+    scan = load_table(spark, sf_dir, "documents")
+    docs = spread_scan(scan, parquet_split_count(sf_dir, "documents"))
     # prefix_filter="auto": corpus-grain candidate stage — same
     # cost-based rationale as q99 (naive 3.77x vs prefix 2.03x per
     # doubling at the third octave, r7 paired A/B; naive's lower fixed
     # cost wins below the measured 5k-10k-doc crossover)
     # doc_count from parquet footers — zero-job cardinality for the
     # auto plan switch (same rationale as q99)
-    pairs = ngram_jaccard_pairs(
-        docs, "text", "doc_id", shingle_k=3, threshold=0.4, hashed=True,
+    comp = near_duplicate_clusters(
+        scan, "text", "doc_id", shingle_k=3, threshold=0.4, hashed=True,
         prefix_filter="auto",
         doc_count=parquet_row_count(sf_dir, "documents"),
-    )
-    comp = connected_components(pairs, "id_a", "id_b").select(
+    ).select(
         F.col("id").alias("doc_id"), F.col("component").alias("comp_id")
     )
     scored = (

@@ -4,6 +4,8 @@ multimodal plumbing, text profiling determinism."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -602,6 +604,190 @@ def test_connected_components_small_graph_gate(spark):
     assert _cc_rows(over) == tabled_rows == want
     for df in (over, tabled):
         assert df.schema.simpleString() == small.schema.simpleString()
+
+
+def test_jaccard_edges_matches_relational_model():
+    """near_duplicate_clusters' driver-side pairs (``_jaccard_edges``)
+    against a nested-loop reading of the SQL oracle's relational
+    definition: intersections summed per (id_a < id_b) over every row
+    pair sharing a shingle, sizes joined per row, a zero denominator
+    never kept, a NULL id never paired.  Random small tables with NULL
+    and repeated ids and empty shingle sets, in long and string
+    shingles; the candidate cap returns None exactly when the volume
+    Σ c·(c−1)/2 exceeds it."""
+    from collections import Counter
+
+    import numpy as np
+    import pyarrow as pa
+
+    def model(rows, t):
+        valid = [(i, set(s)) for i, s in rows if i is not None]
+        inter = Counter()
+        for ia, sa in valid:
+            for ib, sb in valid:
+                if ia < ib:
+                    inter[ia, ib] += len(sa & sb)
+        return {
+            (ia, ib)
+            for (ia, ib), n in inter.items() if n
+            for ja, sa in valid if ja == ia
+            for jb, sb in valid if jb == ib
+            if len(sa) + len(sb) != n and n / (len(sa) + len(sb) - n) >= t
+        }
+
+    rng = np.random.default_rng(11)
+    for trial in range(300):
+        rows = [
+            (None if rng.random() < 0.1 else int(rng.integers(0, 8)),
+             sorted({int(v) for v in rng.integers(0, 10, int(rng.integers(0, 6)))}))
+            for _ in range(int(rng.integers(0, 12)))
+        ]
+        typ = pa.int64() if trial % 2 else pa.string()
+        tbl = pa.table({
+            "id": pa.array([i for i, _ in rows], pa.int64()),
+            "shingles": pa.array(
+                [s if trial % 2 else [str(v) for v in s] for _, s in rows],
+                pa.list_(typ),
+            ),
+        })
+        t = float(rng.choice([0.2, 0.4, 0.5, 1.0]))
+        nodes, u, v = D._jaccard_edges(tbl, t, 1 << 40)
+        assert {(int(nodes[a]), int(nodes[b])) for a, b in zip(u, v)} == model(rows, t), (rows, t)
+        c = Counter(x for i, s in rows if i is not None for x in s).values()
+        volume = sum(n * (n - 1) // 2 for n in c)
+        assert D._jaccard_edges(tbl, t, volume) is not None
+        if volume:
+            assert D._jaccard_edges(tbl, t, volume - 1) is None
+
+
+def _clusters_both_paths(spark, docs, **kw) -> list:
+    """``near_duplicate_clusters`` rows under the session's conf and
+    under threshold -1 (the Spark pair plan and connected components),
+    asserted identical in rows and schema."""
+    kw = {"shingle_k": 3, "threshold": 0.4, **kw}
+    local = D.near_duplicate_clusters(docs, "text", "doc_id", **kw)
+    with broadcast_threshold(spark, "-1"):
+        planned = D.near_duplicate_clusters(docs, "text", "doc_id", **kw)
+        assert planned.schema.simpleString() == local.schema.simpleString()
+        want = _cc_rows(planned)
+    assert _cc_rows(local) == want
+    return want
+
+
+def _queries_pass_on_both_paths(spark, d: str) -> None:
+    """q99 and q158 over the tables in ``d`` pass the oracle compare under
+    the session's conf and under threshold -1, with equal frames."""
+    from tools.verify_local import check_query, oracle_con, str_equal
+
+    con = oracle_con(d)
+    try:
+        for name in ("q99_dedup_clusters", "q158_quality_keeper"):
+            q = qreg.REGISTRY[name]
+            local, got = check_query(spark, d, q.fn, q.oracle, con)
+            with broadcast_threshold(spark, "-1"):
+                planned, ref = check_query(spark, d, q.fn, q.oracle, con)
+            assert local["err"] is None, (name, local["err"])
+            assert planned["err"] is None, (name, planned["err"])
+            assert str_equal(got, ref), name
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_near_duplicate_queries_equal_on_both_paths(spark, sf_dir, sf):
+    """q99 and q158 on the driver path (each test table fits the
+    session's broadcast threshold and candidate cap) and on the Spark
+    plan (threshold -1): both pass the oracle compare, with equal
+    frames."""
+    d = os.path.join(os.path.dirname(sf_dir), sf)
+    if not os.path.exists(os.path.join(d, "documents.parquet")):
+        pytest.skip(f"no {sf} tables")
+    _queries_pass_on_both_paths(spark, d)
+
+
+def test_near_duplicate_clusters_crafted_corpus(spark, sf_dir, tmp_path, docs_with_planted):
+    """The driver path equals the Spark plan, and q99/q158 pass the
+    oracle compare on both, over three catalogue fixtures stacked:
+    duplicate (400 documents on two texts: ~3 M candidates from hot
+    shingles, under the 64 MiB cap), null_keys (NULL doc_ids, one
+    doc_id on two rows) and degenerate (NULL, empty and whitespace
+    text).  null_keys repeats duplicate's doc 1 with its text plus one
+    word, and doc 3 gets a second row with NULL text: both give rows
+    whose Jaccard denominator is 0, NULL in the oracle and never kept.
+    The planted corpus is checked at the operator in both shingle
+    modes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.fixtures import from_columns, materialize
+
+    src = sf_dir
+    for name in ("duplicate", "null_keys", "degenerate"):
+        src = materialize(name, src, str(tmp_path / name))
+    path = os.path.join(src, "documents.parquet")
+    tbl = pq.read_table(path)
+    extra = from_columns(tbl.schema, {"doc_id": [3], "text": [None], "lang": ["en"]})
+    pq.write_table(pa.concat_tables([tbl, extra]), path)
+
+    _queries_pass_on_both_paths(spark, src)
+    docs = spark.read.parquet(path)
+    for hashed in (True, False):
+        rows = _clusters_both_paths(spark, docs, hashed=hashed)
+        assert {c for _, c in rows} >= {1, 2}  # the two hot clusters
+        assert None not in {i for i, _ in rows}  # a NULL id never pairs
+        planted = dict(_clusters_both_paths(spark, docs_with_planted, hashed=hashed))
+        assert planted[1_000_000] == planted[0] and planted[1_000_001] == planted[1]
+
+
+def test_q99_builder_runs_one_job(spark, sf_dir):
+    """q99's builder collects the shingles in one Spark job and clusters
+    on the driver: no pair plan, no connected-components loop."""
+    d = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.exists(os.path.join(d, "documents.parquet")):
+        pytest.skip("no sf0.01 tables")
+    q = qreg.REGISTRY["q99_dedup_clusters"]
+    q.fn(spark, d)  # the first read of a table infers its schema in a job
+    sc = spark.sparkContext
+    sc.setJobGroup("q99_builder_pin", "q99 builder job count")
+    try:
+        q.fn(spark, d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("q99_builder_pin")) <= 1
+
+
+def test_near_duplicate_clusters_candidate_cap_falls_back(spark, sf_dir, tmp_path):
+    """The size estimate passes but the candidate check does not: the
+    duplicate fixture's ~3 M candidates exceed a 1 MB threshold's cap
+    (65,536 pairs) while its few-KB file is under the threshold.  The
+    collected table is dropped, the Spark plan runs (more jobs) and the
+    clusters are unchanged."""
+    from tools.fixtures import materialize
+
+    d = materialize("duplicate", sf_dir, str(tmp_path / "duplicate"))
+    docs = spark.read.parquet(os.path.join(d, "documents.parquet"))
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, "near_duplicate_clusters cap pin")
+        try:
+            out = _cc_rows(fn())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def clusters():
+        return D.near_duplicate_clusters(docs, "text", "doc_id", threshold=0.4, hashed=True)
+
+    local, n_local = jobs_in("ndc_local", clusters)
+    with broadcast_threshold(spark, "1MB"):
+        size = docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        assert int(str(size)) <= 1 << 20
+        fallback, n_fallback = jobs_in("ndc_fallback", clusters)
+    assert fallback == local and len(local) == 400
+    assert n_fallback > n_local + 2, (n_local, n_fallback)
 
 
 def test_hashed_jaccard_pairs_match_string_pairs(spark, docs_with_planted):
@@ -1913,9 +2099,12 @@ def test_auto_plan_construction_runs_zero_jobs(spark, sf_dir):
     caller-supplied doc_count must fire NO Spark job: at 100 TB an eager
     count() at plan time is a full corpus scan before the real work
     (r8 verdict task 6's done-criterion, pinned).  The q99/q158 query
-    FUNCTIONS can't be probed whole — connected_components is iterative
-    and executes during construction by design — so the pin targets the
-    exact call they make (corpus_q.py q99 / q158)."""
+    FUNCTIONS can't be probed whole: their near_duplicate_clusters call
+    collects the shingles (one job) when the corpus fits the broadcast
+    threshold, and otherwise builds this pair plan and runs
+    connected_components, iterative and eager by design.  So the pin
+    targets the pair plan their Spark path builds (corpus_q.py q99 /
+    q158 through dedup.near_duplicate_clusters)."""
     from sanctum_spark.io import load_table, parquet_row_count
 
     docs = load_table(spark, sf_dir, "documents")

@@ -20,7 +20,9 @@ def test_paired_ab_alternates_and_checks_identity(spark):
     assert out["identical"] is True
     assert out["rows"] == {"old": 10, "new": 10}
     assert len(out["pairs"]) == 2
-    assert out["jobs"]["old"] > 0 and out["jobs"]["new"] > 0
+    # spark.range builds lazily: every job belongs to the count
+    assert out["build_jobs"] == {"old": 0, "new": 0}
+    assert out["action_jobs"]["old"] > 0 and out["action_jobs"]["new"] > 0
 
     off = perf.paired_ab(spark, side("old", 10), side("new", 11), pairs=2)
     assert off["identical"] is False

@@ -41,12 +41,12 @@ PYTHON_NODE_OK = {
 EXISTING_RDD_OK = {
     "q41_except_union": "tiny literal frame (createDataFrame of constants)",
     "q88_user_correlation": "eager localCheckpoint of the bounded 4-column pair table (prevents double-eval of the pairing aggregate)",
-    "q99_dedup_clusters": "iterative CC localCheckpoint (lineage cut, measured) once the edge list exceeds the broadcast threshold; smaller graphs come back as a LocalTableScan",
+    "q99_dedup_clusters": "iterative CC localCheckpoint (lineage cut, measured) when the corpus exceeds the broadcast threshold or its candidate cap; a corpus under both is clustered on the driver and comes back as a LocalTableScan",
     "q114_textrank_keywords": "power-iteration checkpoint batching (lineage cut)",
     "q142_cross_source_overlap": "eager localCheckpoint of the sources^2-bounded result to release the persisted source-set table",
     "q147_heavy_hitters": "eager localCheckpoint of the (heavy-token, cnt) result to release the persisted token table",
     "q150_psi_drift": "2-row period literal frame",
-    "q158_quality_keeper": "inherits connected_components' iterative localCheckpoint (same justification as q99)",
+    "q158_quality_keeper": "near_duplicate_clusters as in q99: the CC localCheckpoint above the broadcast threshold or candidate cap, a LocalTableScan below",
     "q161_entity_resolution": "inherits connected_components' iterative localCheckpoint (same justification as q99)",
     "q162_bm25_topk": "eager localCheckpoint of the k-row top-k result to release the persisted tf table (q142 pattern)",
 }
@@ -98,3 +98,17 @@ def test_whitelists_reference_real_queries():
     for wl in (PYTHON_NODE_OK, EXISTING_RDD_OK, BNLJ_OK):
         stale = set(wl) - set(qreg.REGISTRY)
         assert not stale, f"whitelist entries for unregistered queries: {stale}"
+
+
+def test_capture_plans_normalizes_session_counters(spark, sf_dir):
+    """Two builds of one query in one session print plans that differ
+    in session counters only (expression ids, lambda variable names):
+    ``tools/capture_plans.normalize`` makes them equal.  q91's shingle
+    lambdas carry both counters."""
+    from tools.capture_plans import normalize
+
+    fn = qreg.REGISTRY["q91_ngram_jaccard"].fn
+    a, b = (fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+            for _ in range(2))
+    assert a != b
+    assert normalize(a) == normalize(b)

@@ -7,7 +7,7 @@ it declares in ``Fixture.tables``; ``materialize`` copies the rest, so
 the result is a complete table directory every registered query can
 read.  Every table written keeps its source schema.
 
-The eight crafted fixtures (``CRAFTED``):
+The nine crafted fixtures (``CRAFTED``):
 
 - empty: zero-row copies of every table;
 - duplicate: 400 documents sharing two texts (80% one, 20% the other):
@@ -24,7 +24,10 @@ The eight crafted fixtures (``CRAFTED``):
   customer 80% of orders, one supplier 80% of lineitem;
 - degenerate: NULL / empty / whitespace text, NULL user_id, event_type
   and value, NULL and malformed JSON props, non-numeric, fractional,
-  quoted and negative ``$.k`` values.
+  quoted and negative ``$.k`` values;
+- null_keys: documents with a NULL doc_id (one repeating an existing
+  document's text, one with NULL text) and one doc_id held by a second
+  row whose text is a near-duplicate of its first.
 
 Beyond them: ``fuzz`` and ``fuzz2``, two seeded random star schemas
 (~4% NULLs in every nullable column, malformed or missing JSON props,
@@ -229,6 +232,21 @@ def degenerate(src: str, dst: str) -> None:
     })
 
 
+def null_keys(src: str, dst: str) -> None:
+    docs = pq.read_table(_path(src, "documents"))
+    texts = docs["text"].to_pylist()
+    i = next(k for k, t in enumerate(texts) if t and t.strip())
+    doc_id, text = docs["doc_id"][i].as_py(), texts[i]
+    near = text + " appended"
+    _append(src, dst, "documents", {
+        "doc_id": [None, None, doc_id],
+        "text": [text, None, near],
+        "lang": ["en", "en", "en"],
+        "source": ["s_null_id", "s_null_id", "s_repeat"],
+        "n_chars": [len(text), None, len(near)],
+    })
+
+
 WORDS = (
     "the fast key order sort table scan merge part window small hash join "
     "batch stream spell event topic state store shuffle broadcast filter "
@@ -392,7 +410,7 @@ def layout(src: str, dst: str) -> None:
 
 
 CRAFTED = ("empty", "duplicate", "embeddings", "relational_nulls",
-           "extreme", "unicode", "hotkey", "degenerate")
+           "extreme", "unicode", "hotkey", "degenerate", "null_keys")
 
 FIXTURES: dict[str, Fixture] = {
     "empty": Fixture(
@@ -426,6 +444,7 @@ FIXTURES: dict[str, Fixture] = {
         "test_documented_case_and_levenshtein_divergences"),
     "hotkey": Fixture(hotkey, ("events", "orders", "lineitem")),
     "degenerate": Fixture(degenerate, ("documents", "events")),
+    "null_keys": Fixture(null_keys, ("documents",)),
     "fuzz": Fixture(partial(fuzz, seed=20260815), TABLES),
     "fuzz2": Fixture(partial(fuzz, seed=20260816), TABLES),
     "layout": Fixture(layout, TABLES),

@@ -18,7 +18,11 @@ Protocol (``paired_ab``):
 2. Warm-up: one discarded run of each side.
 3. ``pairs`` rounds that alternate which side runs first, so host drift
    multiplies both sides of a round alike.  A run is build + ``count()``,
-   then ``clearCache()``; its Spark jobs are counted per job group.
+   then ``clearCache()``.  The builder's Spark jobs and the count's are
+   counted in two job groups, reported per side as the medians
+   ``build_jobs`` and ``action_jobs``: eager work inside a builder
+   (collects, checkpoints, driver loops) shows apart from the plan the
+   count executes.
 
 The reported ratio is the median of per-pair new/old seconds.
 """
@@ -62,20 +66,27 @@ def plan_signature(df) -> dict[str, int]:
     return sig
 
 
-def _run(spark, build: Callable) -> tuple[float, int]:
-    """Seconds for build + count() and the Spark jobs that launched."""
+def _run(spark, build: Callable) -> tuple[float, int, int]:
+    """Seconds for build + count(), and the Spark jobs the builder and
+    the count each launched."""
     sc = spark.sparkContext
     group = f"perf-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "tools/perf.py run")
     try:
+        sc.setJobGroup(f"{group}/build", "tools/perf.py build")
         t0 = time.perf_counter()
-        build().count()
+        df = build()
+        sc.setJobGroup(f"{group}/action", "tools/perf.py count")
+        df.count()
         dt = time.perf_counter() - t0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     spark.catalog.clearCache()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return dt, len(sc.statusTracker().getJobIdsForGroup(group))
+    build_jobs, action_jobs = (
+        len(sc.statusTracker().getJobIdsForGroup(f"{group}/{layer}"))
+        for layer in ("build", "action")
+    )
+    return dt, build_jobs, action_jobs
 
 
 def paired_ab(spark, old: Callable, new: Callable, pairs: int) -> dict:
@@ -90,12 +101,15 @@ def paired_ab(spark, old: Callable, new: Callable, pairs: int) -> dict:
     for build in sides.values():
         _run(spark, build)
     secs: list[dict[str, float]] = []
-    jobs: dict[str, list[int]] = {"old": [], "new": []}
+    jobs: dict[str, dict[str, list[int]]] = {
+        layer: {"old": [], "new": []} for layer in ("build_jobs", "action_jobs")
+    }
     for i in range(pairs):
         pair = {}
         for tag in ("old", "new") if i % 2 == 0 else ("new", "old"):
-            pair[tag], n_jobs = _run(spark, sides[tag])
-            jobs[tag].append(n_jobs)
+            pair[tag], n_build, n_action = _run(spark, sides[tag])
+            jobs["build_jobs"][tag].append(n_build)
+            jobs["action_jobs"][tag].append(n_action)
         secs.append(pair)
     ratios = [p["new"] / p["old"] for p in secs]
     return {
@@ -106,7 +120,8 @@ def paired_ab(spark, old: Callable, new: Callable, pairs: int) -> dict:
         "identical": str_equal(frames["old"], frames["new"]),
         "rows": {tag: len(f) for tag, f in frames.items()},
         "plan": plans,
-        "jobs": {tag: statistics.median_low(js) for tag, js in jobs.items()},
+        **{layer: {tag: statistics.median_low(js) for tag, js in by_tag.items()}
+           for layer, by_tag in jobs.items()},
     }
 
 
